@@ -3,13 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line for the driver. Session mirrors the target
-  * deployment shape — 32 threads, 32 shuffle partitions, AQE on.
+  * prints the times as one JSON line. Session shape: one thread and one
+  * shuffle partition per available processor (`SPARK_GRAFT_CPUS`
+  * overrides), AQE on.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -61,7 +61,8 @@ object StoreFilesProbe {
       .split(",").toSeq.map(_.trim.toInt)
     val maintained = sys.env.get("SPARK_GRAFT_MAINTAINED").contains("1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val filesPerCommit = 50
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -38,7 +38,8 @@ final case class SourceBatchResult(
   * The reference iterates servers strictly sequentially; each server's
   * pipeline is already fully distributed here, and independent servers
   * can safely run from concurrent driver threads because appends target
-  * the same idempotent store.
+  * the same idempotent store through its optimistic commit protocol
+  * ([[ConsolidatedStore.append]]).
   */
 object EtlRunner {
 
@@ -48,28 +49,30 @@ object EtlRunner {
 
   /** @param parallelism >1 runs that many source extracts concurrently
     *   from driver threads (each pipeline is already fully distributed;
-    *   concurrency overlaps source I/O). By default loads are
-    *   serialized — the store append is read-modify-append.
-    * @param concurrentLoads overlap the LOAD phase too: each server's
-    *   append goes through [[ConsolidatedStore.appendConcurrent]] (the
-    *   optimistic commit protocol arbitrates interleavings; a lost
-    *   version claim redoes the dedup against the winner's state), and
-    *   watermark advances run unlocked — [[WatermarkStore.advance]] is a
-    *   per-server max-merge CRDT append, safe under arbitrary
-    *   interleaving within and across JVMs (WatermarkConcurrencySpec).
-    *   With a fleet of hundreds of sources this removes the one
-    *   remaining sequential stage of the driver loop. Note the
-    *   per-server appended COUNTS become schedule-dependent when sources
-    *   overlap (whoever commits first owns the shared keys); the stored
-    *   set, LogID uniqueness, and watermark advancement do not.
-    *   [[WatermarkStore.write]] (the whole-table reset) is an OPERATOR
-    *   action for initialization/rewinds and is deliberately never
-    *   called from this runner — resets must not race a live fleet.
-    *   Cross-JVM note: two RUNNERS overlapping on one store (cron
-    *   overlap, operator + schedule) need `concurrentLoads = true` as
-    *   well — the serialized append's version claim makes the second
-    *   writer's load ABORT loudly (never corrupt); only the optimistic
-    *   path lets both land.
+    *   concurrency overlaps source I/O). By default loads run one after
+    *   another, in server order.
+    * @param concurrentLoads overlap the LOAD phase too, `parallelism`
+    *   loads at a time, and report a failed load on its server's result
+    *   instead of aborting the run. Every load is the same
+    *   [[ConsolidatedStore.append]] either way: its optimistic commit
+    *   protocol arbitrates interleavings (a lost version claim redoes
+    *   the dedup against the winner's state), and watermark advances
+    *   run unlocked — [[WatermarkStore.advance]] is a per-server
+    *   max-merge CRDT append, safe under arbitrary interleaving within
+    *   and across JVMs (WatermarkConcurrencySpec). With a fleet of
+    *   hundreds of sources this removes the one remaining sequential
+    *   stage of the driver loop. Note the per-server appended COUNTS
+    *   become schedule-dependent when sources overlap (whoever commits
+    *   first owns the shared keys); the stored set, LogID uniqueness,
+    *   and watermark advancement do not. [[WatermarkStore.write]] (the
+    *   whole-table reset) is an OPERATOR action for
+    *   initialization/rewinds and is deliberately never called from
+    *   this runner — resets must not race a live fleet. Two RUNNERS
+    *   overlapping on one store (cron overlap, operator + schedule)
+    *   both land whatever this flag says. The exception is a foreign
+    *   (non-hive) store layout: it has no commit log, its whole-table
+    *   append is single-writer, and overlapping loads on it are
+    *   unsupported.
     * @param maintenance when set, the runner ends each cycle that landed
     *   rows with [[graft.maintenance.StoreMaintenance.runIfDue]] — the
     *   steady-state small-file fold a trickle fleet needs to keep the
@@ -288,10 +291,10 @@ object EtlRunner {
       }
 
     // phase 2: load then advance, per server. Failures here abort the
-    // whole run (Add-BackupHistoryToTarget.ps1:104-113). Serialized by
-    // default; `concurrentLoads` overlaps the appends through the
-    // optimistic commit protocol; watermark advances need no lock (the
-    // control table is a per-server max-merge CRDT).
+    // whole run (Add-BackupHistoryToTarget.ps1:104-113). One at a time
+    // by default; `concurrentLoads` overlaps them — the append's commit
+    // protocol arbitrates either way, and watermark advances need no
+    // lock (the control table is a per-server max-merge CRDT).
     def loadOne(server: String, e: Either[String, SharedBatch])
         : SourceBatchResult = e match {
       case Left(err) =>
@@ -307,15 +310,10 @@ object EtlRunner {
             val newWm = sb.wm.get
             // the store-independent preamble (dedup + envelopes) is
             // shared across sharers of this batch, across this server's
-            // own retries, and — on the concurrent path — across every
-            // optimistic attempt of the version-claim loop
-            val appended =
-              if (concurrentLoads)
-                ConsolidatedStore.appendConcurrentPrepared(spark,
-                  consolidatedPath, sb.prepared)
-              else
-                ConsolidatedStore.appendPrepared(spark, consolidatedPath,
-                  sb.prepared)
+            // own retries, and across every optimistic attempt of the
+            // version-claim loop
+            val appended = ConsolidatedStore.appendPrepared(spark,
+              consolidatedPath, sb.prepared)
             WatermarkStore.advance(spark, watermarkPath, server, newWm)
             SourceBatchResult(server, n, appended, Some(newWm), None)
           }
@@ -325,7 +323,7 @@ object EtlRunner {
           // contention signal) rethrow through Await and abort every
           // sibling's in-flight load. The watermark was not advanced, so
           // the next run re-extracts this batch and the idempotent
-          // dedup absorbs it. The serialized path keeps the reference's
+          // dedup absorbs it. Sequential loads keep the reference's
           // abort-the-run semantics (Add-BackupHistoryToTarget.ps1:104-113).
           case scala.util.control.NonFatal(e) if concurrentLoads =>
             SourceBatchResult(server, n, 0, None,

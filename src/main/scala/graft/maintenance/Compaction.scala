@@ -265,9 +265,7 @@ object Compaction {
     // deleted un-archived originals after the promote, so a crash in
     // that window left durable duplicate rows — and a rerun bin-packed
     // the duplicates again (content-agnostic), compounding them
-    if (first)
-      StoreLog.commit(spark, path, "baseline", adds = all.sorted,
-        removes = Nil)
+    StoreLog.baselineIfUnlogged(spark, path)
     val v = StoreLog.currentVersion(spark, path) + 1
     StoreLog.archive(spark, path, v,
       small.map(f => (new Path(s"$path/$f"), f)))

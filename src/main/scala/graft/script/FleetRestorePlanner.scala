@@ -147,13 +147,15 @@ object FleetRestorePlanner {
       .join(broadcast(baseLsn), groupKeys)
       .filter(col("last_lsn") > col("base_lsn"))
     val inRange = logs.filter(col("backup_start_date") <= lit(restoreTo))
+    // every row of the first log backup SET after restoreTo (the scalar
+    // planner's rule): rank, not row_number, keeps all of its stripes
     val overlap = logs
       .filter(col("backup_start_date") > lit(restoreTo))
-      .withColumn("__rn", row_number().over(
+      .withColumn("__rk", rank().over(
         Window.partitionBy(gk: _*)
-          .orderBy(col("backup_start_date"), col("last_lsn"), col("LogID"))))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+          .orderBy(col("backup_start_date"), col("last_lsn"), col("first_lsn"))))
+      .filter(col("__rk") === 1)
+      .drop("__rk")
     // max(backup_start_date) matches collapseLogStripes, which the
     // scalar log phase reads its start dates from
     val logSets = inRange.union(overlap).dropDuplicates("LogID")

@@ -3,6 +3,7 @@ package graft.script
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.{BackupTypes, DeviceTypes, RestoreStep, Schemas}
@@ -214,14 +215,21 @@ object RestoreScriptGenerator {
       .filter(col("BackupType") === BackupTypes.Log)
       .filter(col("last_lsn") > lit(baseLsn))
       .filter(col("backup_start_date") <= lit(restoreTo))
-    // first log AFTER the restore time (U1/O7, sql:1056-1065) — the
-    // reference's TOP(1) has no ORDER BY; we impose (start, lsn, id)
+    // first log backup AFTER the restore time (U1/O7, sql:1056-1065) —
+    // the reference's TOP(1) has no ORDER BY; we impose (start, last
+    // lsn, first lsn) and keep every row of that first backup SET (rank,
+    // not a row limit), so a striped overlap log restores from all of
+    // its media. The slice is one database, so the window is one group:
+    // coalesced to one partition, it needs no exchange
     val overlapLog = slice
       .filter(col("BackupType") === BackupTypes.Log)
       .filter(col("last_lsn") > lit(baseLsn))
       .filter(col("backup_start_date") > lit(restoreTo))
-      .orderBy(col("backup_start_date"), col("last_lsn"), col("LogID"))
-      .limit(1)
+      .coalesce(1)
+      .withColumn("__rk", rank().over(Window.partitionBy("database_name")
+        .orderBy(col("backup_start_date"), col("last_lsn"), col("first_lsn"))))
+      .filter(col("__rk") === 1)
+      .drop("__rk")
     val chain = RestoreQueries
       .collapseLogStripes(logsInRange.union(overlapLog).dropDuplicates("LogID"))
       .orderBy(col("last_lsn"))

@@ -144,6 +144,15 @@ object ConsolidatedStore {
   /** Idempotent append: dedup against the table, assign LogIDs, append.
     * Returns the number of rows actually written.
     *
+    * Every writer takes the one optimistic claim loop ([[claimLoop]]): a
+    * lone writer is an optimistic commit that never loses its claim, and
+    * overlapping appenders (threads, runners, JVMs) all land. Beyond
+    * [[appendConcurrent]], this entry takes the two single-writer steps:
+    * a store whose data predates the log is baselined on its first
+    * append ([[StoreLog.baselineIfUnlogged]]), and a foreign (non-hive)
+    * layout, which has neither zone maps nor a log, keeps the
+    * whole-table [[appendFullScan]].
+    *
     * @param partitionBy optional physical layout columns — the Spark
     *   analog of the reference's covering indexes (sql:35-39): partition
     *   by `database_name` keeps every restore query's scan pruned to one
@@ -160,31 +169,32 @@ object ConsolidatedStore {
     *   sort keys let every LSN range predicate (P5, the hottest restore
     *   filter) skip row groups, not just directories. A local sort only —
     *   no extra shuffle on the write path.
-    * @param foldEvery sidecar segment-count threshold past which the
-    *   append folds the segment log into one rewrite (see
-    *   [[StoreMeta.SegmentFoldThreshold]]).
     */
   def append(spark: SparkSession, path: String, incoming: DataFrame,
       partitionBy: Seq[String] = Nil,
-      sortWithin: Seq[String] = Seq("database_name", "last_lsn"),
-      foldEvery: Int = StoreMeta.SegmentFoldThreshold): Long = {
-    StoreMeta.load(spark, path) match {
-      case Some(loaded) =>
-        appendPruned(spark, path, incoming, partitionBy, sortWithin,
-          awaitCommittedCoverage(spark, path, loaded), foldEvery)
-      case None => appendFullScan(spark, path, incoming, partitionBy, sortWithin)
-    }
-  }
+      sortWithin: Seq[String] = Seq("database_name", "last_lsn")): Long =
+    withPrepared(incoming)(appendPrepared(spark, path, _, partitionBy, sortWithin))
 
   /** A batch's store-independent append preamble, computed once and
     * reusable across appends of the SAME batch to any store state: the
     * key-deduped rows (checkpointed — the dedup shuffle never re-runs)
     * and their per-database envelopes. The duplicate-delivery shape:
     * one extract delivered under several server names, or a batch
-    * retried after a failed load, pays this once.
+    * retried after a failed load, pays this once — and every attempt of
+    * the claim loop reuses it, so a lost version race re-runs only the
+    * anti-join against the winner's overlap set.
     */
   private[graft] final case class PreparedBatch(
       deduped: DataFrame, envelopes: Seq[KeyRanges])
+
+  /** Run `f` on `incoming`'s prepared batch, its deduped rows cached for
+    * the call.
+    */
+  private def withPrepared[T](incoming: DataFrame)(f: PreparedBatch => T): T = {
+    val deduped = incoming.dropDuplicates(dedupKey).cache()
+    try f(PreparedBatch(deduped, batchEnvelopes(deduped)))
+    finally deduped.unpersist()
+  }
 
   /** [[append]] on a prepared batch — skips the per-call dedup shuffle
     * and envelope collect. The caller owns `deduped`'s cache/checkpoint
@@ -193,51 +203,48 @@ object ConsolidatedStore {
   private[graft] def appendPrepared(spark: SparkSession, path: String,
       prep: PreparedBatch,
       partitionBy: Seq[String] = Nil,
-      sortWithin: Seq[String] = Seq("database_name", "last_lsn"),
-      foldEvery: Int = StoreMeta.SegmentFoldThreshold): Long = {
-    StoreMeta.load(spark, path) match {
-      case Some(loaded) =>
-        appendPrunedPrepared(spark, path, prep.deduped, prep.envelopes,
-          partitionBy, sortWithin,
-          awaitCommittedCoverage(spark, path, loaded), foldEvery)
-      case None =>
-        appendFullScanPrepared(spark, path, prep.deduped, partitionBy,
-          sortWithin)
-    }
-  }
+      sortWithin: Seq[String] = Seq("database_name", "last_lsn")): Long =
+    claimLoop(spark, path, prep, partitionBy, sortWithin, DefaultMaxAttempts,
+      singleWriter = true, _ => ())((_, _) => ())
 
-  /** Wait out a racing CoW replacer's archive→promote→commit window
-    * before an append trusts its loaded stats. [[StoreMeta.load]] heals
-    * everything the DIRECTORY holds, so a committed-live file absent
-    * from the healed stats is physically missing from the root — a
-    * replacer has archived it and not yet committed (its swap is
-    * mid-flight). Proceeding on such stats is silent corruption, not a
-    * crash: the dedup anti-join sees no overlapping files and the LogID
-    * base folds over an empty set, so duplicate keys and colliding ids
-    * would be committed with no error. The window is driver-side
-    * metadata renames (milliseconds); a state that persists past the
-    * wait is a dead replacer — fail loudly and point at repair.
+  /** [[append]] without the single-writer steps, for callers that cannot
+    * rule out a concurrent writer: it refuses a store whose data predates
+    * the log (take one [[append]] first) and a foreign layout (no log to
+    * arbitrate writers). Concurrent bootstrap of an EMPTY store is safe —
+    * the version-1 claim is the arbiter.
     */
-  private[store] def awaitCommittedCoverage(spark: SparkSession, path: String,
-      loaded0: StoreMeta.Loaded): StoreMeta.Loaded = {
-    var loaded = loaded0
-    var polls = 0
-    while ({
-      val live = StoreLog.committedLiveSet(spark, path)
-      val have = loaded.files.map(_.file).toSet
-      live.exists(l => !l.subsetOf(have))
-    }) {
-      polls += 1
-      if (polls > 150)
-        throw new StoreLog.ConcurrentCommitException(
-          s"append on $path: committed-live files are missing from the " +
-            "directory and no replacing commit landed — a copy-on-write " +
-            "writer died mid-swap; run StoreRepair.repair")
-      Thread.sleep(20L)
-      loaded = StoreMeta.load(spark, path).getOrElse(loaded)
-    }
-    loaded
-  }
+  def appendConcurrent(spark: SparkSession, path: String, incoming: DataFrame,
+      sortWithin: Seq[String] = Seq("database_name", "last_lsn"),
+      maxAttempts: Int = DefaultMaxAttempts,
+      partitionBy: Seq[String] = Nil): Long =
+    appendConcurrentHooked(spark, path, incoming, sortWithin, maxAttempts,
+      partitionBy)((_, _) => ())
+
+  /** [[appendConcurrent]] with test seams: `onAttempt(attempt)` fires as
+    * each optimistic attempt starts, and `beforeCommit(attempt, v0)` runs
+    * after the batch files are published but before the version claim —
+    * exactly the window a racing writer can win in. The concurrency spec
+    * injects a competing commit there to drive the redo path
+    * deterministically.
+    */
+  private[graft] def appendConcurrentHooked(
+      spark: SparkSession, path: String, incoming: DataFrame,
+      sortWithin: Seq[String], maxAttempts: Int,
+      partitionBy: Seq[String] = Nil,
+      onAttempt: Int => Unit = _ => ())(
+      beforeCommit: (Int, Int) => Unit): Long =
+    withPrepared(incoming)(claimLoop(spark, path, _, partitionBy, sortWithin,
+      maxAttempts, singleWriter = false, onAttempt)(beforeCommit))
+
+  /** Version claims an append may lose before it gives up. */
+  private val DefaultMaxAttempts = 8
+
+  /** 20 ms polls [[committedState]] waits for a bootstrapping writer's
+    * version-1 claim (2 s) and for a replacer's swap to commit (3 s) —
+    * each a single small metadata write on the other writer's side.
+    */
+  private val BootstrapPolls = 100
+  private val CoveragePolls = 150
 
   /** Per-`database_name` key envelopes of a deduped batch — driver-small
     * (one row per database present in the batch). Package-visible for
@@ -358,6 +365,15 @@ object ConsolidatedStore {
     }
   }
 
+  /** `xxhash64(physical_device_name)` (Spark's seed 42) of one device
+    * name, computed on the driver — the value the sidecar's per-file
+    * device-hash sets hold, without a Spark job per lookup.
+    */
+  private[graft] def deviceHash(device: String): Long =
+    org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(device),
+      org.apache.spark.sql.types.StringType, 42L)
+
   /** Device point lookup ("which backups landed on this device" — the
     * fleet-ops question behind the reference's media-recovery paths):
     * reads ONLY files whose sidecar device-hash set contains the probe
@@ -373,9 +389,7 @@ object ConsolidatedStore {
     StoreMeta.load(spark, path) match {
       case None => read(spark, path).filter(probe)
       case Some(loaded) =>
-        val h =
-          if (device == null) 0L
-          else spark.range(1).select(xxhash64(lit(device))).head().getLong(0)
+        val h = if (device == null) 0L else deviceHash(device)
         val files = loaded.files.filter { f =>
           if (device == null) f.devNullCount != 0
           else if (f.devHashes != null) f.devHashes.contains(h)
@@ -395,419 +409,256 @@ object ConsolidatedStore {
     }
   }
 
-  /** O(batch + overlap) append: the anti-join's existing side is pruned
-    * by [[StoreMeta]]'s per-file zone maps to files whose dedup-key
-    * ranges can intersect the batch's per-database envelopes, and the
-    * LogID base comes from the sidecar instead of a whole-table
-    * aggregate. A trickle append onto a huge store touches only the few
-    * files sharing its (database, LSN) windows — the reference's unique
-    * index (sql:33) behaving like an index. Sidecar maintenance is one
-    * O(batch) delta segment per clean append; a full fold only on drift
-    * or past the segment threshold.
+  /** The one append protocol; every entry above is a thin shell over it.
+    * Per attempt, on a batch whose preamble is already paid:
     *
-    * Appends to one store are assumed serialized (as in [[graft.etl.EtlRunner]],
-    * which serializes its load phase) — same contract the read-modify-
-    * append full-scan path already had.
-    */
-  private[graft] def appendPruned(
-      spark: SparkSession, path: String, incoming: DataFrame,
-      partitionBy: Seq[String], sortWithin: Seq[String],
-      loaded: StoreMeta.Loaded, foldEvery: Int): Long = {
-    val deduped = incoming.dropDuplicates(dedupKey).cache()
-    try
-      appendPrunedPrepared(spark, path, deduped, batchEnvelopes(deduped),
-        partitionBy, sortWithin, loaded, foldEvery)
-    finally deduped.unpersist()
-  }
-
-  /** [[appendPruned]] on a batch whose dedup + envelopes were computed
-    * by the caller — the duplicate-delivery fast path: both are
-    * store-independent, so a batch delivered under several server names
-    * (or retried) pays the dedup shuffle and the envelope collect ONCE
-    * and every append reuses them. The caller owns `deduped`'s
-    * cache/checkpoint lifecycle.
-    */
-  private[graft] def appendPrunedPrepared(
-      spark: SparkSession, path: String, deduped: DataFrame,
-      envelopes: Seq[KeyRanges],
-      partitionBy: Seq[String], sortWithin: Seq[String],
-      loaded: StoreMeta.Loaded, foldEvery: Int): Long = {
-    def foldIfDirty(): Unit = {
-      if (loaded.dirty) StoreMeta.save(spark, path, loaded.files)
-    }
-    {
-      if (envelopes.isEmpty) { foldIfDirty(); return 0L }
-      val overlapping = loaded.files
-        .filter(f => envelopes.exists(b => StoreMeta.overlaps(f, b)))
-      def antiJoined(): DataFrame = {
-        val existingKeys = spark.read
-          .option("basePath", path)
-          .schema(Schemas.consolidated)
-          .parquet(overlapping.map(f => s"$path/${f.file}"): _*)
-          .select(dedupKey.map(col): _*)
-          .alias("ex")
-        deduped.alias("in")
-          .join(existingKeys, keyCondition("in", "ex"), "left_anti")
-      }
-      // fused single-action trickle append (r16): the deduped batch row
-      // count (an UPPER bound on the post-anti-join fresh rows — dedup
-      // and anti-join only shrink) rides the envelope collect, and when
-      // it sits under the bootstrap boundary the write regime is
-      // decided without knowing n exactly — both bounds land in the
-      // one-compact-file regime. The fresh count and the new file's
-      // zone-map stats are then observed DURING the staged write
-      // (CollectMetrics — exactly-once per action), so a trickle append
-      // runs ONE batch-touching Spark action (the write) instead of
-      // three (count, write, stats rescan): measured ~2x fewer jobs per
-      // trickle cycle on the q155/q64 lifecycles. Hive layouts keep the
-      // scan path (a task writes one file per partition VALUE there, so
-      // per-file stats need the rescan), and bootstrap-sized batches
-      // keep the exact count (the fan-out file count ⌈n/32768⌉ is
-      // spec-pinned on n, not on the upper bound).
-      val est =
-        if (envelopes.exists(_.rows < 0L)) -1L else envelopes.map(_.rows).sum
-      if (partitionBy.isEmpty && est >= 0L && est < BootstrapSplitRows) {
-        val fresh = if (overlapping.isEmpty) deduped else antiJoined()
-        val assigned = withLogIdsFrom(loaded.maxLogId, fresh, batchRows = est)
-        val laidOut =
-          if (sortWithin.isEmpty) assigned
-          else assigned.sortWithinPartitions(sortWithin.map(col): _*)
-        val (obs, observed) = appendObservation(laidOut)
-        val before = loaded.files.map(_.file).toSet
-        val (stageDir, mine) = Staging.stage(spark, path, observed, Nil)
-        val m = obs.get
-        val n = m("n").asInstanceOf[Long]
-        if (n == 0L) {
-          // nothing fresh: drop the zero-row staged file wholesale —
-          // observable state identical to the counted path's early exit
-          Staging.abandon(spark, stageDir)
-          foldIfDirty()
-          return 0L
-        }
-        val newFiles = Staging.promote(spark, path, stageDir, mine)
-        StoreLog.commitAppend(spark, path, newFiles,
-          before.toSeq.sorted ++ newFiles)
-        try {
-          val newStats =
-            if (newFiles.size == 1) Seq(observedStats(m, newFiles.head))
-            else StoreMeta.scanStats(spark, path, newFiles)
-          if (loaded.dirty || loaded.segments + 1 > foldEvery)
-            StoreMeta.save(spark, path, loaded.files ++ newStats)
-          else StoreMeta.saveDelta(spark, path, newStats)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            log.warn(s"post-commit sidecar update failed on $path " +
-              "(cache only — next load() heals): " + e)
-        }
-        return n
-      }
-      // no overlapping files → every deduped row is fresh; reuse the
-      // already-cached batch instead of stacking a second cache on it
-      val fresh =
-        if (overlapping.isEmpty) deduped
-        else antiJoined().cache()
-      try {
-        val n = fresh.count()
-        if (n > 0) {
-          val before = loaded.files.map(_.file).toSet
-          val assigned = withLogIdsFrom(loaded.maxLogId, fresh, batchRows = n)
-          val laidOut =
-            if (sortWithin.isEmpty) assigned
-            else assigned.sortWithinPartitions(sortWithin.map(col): _*)
-          // staged publish for EXACT ownership of the new file names — a
-          // before/after listing diff would absorb a concurrent CoW
-          // maintenance commit's just-promoted files into THIS commit's
-          // adds, and the maintenance writer's abort path would then
-          // delete files this commit lists as live (phantom adds)
-          val newFiles = Staging.publish(spark, path, laidOut, partitionBy)
-          // one O(batch) commit record enables snapshot reads (StoreLog);
-          // a pre-log store baselines itself on this first commit. The
-          // commit lands BEFORE the sidecar write: the sidecar is a pure
-          // cache, so a failure past this point degrades to a warning +
-          // one heal scan on the next load(), never a thrown append
-          // whose data already landed
-          StoreLog.commitAppend(spark, path, newFiles,
-            before.toSeq.sorted ++ newFiles)
-          try {
-            val newStats = StoreMeta.scanStats(spark, path, newFiles)
-            if (loaded.dirty || loaded.segments + 1 > foldEvery)
-              StoreMeta.save(spark, path, loaded.files ++ newStats)
-            else StoreMeta.saveDelta(spark, path, newStats)
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              log.warn(s"post-commit sidecar update failed on $path " +
-                "(cache only — next load() heals): " + e)
-          }
-        } else foldIfDirty()
-        n
-      } finally if (fresh ne deduped) fresh.unpersist()
-    }
-  }
-
-  /** Multi-writer idempotent append under OPTIMISTIC CONCURRENCY — the
-    * entry point for two simultaneous appenders sharing one store (the
-    * serialized-writer [[append]] stays the ETL runner's path).
-    *
-    * Protocol, per attempt:
-    *
-    *   1. read the COMMITTED state: live files from the log replay at
-    *      the observed version v0 (a racing writer's uncommitted files
-    *      are invisible — dedup and LogID assignment never consume
-    *      phantoms), stats from the sidecar;
+    *   1. read the COMMITTED state ([[committedState]]): the head version
+    *      v0 and its live files from one log listing (a racing writer's
+    *      uncommitted files are invisible — dedup and LogID assignment
+    *      never consume phantoms), their zone-map stats from the sidecar;
     *   2. anti-join the batch against the envelope-overlapping live
     *      files, assign LogIDs from the committed max;
     *   3. write the batch files into a `_graft_staging/<uuid>` dir
     *      (invisible to scans), move them into the root — exact
     *      ownership of the new file names, no listing diffs;
     *   4. claim version v0+1 via [[StoreLog.tryCommit]]'s atomic
-    *      create-no-overwrite. Win → one sidecar delta segment, done.
-    *      Loss → delete own files and REDO from step 1 against the new
-    *      state (appends are commutative but not blind: the redo re-runs
-    *      the dedup and re-bases the LogIDs, which is what keeps "no
-    *      lost rows + unique LogIDs" under interleaving; O(batch) per
-    *      retry).
+    *      create-no-overwrite. Win → update the sidecar, done. Loss →
+    *      delete own files and REDO from step 1 against the new state
+    *      (appends are commutative but not blind: the redo re-runs the
+    *      dedup and re-bases the LogIDs, which is what keeps "no lost
+    *      rows + unique LogIDs" under interleaving; O(batch) per retry).
+    *
+    * A racing copy-on-write commit (merge/delete/compaction) that
+    * archives a file between step 1 and the read is not a failure
+    * either: the attempt is redone against the racer's committed state,
+    * exactly as a lost claim is.
     *
     * Readers that list the directory can observe a writer's files during
-    * its step-3→4 window — the same window the serialized path has; a
-    * crash there leaves uncommitted orphans that [[StoreRepair.repair]]
-    * reconciles. Bootstrap (very first commit) of a store that already
-    * holds UNLOGGED data is single-writer: take one serialized [[append]]
-    * first; concurrent bootstrap of an EMPTY store is safe (the v1 claim
-    * is the arbiter).
+    * its step-3→4 window; a crash there leaves uncommitted orphans that
+    * [[StoreRepair.repair]] reconciles.
+    *
+    * @param singleWriter take the single-writer steps — baseline a store
+    *   whose data predates the log, full-scan a foreign layout — instead
+    *   of refusing them
     */
-  def appendConcurrent(spark: SparkSession, path: String, incoming: DataFrame,
-      sortWithin: Seq[String] = Seq("database_name", "last_lsn"),
-      maxAttempts: Int = 8,
-      partitionBy: Seq[String] = Nil): Long =
-    appendConcurrentHooked(spark, path, incoming, sortWithin, maxAttempts,
-      partitionBy)((_, _) => ())
-
-  /** [[appendConcurrent]] with a test seam: `beforeCommit(attempt, v0)`
-    * runs after the batch files are published but before the version
-    * claim — exactly the window a racing writer can win in. The
-    * concurrency spec injects a competing commit there to drive the
-    * redo path deterministically.
-    */
-  private[graft] def appendConcurrentHooked(
-      spark: SparkSession, path: String, incoming: DataFrame,
-      sortWithin: Seq[String], maxAttempts: Int,
-      partitionBy: Seq[String] = Nil,
-      onAttempt: Int => Unit = _ => ())(
-      beforeCommit: (Int, Int) => Unit): Long = {
-    val deduped = incoming.dropDuplicates(dedupKey).cache()
-    try appendConcurrentLoop(spark, path,
-      PreparedBatch(deduped, batchEnvelopes(deduped)),
-      sortWithin, maxAttempts, partitionBy, onAttempt)(beforeCommit)
-    finally deduped.unpersist()
-  }
-
-  /** [[appendConcurrent]] on a prepared batch: the dedup shuffle and
-    * envelope collect were already paid ONCE for this batch (see
-    * [[PreparedBatch]]) and are store-independent, so every optimistic
-    * attempt here reuses them — a lost version race re-runs only the
-    * anti-join against the winner's overlap set, never the preamble.
-    * The fleet-concurrent ETL load path hands the extract-fused batch
-    * straight through. Caller owns `deduped`'s cache/checkpoint
-    * lifecycle.
-    */
-  private[graft] def appendConcurrentPrepared(
+  private def claimLoop(
       spark: SparkSession, path: String, prep: PreparedBatch,
-      sortWithin: Seq[String] = Seq("database_name", "last_lsn"),
-      maxAttempts: Int = 8,
-      partitionBy: Seq[String] = Nil,
-      onAttempt: Int => Unit = _ => ()): Long =
-    appendConcurrentLoop(spark, path, prep, sortWithin, maxAttempts,
-      partitionBy, onAttempt)((_, _) => ())
-
-  /** The optimistic claim loop shared by [[appendConcurrentHooked]] and
-    * [[appendConcurrentPrepared]] — everything from version read to
-    * commit, on a batch whose preamble is already paid.
-    */
-  private def appendConcurrentLoop(
-      spark: SparkSession, path: String, prep: PreparedBatch,
-      sortWithin: Seq[String], maxAttempts: Int,
-      partitionBy: Seq[String],
-      onAttempt: Int => Unit)(
+      partitionBy: Seq[String], sortWithin: Seq[String], maxAttempts: Int,
+      singleWriter: Boolean, onAttempt: Int => Unit)(
       beforeCommit: (Int, Int) => Unit): Long = {
-    val deduped = prep.deduped
-    val envelopes = prep.envelopes
-    if (envelopes.isEmpty) return 0L
-    locally {
-      var attempt = 0
-      while (true) {
-        attempt += 1
-        if (attempt > maxAttempts)
-          throw new StoreLog.ConcurrentCommitException(
-            s"append on $path lost $maxAttempts version races; reduce " +
-              "writer contention or raise maxAttempts")
-        // attempt accounting fires at the LOOP TOP: attempts that abort
-        // before publish (fileVanished redo, empty-fresh early return)
-        // never reach the beforeCommit seam, so counting there
-        // undercounts redone work under CoW interference
-        onAttempt(attempt)
-        var v0 = StoreLog.currentVersion(spark, path)
-        if (v0 == 0) {
-          // files present at version 0 are EITHER a truly unlogged store
-          // (single-writer bootstrap required — committing would orphan
-          // the pre-existing data) OR a concurrent bootstrapper inside
-          // its publish→claim window. Distinguish by waiting: a live
-          // racer claims v1 within its one small commit write; a store
-          // whose files persist unclaimed is genuinely unlogged.
-          var polls = 0
-          while (v0 == 0 && polls < 100 &&
-              StoreMeta.listDataFiles(spark, path).getOrElse(Nil).nonEmpty) {
-            Thread.sleep(20L)
-            v0 = StoreLog.currentVersion(spark, path)
-            polls += 1
-          }
-          require(v0 > 0 ||
-            StoreMeta.listDataFiles(spark, path).getOrElse(Nil).isEmpty,
-            s"appendConcurrent bootstrap on unlogged non-empty store $path: " +
-              "take one serialized append first to baseline the log " +
-              "(or run StoreRepair.repair if a bootstrapping writer died)")
-        }
-        // checkpoint-accelerated replay: O(CheckpointEvery) commit reads
-        val live = StoreLog.liveSetAtVersion(spark, path, v0).toSet
-        try {
-          val loadedOpt = StoreMeta.load(spark, path)
-          val liveStats = loadedOpt
-            .map(_.files.filter(f => live(f.file))).getOrElse(Nil)
-          // a committed-live file missing from the healed stats is
-          // missing from the DIRECTORY: a racing replacer's swap is
-          // mid-flight (archived, not yet committed). Reading around it
-          // would silently skip dedup against those files and fold the
-          // LogID base over an incomplete set — redo once the racer's
-          // commit lands (same signal as fileVanished, caught earlier)
-          if (liveStats.size < live.size) {
-            Thread.sleep(100L)
-            throw new java.io.FileNotFoundException(
-              "committed-live files not on disk — replacer swap in flight")
-          }
-          val overlapping = liveStats
-            .filter(f => envelopes.exists(b => StoreMeta.overlaps(f, b)))
-          val base = liveStats.foldLeft(0L)((m, f) => math.max(m, f.logIdMax))
-          def antiJoined(): DataFrame = deduped.alias("in")
-            .join(spark.read
-              .option("basePath", path).schema(Schemas.consolidated)
-              .parquet(overlapping.map(f => s"$path/${f.file}"): _*)
-              .select(dedupKey.map(col): _*).alias("ex"),
-              keyCondition("in", "ex"), "left_anti")
-          // fused single-action attempt for flat trickle-regime batches,
-          // mirroring the serialized path: the fresh count and the new
-          // file's stats are observed during the staged write, so a
-          // clean attempt runs ONE batch action instead of three (count,
-          // publish, stats rescan) — and a lost-claim redo re-pays one
-          // action, not three
-          val est =
-            if (envelopes.exists(_.rows < 0L)) -1L
-            else envelopes.map(_.rows).sum
-          if (partitionBy.isEmpty && est >= 0L && est < BootstrapSplitRows) {
-            val fresh = if (overlapping.isEmpty) deduped else antiJoined()
-            val assigned = withLogIdsFrom(base, fresh, batchRows = est)
-            val laidOut =
-              if (sortWithin.isEmpty) assigned
-              else assigned.sortWithinPartitions(sortWithin.map(col): _*)
-            val (obs, observed) = appendObservation(laidOut)
-            val (stageDir, mine) = Staging.stage(spark, path, observed, Nil)
-            val m = obs.get
-            val n = m("n").asInstanceOf[Long]
-            if (n == 0L) { Staging.abandon(spark, stageDir); return 0L }
-            Staging.promote(spark, path, stageDir, mine)
-            beforeCommit(attempt, v0)
-            if (StoreLog.tryCommit(spark, path, v0 + 1, "append",
-                adds = mine, removes = Nil)) {
-              try {
-                val newStats =
-                  if (mine.size == 1) Seq(observedStats(m, mine.head))
-                  else StoreMeta.scanStats(spark, path, mine)
-                val segs = loadedOpt.map(_.segments).getOrElse(0)
-                if (segs + 1 > StoreMeta.SegmentFoldThreshold)
-                  StoreMeta.save(spark, path, liveStats ++ newStats)
-                else StoreMeta.saveDelta(spark, path, newStats)
-              } catch {
-                case scala.util.control.NonFatal(e) =>
-                  log.warn(s"post-commit sidecar update failed on $path " +
-                    "(cache only — next load() heals): " + e)
-              }
-              return n
+    if (prep.envelopes.isEmpty) return 0L
+    var attempt = 0
+    while (true) {
+      attempt += 1
+      if (attempt > maxAttempts)
+        throw new StoreLog.ConcurrentCommitException(
+          s"append on $path lost $maxAttempts version races; reduce " +
+            "writer contention or raise maxAttempts")
+      // attempt accounting fires at the LOOP TOP: attempts that abort
+      // before publish (fileVanished redo, empty-fresh early return)
+      // never reach the beforeCommit seam, so counting there
+      // undercounts redone work under CoW interference
+      onAttempt(attempt)
+      try {
+        committedState(spark, path, singleWriter) match {
+          case None =>
+            require(singleWriter,
+              s"appendConcurrent on $path: a foreign (non-hive) layout has " +
+                "no commit log to arbitrate writers — append from one writer")
+            return appendFullScanDeduped(spark, path, prep.deduped,
+              partitionBy, sortWithin)
+          case Some(state) =>
+            claimOnce(spark, path, prep, state, partitionBy, sortWithin,
+              attempt, beforeCommit) match {
+              case Some(n) => return n
+              case None => () // lost the claim: redo against the winner
             }
-            Staging.retract(spark, path, mine)
-          } else {
-          val fresh =
-            if (overlapping.isEmpty) deduped
-            else antiJoined().cache()
-          try {
-            val n = fresh.count()
-            if (n == 0L) return 0L
-            val assigned = withLogIdsFrom(base, fresh, batchRows = n)
-            val laidOut =
-              if (sortWithin.isEmpty) assigned
-              else assigned.sortWithinPartitions(sortWithin.map(col): _*)
-            // hive layouts stage with the same partition dirs; the staged
-            // relative paths (key=value/part-*.parquet) move home verbatim
-            val mine = Staging.publish(spark, path, laidOut, partitionBy)
-            beforeCommit(attempt, v0)
-            if (StoreLog.tryCommit(spark, path, v0 + 1, "append",
-                adds = mine, removes = Nil)) {
-              // sidecar maintenance mirrors the serialized path: one
-              // O(batch) delta segment normally, a full fold past the
-              // segment threshold (unbounded concurrent-only trickle
-              // appends must not regrow the O(store) segment read this
-              // design removed). The commit already landed, and the
-              // sidecar is a pure cache — so NOTHING here may fail the
-              // append: a racing compaction archiving our just-committed
-              // files mid-scan, or any sidecar write error, degrades to
-              // a warning and one heal rescan on the next load().
-              try {
-                val newStats = StoreMeta.scanStats(spark, path, mine)
-                val segs = loadedOpt.map(_.segments).getOrElse(0)
-                if (segs + 1 > StoreMeta.SegmentFoldThreshold)
-                  StoreMeta.save(spark, path, liveStats ++ newStats)
-                else StoreMeta.saveDelta(spark, path, newStats)
-              } catch {
-                case scala.util.control.NonFatal(e) =>
-                  log.warn(s"post-commit sidecar update failed on $path " +
-                    "(cache only — next load() heals): " + e)
-              }
-              return n
-            }
-            // lost the claim: un-publish our files and redo against the
-            // winner's state (they may hold our keys or our LogID range)
-            Staging.retract(spark, path, mine)
-          } finally if (fresh ne deduped) fresh.unpersist()
-          }
-        } catch {
-          // a racing CoW maintenance commit (merge/delete/compaction)
-          // archived a file between our log replay and the read — the
-          // state this attempt was based on no longer exists physically.
-          // Not a failure: redo against the racer's committed state,
-          // exactly as a lost version claim does.
-          case e: Exception if StoreLog.fileVanished(e) => ()
         }
+      } catch {
+        case e: Exception if StoreLog.fileVanished(e) => ()
       }
-      0L // unreachable
     }
+    0L // unreachable
   }
+
+  /** The committed store state a writer works from: the head version,
+    * the reconciled sidecar load, and the stats of the files live at the
+    * head.
+    */
+  private[store] final case class Committed(
+      version: Int, loaded: StoreMeta.Loaded, live: Seq[FileStats])
+
+  /** Step 1 of [[claimLoop]] (and [[StoreDelete]]'s state read); None =
+    * foreign layout. Waits out two states that another writer resolves
+    * within one small metadata write:
+    *
+    *   - data files at version 0: a bootstrapping writer inside its
+    *     publish→claim window, or data that predates the log. Files still
+    *     unclaimed after the wait predate the log: a single writer
+    *     baselines them, a concurrent one refuses (committing would
+    *     orphan the data; baselining could absorb a live bootstrapper's
+    *     files);
+    *   - a committed-live file missing from the directory ([[StoreMeta.load]]
+    *     heals in everything the directory holds): a copy-on-write
+    *     replacer's archive→commit swap is in flight. Reading around it
+    *     would skip dedup against those rows and fold the LogID base over
+    *     an incomplete set — duplicate keys and colliding ids committed
+    *     with no error. A state that outlasts the wait is a dead
+    *     replacer: fail and point at repair.
+    */
+  private[store] def committedState(spark: SparkSession, path: String,
+      singleWriter: Boolean): Option[Committed] = {
+    var polls = 0
+    def pause(limit: Int)(onTimeout: => Unit): Unit =
+      if (polls < limit) { polls += 1; Thread.sleep(20L) }
+      else { onTimeout; polls = 0 }
+    while (true) {
+      val (v0, live, _) = StoreLog.headState(spark, path)
+      val unlogged = v0 == 0 && (StoreMeta.listDataFiles(spark, path) match {
+        case None => return None
+        case Some(files) => files.nonEmpty
+      })
+      if (unlogged) pause(BootstrapPolls) {
+        require(singleWriter,
+          s"appendConcurrent bootstrap on unlogged non-empty store $path: " +
+            "take one append first to baseline the log " +
+            "(or run StoreRepair.repair if a bootstrapping writer died)")
+        StoreLog.baselineIfUnlogged(spark, path)
+      }
+      else StoreMeta.load(spark, path) match {
+        case None => return None
+        case Some(loaded) =>
+          val liveStats = loaded.files.filter(f => live(f.file))
+          if (liveStats.size == live.size)
+            return Some(Committed(v0, loaded, liveStats))
+          pause(CoveragePolls) {
+            throw new StoreLog.ConcurrentCommitException(
+              s"store $path: committed-live files are missing from the " +
+                "directory and no replacing commit landed — a copy-on-write " +
+                "writer died mid-swap; run StoreRepair.repair")
+          }
+      }
+    }
+    None // unreachable
+  }
+
+  /** Steps 2–4 of [[claimLoop]] on one committed state: Some(rows
+    * appended), or None when another writer claimed v0+1 first (this
+    * attempt's files are already retracted).
+    *
+    * Flat trickle-sized batches take ONE batch action. The deduped row
+    * count riding the envelopes is an upper bound on the fresh rows
+    * (the anti-join only shrinks), and under the bootstrap boundary
+    * both land in the one-compact-file regime, so the exact fresh count
+    * and the new file's zone-map stats are observed DURING the staged
+    * write (CollectMetrics — exactly-once per action) instead of by a
+    * count before it and a stats rescan after. Hive layouts (a task
+    * writes one file per partition VALUE, so per-file stats need the
+    * rescan) and bootstrap-sized batches (the fan-out file count
+    * ⌈n/32768⌉ is pinned on the exact n) count first.
+    */
+  private def claimOnce(
+      spark: SparkSession, path: String, prep: PreparedBatch,
+      state: Committed, partitionBy: Seq[String], sortWithin: Seq[String],
+      attempt: Int, beforeCommit: (Int, Int) => Unit): Option[Long] = {
+    val Committed(v0, loaded, live) = state
+    val deduped = prep.deduped
+    val overlapping = live
+      .filter(f => prep.envelopes.exists(b => StoreMeta.overlaps(f, b)))
+    val base = live.foldLeft(0L)((m, f) => math.max(m, f.logIdMax))
+    def antiJoined(): DataFrame = deduped.alias("in")
+      .join(spark.read
+        .option("basePath", path).schema(Schemas.consolidated)
+        .parquet(overlapping.map(f => s"$path/${f.file}"): _*)
+        .select(dedupKey.map(col): _*).alias("ex"),
+        keyCondition("in", "ex"), "left_anti")
+    def laidOut(assigned: DataFrame): DataFrame =
+      if (sortWithin.isEmpty) assigned
+      else assigned.sortWithinPartitions(sortWithin.map(col): _*)
+    val est =
+      if (prep.envelopes.exists(_.rows < 0L)) -1L
+      else prep.envelopes.map(_.rows).sum
+    // (fresh rows, this writer's new files, their stats if observed)
+    val (n, mine, observed) =
+      if (partitionBy.isEmpty && est >= 0L && est < BootstrapSplitRows) {
+        val fresh = if (overlapping.isEmpty) deduped else antiJoined()
+        val (obs, observing) =
+          appendObservation(laidOut(withLogIdsFrom(base, fresh, batchRows = est)))
+        val (stageDir, staged) = Staging.stage(spark, path, observing, Nil)
+        val m = obs.get
+        val n = m("n").asInstanceOf[Long]
+        if (n == 0L) { Staging.abandon(spark, stageDir); (0L, Nil, None) }
+        else {
+          val files = Staging.promote(spark, path, stageDir, staged)
+          (n, files,
+            if (files.size == 1) Some(Seq(observedStats(m, files.head))) else None)
+        }
+      } else {
+        // no overlapping files → every deduped row is fresh; reuse the
+        // already-cached batch instead of stacking a second cache on it
+        val fresh = if (overlapping.isEmpty) deduped else antiJoined().cache()
+        try {
+          val n = fresh.count()
+          if (n == 0L) (0L, Nil, None)
+          else (n, Staging.publish(spark, path,
+            laidOut(withLogIdsFrom(base, fresh, batchRows = n)), partitionBy),
+            None)
+        } finally if (fresh ne deduped) fresh.unpersist()
+      }
+    if (n == 0L) {
+      if (loaded.dirty) updateSidecar(spark, path, state, Nil)
+      return Some(0L)
+    }
+    beforeCommit(attempt, v0)
+    if (!StoreLog.tryCommit(spark, path, v0 + 1, "append",
+        adds = mine, removes = Nil)) {
+      // lost the claim: un-publish our files — the winner may hold our
+      // keys or our LogID range
+      Staging.retract(spark, path, mine)
+      return None
+    }
+    updateSidecar(spark, path, state,
+      observed.getOrElse(StoreMeta.scanStats(spark, path, mine)))
+    Some(n)
+  }
+
+  /** Post-append sidecar maintenance: a drifted sidecar folds in full, so
+    * its heal scan is paid once rather than by every later append until
+    * the segment fold; a clean one takes one O(batch) delta segment,
+    * folding past [[StoreMeta.SegmentFoldThreshold]] segments (unbounded
+    * trickle appends must not regrow the O(store) segment read this
+    * design removed). A fold records the COMMITTED files only: a racing
+    * writer's unclaimed files may yet be retracted, and it records its
+    * own once its commit lands. The append's commit has already landed
+    * and the sidecar is a pure cache, so NOTHING here may fail the
+    * append: a racing compaction archiving our just-committed files
+    * mid-scan, or any sidecar write error, degrades to a warning and one
+    * heal rescan on the next load().
+    */
+  private def updateSidecar(spark: SparkSession, path: String,
+      state: Committed, newStats: => Seq[FileStats]): Unit =
+    try {
+      val loaded = state.loaded
+      if (loaded.dirty || loaded.segments + 1 > StoreMeta.SegmentFoldThreshold)
+        StoreMeta.save(spark, path, state.live ++ newStats)
+      else StoreMeta.saveDelta(spark, path, newStats)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        log.warn(s"post-commit sidecar update failed on $path " +
+          "(cache only — next load() heals): " + e)
+    }
 
   /** The pre-sidecar shape — whole-table key scan + whole-table max —
     * kept for foreign (non-hive) layouts where per-file zone maps cannot
-    * be reconstructed.
+    * be reconstructed. Single-writer: there is no log to arbitrate.
     */
   private[graft] def appendFullScan(
       spark: SparkSession, path: String, incoming: DataFrame,
       partitionBy: Seq[String], sortWithin: Seq[String]): Long =
-    appendFullScanImpl(spark, path, incoming.dropDuplicates(dedupKey),
+    appendFullScanDeduped(spark, path, incoming.dropDuplicates(dedupKey),
       partitionBy, sortWithin)
 
-  /** [[appendFullScan]] on an already key-deduped batch (see
-    * [[prepare]]) — the bootstrap append of a duplicate-delivery run.
-    */
-  private[graft] def appendFullScanPrepared(
-      spark: SparkSession, path: String, deduped: DataFrame,
-      partitionBy: Seq[String], sortWithin: Seq[String]): Long =
-    appendFullScanImpl(spark, path, deduped, partitionBy, sortWithin)
-
-  private def appendFullScanImpl(
+  private def appendFullScanDeduped(
       spark: SparkSession, path: String, deduped: DataFrame,
       partitionBy: Seq[String], sortWithin: Seq[String]): Long = {
     val existing = read(spark, path)

@@ -54,29 +54,27 @@ object StoreDelete {
       partitionBy: Seq[String] = Nil,
       sortWithin: Seq[String] = Seq("database_name", "last_lsn"),
       fileVerdict: FileStats => Option[Boolean] = _ => None): DeleteStats = {
-    val loaded0 = StoreMeta.load(spark, path).getOrElse(throw
-      new IllegalArgumentException(
-        s"delete needs a graft-managed layout (foreign subdirs found): $path"))
-    // wait out a racing replacer's archive→commit window before trusting
-    // the loaded stats (the append-side awaitCommittedCoverage rule): a
-    // committed-live file that is off disk mid-swap would otherwise be
-    // silently EXCLUDED from the candidate set, and if an unrelated
-    // append bumps the version this delete's commit rebases disjointly —
-    // predicate-matching rows in that file durably survive a
-    // "successful" delete with no error anywhere
-    val loaded = ConsolidatedStore.awaitCommittedCoverage(spark, path, loaded0)
-    // delete the COMMITTED live set only (same rule as
+    // the appenders' committed-state read: a pre-log store is baselined
+    // first (v1 = every live file), so a crash inside this delete stays
+    // repairable, and a racing replacer's archive→commit window is
+    // waited out — a committed-live file that is off disk mid-swap would
+    // otherwise be silently EXCLUDED from the candidates, and if an
+    // unrelated append bumps the version this delete's commit rebases
+    // disjointly — predicate-matching rows in that file durably survive
+    // a "successful" delete with no error anywhere.
+    //
+    // Candidates are the COMMITTED live set only (same rule as
     // Compaction.rewriteCow): the sidecar load heals in every file the
     // directory lists — including a concurrent appender's
     // published-but-unclaimed batch. Absorbing such a file into this
     // delete's removes would archive rows whose commit hasn't landed
     // (silently lost once it does) and breaks the disjointness that
-    // lets racing appends rebase this commit. Unlogged stores have no
-    // committed set — their single-writer bootstrap contract applies.
-    val candidates = StoreLog.committedLiveSet(spark, path) match {
-      case Some(live) => loaded.files.filter(f => live(f.file))
-      case None => loaded.files
-    }
+    // lets racing appends rebase this commit.
+    val state = ConsolidatedStore.committedState(spark, path,
+      singleWriter = true).getOrElse(throw new IllegalArgumentException(
+        s"delete needs a graft-managed layout (foreign subdirs found): $path"))
+    val loaded = state.loaded
+    val candidates = state.live
     if (candidates.isEmpty) return DeleteStats(0L, 0L, 0L)
     val rootQ = StoreMeta.qualifiedPath(spark, path)
     val hit = coalesce(predicate, lit(false))
@@ -146,16 +144,6 @@ object StoreDelete {
     // its history dir)
     if (removed.isEmpty && staged.isEmpty)
       return DeleteStats(deleted, 0L, 0L)
-    // a pre-log store BASELINES first (v1 = every live file), then takes
-    // the logged path like everyone else: the old logless branch deleted
-    // un-archived originals after the promote, and a crash inside that
-    // window left durable duplicate survivor rows that no repair could
-    // reconcile (currentVersion == 0 has no baseline to roll back to —
-    // and a rerun would rewrite the partial file AGAIN, compounding)
-    if (StoreLog.currentVersion(spark, path) == 0)
-      StoreLog.commit(spark, path, "baseline",
-        adds = StoreMeta.listDataFiles(spark, path).getOrElse(Nil),
-        removes = Nil)
     val v = StoreLog.currentVersion(spark, path) + 1
     StoreLog.archive(spark, path, v,
       removed.map(f => (new Path(s"$path/$f"), f)))

@@ -34,13 +34,12 @@ import graft.model.Schemas
   *    beforeVersion`, after which snapshots needing them refuse with a
   *    clear error (exactly Delta's vacuum contract).
   *
-  * The log is maintained by [[ConsolidatedStore.append]] and
-  * [[graft.maintenance.Compaction]] on list-able layouts (flat or
-  * hive-partitioned — the same condition as the sidecar); foreign
-  * layouts skip logging and simply have no time travel. A store that
-  * predates the log baselines itself on its first logged commit: the
-  * first commit's `adds` cover every live file, so history begins
-  * there.
+  * The log is maintained by every store writer (appends, merge, delete,
+  * compaction) on list-able layouts (flat or hive-partitioned — the
+  * same condition as the sidecar); foreign layouts skip logging and
+  * simply have no time travel. A store that predates the log is
+  * baselined before its first logged commit ([[baselineIfUnlogged]]):
+  * version 1 lists every data file, so history begins there.
   */
 object StoreLog {
 
@@ -89,17 +88,26 @@ object StoreLog {
   def currentVersion(spark: SparkSession, root: String): Int =
     listVersions(spark, root).lastOption.getOrElse(0)
 
-  private def listVersions(spark: SparkSession, root: String): Seq[Int] = {
+  /** Commit and checkpoint versions of the log, ascending, from ONE
+    * listing of the log directory.
+    */
+  private final case class LogListing(versions: Seq[Int], checkpoints: Seq[Int])
+
+  private def listLog(spark: SparkSession, root: String): LogListing = {
     val dir = new Path(s"$root/$dirName")
     val f = fs(spark, dir)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toInt
+    if (!f.exists(dir)) return LogListing(Nil, Nil)
+    val names = f.listStatus(dir).toSeq.map(_.getPath.getName)
+    def numbered(prefix: String): Seq[Int] = names
+      .collect { case n if n.startsWith(prefix) && n.endsWith(".json") =>
+        n.stripPrefix(prefix).stripSuffix(".json").toInt
       }
       .sorted
+    LogListing(numbered("v"), numbered("ckpt-v"))
   }
+
+  private def listVersions(spark: SparkSession, root: String): Seq[Int] =
+    listLog(spark, root).versions
 
   /** Test seam: observes every metadata-file read ([[readBytesOf]]).
     * StoreLogSpec counts reads under a given root to pin the
@@ -190,19 +198,6 @@ object StoreLog {
   private def ckptPath(root: String, v: Int): Path =
     new Path(s"$root/$dirName/${f"ckpt-v$v%09d"}.json")
 
-  private def listCheckpointVersions(
-      spark: SparkSession, root: String): Seq[Int] = {
-    val dir = new Path(s"$root/$dirName")
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("ckpt-v") && n.endsWith(".json") =>
-        n.stripPrefix("ckpt-v").stripSuffix(".json").toInt
-      }
-      .sorted
-  }
-
   private def readCheckpointOpt(
       spark: SparkSession, root: String, v: Int): Option[Checkpoint] =
     try {
@@ -239,15 +234,16 @@ object StoreLog {
     * newest readable checkpoint `<= version` plus the tail commits —
     * the hot-path read shape.
     */
-  private def stateAt(spark: SparkSession, root: String, version: Int):
+  private def stateAt(spark: SparkSession, root: String, version: Int,
+      listing: LogListing):
       (scala.collection.mutable.LinkedHashSet[String],
         scala.collection.mutable.Set[String]) = {
     val live = scala.collection.mutable.LinkedHashSet.empty[String]
     val txns = scala.collection.mutable.Set.empty[String]
-    val base = newestReadableCheckpoint(spark, root, version)
+    val base = newestReadableCheckpoint(spark, root, version, listing)
     base.foreach { c => live ++= c.live; txns ++= c.txns }
     val from = base.map(_.version).getOrElse(0)
-    listVersions(spark, root).filter(v => v > from && v <= version)
+    listing.versions.filter(v => v > from && v <= version)
       .foreach { v =>
         val c = readCommitPatiently(spark, root, v)
         live ++= c.adds; live --= c.removes; c.txn.foreach(txns += _)
@@ -257,18 +253,29 @@ object StoreLog {
 
   /** Newest readable checkpoint at or below `atMost`. */
   private def newestReadableCheckpoint(
-      spark: SparkSession, root: String, atMost: Int): Option[Checkpoint] =
-    listCheckpointVersions(spark, root)
+      spark: SparkSession, root: String, atMost: Int,
+      listing: LogListing): Option[Checkpoint] =
+    listing.checkpoints
       .filter(_ <= atMost).sorted(Ordering[Int].reverse)
       .iterator.map(cv => readCheckpointOpt(spark, root, cv))
       .collectFirst { case Some(c) => c }
 
-  /** Live files at `version`, checkpoint-accelerated — the appenders'
-    * replay. Insertion-ordered.
-    */
+  /** Live files at `version`, checkpoint-accelerated. Insertion-ordered. */
   private[graft] def liveSetAtVersion(
       spark: SparkSession, root: String, version: Int): Seq[String] =
-    stateAt(spark, root, version)._1.toSeq
+    stateAt(spark, root, version, listLog(spark, root))._1.toSeq
+
+  /** The head version, and the COMMITTED live set and seen txn tokens
+    * at it, from one listing of the log directory — the appenders'
+    * per-attempt state read. (0, empty, empty) = no log yet.
+    */
+  private[graft] def headState(spark: SparkSession, root: String)
+      : (Int, Set[String], Set[String]) = {
+    val listing = listLog(spark, root)
+    val head = listing.versions.lastOption.getOrElse(0)
+    val (live, txns) = stateAt(spark, root, head, listing)
+    (head, live.toSet, txns.toSet)
+  }
 
   /** Write the checkpoint for `v` if it is due; never fails the commit
     * that triggered it (derived data — a reader without it just replays
@@ -310,7 +317,8 @@ object StoreLog {
     // build from the newest base checkpoint CARRYING a remove index;
     // an index-less base (pre-index checkpoint) forces one full replay
     // here, which repairs the store onto the indexed fast path
-    val base = newestReadableCheckpoint(spark, root, v)
+    val listing = listLog(spark, root)
+    val base = newestReadableCheckpoint(spark, root, v, listing)
       .filter(_.homes.isDefined)
     val live = scala.collection.mutable.LinkedHashSet.empty[String]
     val txns = scala.collection.mutable.Set.empty[String]
@@ -319,7 +327,7 @@ object StoreLog {
       live ++= c.live; txns ++= c.txns; homes ++= c.homes.get
     }
     val from = base.map(_.version).getOrElse(0)
-    listVersions(spark, root).filter(x => x > from && x <= v).foreach { x =>
+    listing.versions.filter(x => x > from && x <= v).foreach { x =>
       val c = readCommitPatiently(spark, root, x)
       live ++= c.adds; live --= c.removes; c.txn.foreach(txns += _)
       c.removes.foreach(r => homes(r) = homes.getOrElse(r, Nil) :+ x)
@@ -479,7 +487,7 @@ object StoreLog {
     * abort: the store state it based its work on no longer exists. The
     * store itself stays consistent — the winner's commit is intact, and
     * the loser's footprint is undone by its own abort path
-    * (appendConcurrent retracts its published files and redoes;
+    * (an append retracts its published files and redoes;
     * commitReplacing runs the writer-scoped [[rollbackReplacing]]).
     */
   final class ConcurrentCommitException(msg: String)
@@ -542,12 +550,12 @@ object StoreLog {
     }
   }
 
-  /** Write the next commit; returns its version. Appends to one store
-    * through THIS entry point are serialized (the
-    * [[ConsolidatedStore.append]] contract); a race here is a contract
-    * violation and aborts loudly rather than clobbering. Multi-writer
-    * callers use [[tryCommit]] ([[ConsolidatedStore.appendConcurrent]])
-    * or [[commitReplacing]] (merge/delete).
+  /** Write the next commit; returns its version. For single-writer
+    * operations only (a full compaction's swap): the version comes from
+    * the listing, so a race here aborts loudly rather than clobbering.
+    * Store appends claim through [[tryCommit]] (the
+    * [[ConsolidatedStore.append]] claim loop redoes a lost claim), and
+    * file-replacing ops through [[commitReplacing]] (merge/delete/optimize).
     */
   def commit(spark: SparkSession, root: String, op: String,
       adds: Seq[String], removes: Seq[String],
@@ -785,7 +793,7 @@ object StoreLog {
     * micro-batch. O(log) driver read; the log is tiny by construction.
     */
   def txnSeen(spark: SparkSession, root: String, txn: String): Boolean =
-    stateAt(spark, root, currentVersion(spark, root))._2.contains(txn)
+    headState(spark, root)._3.contains(txn)
 
   /** The COMMITTED live file set (root-relative), replayed through the
     * current head; None when the store has no log. Copy-on-write
@@ -799,22 +807,23 @@ object StoreLog {
     */
   def committedLiveSet(
       spark: SparkSession, root: String): Option[Set[String]] = {
-    val head = currentVersion(spark, root)
-    if (head == 0) return None
-    Some(stateAt(spark, root, head)._1.toSet)
+    val (head, live, _) = headState(spark, root)
+    if (head == 0) None else Some(live)
   }
 
-  /** Log an append of `newFiles`. On the FIRST commit of a store that
-    * already holds data (created before logging was enabled), the commit
-    * baselines: `adds` cover every live file, so version 1 is the full
-    * post-append state.
+  /** Baseline a store whose data predates the log: claim version 1 as a
+    * `baseline` commit listing every data file the directory holds, so
+    * history starts there and every later writer takes the logged path.
+    * No-op on a logged, empty or foreign-layout store. The claim is
+    * create-no-overwrite, so racing baseliners converge on one baseline.
+    * Callers guarantee that no writer is inside its publish→claim window
+    * (its unclaimed files would be absorbed into the baseline); the
+    * append claim loop waits such a writer out first.
     */
-  def commitAppend(spark: SparkSession, root: String,
-      newFiles: Seq[String], allLiveFiles: => Seq[String]): Int = {
-    val first = currentVersion(spark, root) == 0
-    commit(spark, root, "append",
-      adds = if (first) allLiveFiles else newFiles, removes = Nil)
-  }
+  def baselineIfUnlogged(spark: SparkSession, root: String): Unit =
+    if (currentVersion(spark, root) == 0)
+      StoreMeta.listDataFiles(spark, root).filter(_.nonEmpty).foreach(files =>
+        tryCommit(spark, root, 1, "baseline", adds = files, removes = Nil))
 
   /** (relative file, base dir) pairs of the table at `version`: replay
     * adds/removes through v, then resolve each surviving file to its
@@ -826,12 +835,13 @@ object StoreLog {
     */
   def liveFilesAt(
       spark: SparkSession, root: String, version: Int): Seq[(String, String)] = {
-    val head = currentVersion(spark, root)
+    val listing = listLog(spark, root)
+    val head = listing.versions.lastOption.getOrElse(0)
     require(head >= 1, s"store $root has no commit log")
     require(version >= 1 && version <= head,
       s"version $version out of range 1..$head")
     // live set at `version`: checkpoint <= version + tail — O(CheckpointEvery)
-    val live = stateAt(spark, root, version)._1
+    val live = stateAt(spark, root, version, listing)._1
     // archive-home resolution = first removing commit AFTER `version`
     // per still-live file. The newest checkpoint's cumulative remove
     // index covers (version, ckpt]; the tail commits cover (ckpt, head]
@@ -840,7 +850,7 @@ object StoreLog {
     // index (pre-index store) is skipped for homes: the tail then starts
     // at `version` (full-fidelity fallback).
     val removedAt = scala.collection.mutable.Map.empty[String, Int]
-    val base = newestReadableCheckpoint(spark, root, head)
+    val base = newestReadableCheckpoint(spark, root, head, listing)
       .filter(_.homes.isDefined)
     base.filter(_.vacuumHorizon > version).foreach { c =>
       throw new IllegalStateException(
@@ -856,7 +866,7 @@ object StoreLog {
       }
     }
     val from = math.max(base.map(_.version).getOrElse(0), version)
-    listVersions(spark, root).filter(x => x > from && x <= head).foreach { x =>
+    listing.versions.filter(x => x > from && x <= head).foreach { x =>
       val c = readCommitPatiently(spark, root, x)
       c.removes.foreach(fl =>
         if (live(fl)) removedAt.getOrElseUpdate(fl, x))

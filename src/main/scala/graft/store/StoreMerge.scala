@@ -165,9 +165,7 @@ object StoreMerge {
     // sat in its own attempt's (stateReadAt, claim) window
     // (foreign layouts return None and skip the baseline — the load
     // below still throws for them, as before, without a stray commit)
-    if (StoreLog.currentVersion(spark, path) == 0)
-      StoreMeta.listDataFiles(spark, path).foreach(files =>
-        StoreLog.commit(spark, path, "baseline", adds = files, removes = Nil))
+    StoreLog.baselineIfUnlogged(spark, path)
     // the version this attempt's computation is anchored to, captured
     // BEFORE any state read (anchor ≤ every read, or staleness hides):
     // everything below — the sidecar load, committedLiveSet, the

@@ -71,7 +71,7 @@ final case class KeyRanges(
     // the append pick its write regime (trickle vs bootstrap fan-out)
     // without a separate count action — the count is an upper bound on
     // the post-anti-join rows, and the regime boundary only needs the
-    // upper bound (see ConsolidatedStore.appendPrunedPrepared)
+    // upper bound (see ConsolidatedStore.claimOnce)
     rows: Long = -1L)
 
 /** Store-metadata sidecar: the Spark analog of the reference's unique

@@ -81,15 +81,11 @@ object StreamingEtl {
     * AFTER each batch's append, mirroring advance-after-load
     * (ps:Invoke-SQLBackupHistoryETL.ps1:52-65).
     *
-    * @param concurrentAppends route each micro-batch through
-    *   [[graft.store.ConsolidatedStore.appendConcurrent]]'s optimistic
-    *   commit protocol. REQUIRED whenever more than one writer shares
-    *   `consolidatedPath` — the natural fleet deployment runs one
-    *   stream per source server into one store, and the default
-    *   serialized append's commit claim makes a racing second writer
-    *   ABORT loudly (fail the batch; the checkpoint retries it) rather
-    *   than corrupt, but only appendConcurrent lets both land. The
-    *   watermark advance is a cross-JVM-safe CRDT either way.
+    * Several streams may share `consolidatedPath` — the natural fleet
+    * deployment runs one stream per source server into one store: the
+    * append's optimistic commit protocol lets every writer land, and
+    * the watermark advance is a cross-JVM-safe CRDT.
+    *
     * @param maintenance when set, each non-empty micro-batch ends with
     *   [[graft.maintenance.StoreMaintenance.runIfDue]] — a continuous
     *   sink is the WORST small-file generator (one store file per
@@ -112,13 +108,12 @@ object StreamingEtl {
       consolidatedPath: String,
       watermarkPath: String,
       checkpointDir: String,
-      concurrentAppends: Boolean = false,
       maintenance: Option[graft.maintenance.StoreMaintenance.Policy] = None,
       sourceBytes: Long = -1L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     def build: org.apache.spark.sql.streaming.StreamingQuery =
       runStreamQuery(spark, incoming, server, consolidatedPath,
-        watermarkPath, checkpointDir, concurrentAppends, maintenance)
+        watermarkPath, checkpointDir, maintenance)
     if (sourceBytes >= 0L)
       StreamTuning.withStatePartitions(spark, sourceBytes)(build)
     else build
@@ -131,7 +126,6 @@ object StreamingEtl {
       consolidatedPath: String,
       watermarkPath: String,
       checkpointDir: String,
-      concurrentAppends: Boolean,
       maintenance: Option[graft.maintenance.StoreMaintenance.Policy])
       : org.apache.spark.sql.streaming.StreamingQuery =
     dedupStream(incoming).writeStream
@@ -145,12 +139,8 @@ object StreamingEtl {
           val r = pinned.agg(count(lit(1)), max("backup_finish_date")).head()
           if (r.getLong(0) > 0L) {
             val newWm = r.getTimestamp(1)
-            if (concurrentAppends)
-              graft.store.ConsolidatedStore.appendConcurrent(
-                batch.sparkSession, consolidatedPath, pinned)
-            else
-              graft.store.ConsolidatedStore.append(
-                batch.sparkSession, consolidatedPath, pinned)
+            graft.store.ConsolidatedStore.append(
+              batch.sparkSession, consolidatedPath, pinned)
             graft.store.WatermarkStore.advance(
               batch.sparkSession, watermarkPath, server, newWm)
             maintenance.foreach { p =>

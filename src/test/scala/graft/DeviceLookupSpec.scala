@@ -20,6 +20,15 @@ class DeviceLookupSpec extends AnyFunSuite {
   private def bh = graft.etl.BackupHistoryDerivation
     .canonicalFrame(spark, TestSpark.sf).drop("LogID")
 
+  test("driver-side device hash equals Spark's xxhash64 column") {
+    import spark.implicits._
+    val names = Seq("X:\\bk\\full_1.bak", "https://bk.example.com/log_2.trn",
+      "Ünïcødé-バックアップ-\uD83D\uDCBE.trn", "")
+    val onSpark = names.toDF("d").select(xxhash64(col("d"))).as[Long]
+      .collect().toSeq
+    assert(names.map(ConsolidatedStore.deviceHash) == onSpark)
+  }
+
   test("device lookup scans only the file holding the device") {
     val path = tmp()
     // two appends with DISJOINT device populations (URL vs disk paths)

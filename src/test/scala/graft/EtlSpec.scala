@@ -199,11 +199,13 @@ class EtlSpec extends AnyFunSuite {
     val loaded = StoreMeta.load(spark, path).get
     assert(loaded.files.size == 3 && !loaded.dirty && loaded.segments == 3)
 
-    // fold: an append pushing the log past foldEvery rewrites it as one
+    // fold: an append onto a DRIFTED sidecar (here its one segment lost,
+    // so the load heals t1's file by a rescan) rewrites it as one
     // segment covering every file, and nothing is lost
     val path2 = tmp()
     ConsolidatedStore.append(spark, path2, t1)
-    ConsolidatedStore.append(spark, path2, t2, foldEvery = 1)
+    segmentFiles(path2).foreach(_.delete())
+    ConsolidatedStore.append(spark, path2, t2)
     assert(segmentFiles(path2).size == 1, "fold collapses the segment log")
     val folded = StoreMeta.load(spark, path2).get
     assert(folded.files.size == 2 && !folded.dirty)
@@ -597,10 +599,11 @@ class EtlSpec extends AnyFunSuite {
   test("concurrent loads: one server's load failure is reported, not amplified") {
     val tmp0 = tmp()
     val (store, wmPath) = (s"$tmp0/cons", s"$tmp0/wm")
-    // an unlogged non-empty store makes appendConcurrent's bootstrap
-    // refuse — a LOAD-phase failure (the extract succeeds). Overlapped
-    // loads must surface it per-server instead of rethrowing through
-    // Await and aborting the siblings mid-flight.
+    // a store holding rows written outside it, without LogIDs, cannot
+    // be indexed by the append's sidecar load — a LOAD-phase failure
+    // (the extract succeeds). Overlapped loads must surface it
+    // per-server instead of rethrowing through Await and aborting the
+    // siblings mid-flight.
     graft.etl.BackupHistoryDerivation.canonicalFrame(spark, TestSpark.sf)
       .drop("LogID").limit(5).write.parquet(store)
     val src = MsdbDerivation.sources(spark, TestSpark.sf)

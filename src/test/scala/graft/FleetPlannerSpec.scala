@@ -52,6 +52,17 @@ class FleetPlannerSpec extends AnyFunSuite {
     }
   }
 
+  test("fleet plan restores every stripe of a striped overlap log") {
+    val bh = RestoreTimelines.stripedOverlap(spark)
+    val at = Timestamp.valueOf("2024-01-01 06:00:00")
+    val logs = FleetRestorePlanner.planAll(bh, "server_name", at)
+      .filter(col("backup_type") === "Log")
+      .select("restore_id", "last_lsn", "from_clause")
+      .as[(Long, BigDecimal, String)].collect().sortBy(_._1).toSeq
+    assert(logs.map(_._2.toLong) == Seq(3000L, 3500L))
+    assert(logs.last._3 == RestoreTimelines.stripedOverlapFrom)
+  }
+
   test("fleet fallback plans AG-only databases the scalar fallback way") {
     // ag-only slice: null out server_name for one database, keep its
     // ag_name — the scalar path finds it only via the AG fallback

@@ -14,25 +14,13 @@ import graft.script.{RestoreScriptGenerator, RestoreScriptOptions}
   */
 class RestoreScriptSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  import spark.implicits._
 
   private val fileInfoJson =
     """[{"logical_name":"db_data","physical_drive":"X:","physical_name":"X:\\data\\db.mdf","file_type":"D","file_number":"1"},""" +
       """{"logical_name":"db_log","physical_drive":"L:","physical_name":"L:\\log\\db.ldf","file_type":"L","file_number":"2"}]"""
 
-  /** (LogID, type, device, start, first, last, copyOnly, devType, fileInfo) */
-  private def bh(rows: Seq[(Long, String, String, String, Long, Long, Boolean, Int, String)]): DataFrame =
-    rows.toDF("LogID", "BackupType", "physical_device_name", "start_s",
-        "first_l", "last_l", "is_copy_only", "device_type", "DBFileInformation")
-      .withColumn("database_name", org.apache.spark.sql.functions.lit("DBAdmin"))
-      .withColumn("server_name", org.apache.spark.sql.functions.lit("srvA"))
-      .withColumn("ag_name", org.apache.spark.sql.functions.lit("agA"))
-      .withColumn("backup_start_date", col("start_s").cast("timestamp"))
-      .withColumn("backup_finish_date", col("start_s").cast("timestamp"))
-      .withColumn("first_lsn", col("first_l").cast("decimal(25,0)"))
-      .withColumn("last_lsn", col("last_l").cast("decimal(25,0)"))
-      .withColumn("position", org.apache.spark.sql.functions.lit(1))
-      .drop("start_s", "first_l", "last_l")
+  private def bh(rows: Seq[RestoreTimelines.Row]): DataFrame =
+    RestoreTimelines.frame(spark, rows)
 
   private val timeline = bh(Seq(
     (1L, "Full", "X:/bk/full_a1.bak", "2024-01-01 01:00:00", 1000L, 2000L, false, 2, fileInfoJson),
@@ -80,6 +68,17 @@ class RestoreScriptSpec extends AnyFunSuite {
     // base = diff lsn 3000 → in range: set(3000-3500 striped), set(3500-4000);
     // overlap: log_3 (07:00); log_4 excluded
     assert(logs.map(_.last_lsn.toBigInt.toLong) == Seq(3500L, 4000L, 4500L))
+  }
+
+  test("a striped overlap log restores from every stripe of its set") {
+    val plan = RestoreScriptGenerator.generate(spark,
+      RestoreTimelines.stripedOverlap(spark),
+      RestoreScriptOptions(sourceDb = "DBAdmin", sourceServer = Some("srvA"),
+        restoreToTime = Some(T)))
+    val logs = plan.steps.filter(_.BackupType == "Log")
+    assert(logs.map(_.last_lsn.toBigInt.toLong) == Seq(3000L, 3500L))
+    assert(logs.last.from_clause == RestoreTimelines.stripedOverlapFrom)
+    assert(logs.last.physical_devices == "X:/bk/log_2a.trn, X:/bk/log_2b.trn")
   }
 
   test("copy-only full skips the diff phase") {

@@ -6,6 +6,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -79,25 +80,49 @@ class StoreConcurrencySpec extends AnyFunSuite {
   }
 
   test("two threaded appenders interleave without losing rows or ids") {
-    val path = tmp()
     val h = bh.cache()
     val total = h.count()
-    ConsolidatedStore.append(spark, path, h.limit(1)) // logged baseline
     // overlapping halves: [0, 60%) and [40%, 100%) of the finish order
     val ordered = h.orderBy("backup_finish_date", "database_name",
       "last_lsn", "physical_device_name")
     val a = ordered.limit((total * 6 / 10).toInt)
     val bCut = (total * 4 / 10).toInt
     val b = ordered.limit(total.toInt).except(ordered.limit(bCut))
-    val fa = Future(ConsolidatedStore.appendConcurrent(spark, path, a))
-    val fb = Future(ConsolidatedStore.appendConcurrent(spark, path, b))
-    Await.result(fa, 5.minutes); Await.result(fb, 5.minutes)
-    val stored = spark.read.parquet(path)
-    assert(stored.count() == total, "union of overlapping halves = all rows")
-    assert(stored.select("LogID").distinct().count() == total, "LogIDs unique")
-    assert(StoreRepair.repair(spark, path).clean)
-    assert(!StoreMeta.load(spark, path).get.dirty)
+    // both entries share one claim loop: two plain appends land exactly
+    // like two concurrent ones
+    val writers = Seq[(String, (String, DataFrame) => Long)](
+      "appendConcurrent" -> ((p, df) => ConsolidatedStore.appendConcurrent(spark, p, df)),
+      "append" -> ((p, df) => ConsolidatedStore.append(spark, p, df)))
+    writers.foreach { case (name, write) =>
+      val path = tmp()
+      ConsolidatedStore.append(spark, path, h.limit(1)) // logged baseline
+      val fa = Future(write(path, a))
+      val fb = Future(write(path, b))
+      Await.result(fa, 5.minutes); Await.result(fb, 5.minutes)
+      val stored = spark.read.parquet(path)
+      assert(stored.count() == total,
+        s"$name: union of overlapping halves = all rows")
+      assert(stored.select("LogID").distinct().count() == total,
+        s"$name: LogIDs unique")
+      assert(StoreRepair.repair(spark, path).clean, name)
+      assert(!StoreMeta.load(spark, path).get.dirty, name)
+    }
     h.unpersist()
+  }
+
+  test("appendConcurrent refuses a foreign layout instead of skipping dedup") {
+    val path = tmp()
+    // a non-hive subdirectory makes the layout foreign: no zone maps, no
+    // commit log — nothing for the optimistic protocol to dedup against
+    // or arbitrate with
+    bh.limit(20).write.parquet(s"$path/legacy")
+    val ex = intercept[IllegalArgumentException] {
+      ConsolidatedStore.appendConcurrent(spark, path, bh.limit(40))
+    }
+    assert(ex.getMessage.contains("foreign"), ex.getMessage)
+    assert(!StoreLog.exists(spark, path), "nothing may be committed")
+    assert(!new java.io.File(path).list().exists(_.endsWith(".parquet")),
+      "nothing may be written")
   }
 
   test("commitReplacing: disjoint racer rebases the archive to the next version") {

@@ -101,12 +101,14 @@ class StoreLogSpec extends AnyFunSuite {
     val pre = spark.read.parquet(dir).count()
     ConsolidatedStore.append(spark, dir,
       bh.filter(col("database_name") === "db4"))
+    // baseline first (v1 = the pre-log table), then the append itself
     val commits = StoreLog.readCommits(spark, dir)
-    assert(commits.size === 1)
-    // version 1 covers the WHOLE live table, not just the new batch
-    assert(StoreLog.snapshot(spark, dir, 1).count() ===
+    assert(commits.map(_.op) === Seq("baseline", "append"))
+    assert(commits.head.removes.isEmpty)
+    assert(StoreLog.snapshot(spark, dir, 1).count() === pre)
+    assert(StoreLog.snapshot(spark, dir, 2).count() ===
       ConsolidatedStore.read(spark, dir).count())
-    assert(StoreLog.snapshot(spark, dir, 1).count() > pre)
+    assert(StoreLog.snapshot(spark, dir, 2).count() > pre)
   }
 
   test("log checkpoints bound hot-path reads to the tail: head state " +

@@ -10,9 +10,10 @@ import graft.store.{ConsolidatedStore, StoreMeta}
 
 /** The sidecar's one non-negotiable invariant: zone-map pruning must
   * NEVER drop a true duplicate. For any sequence of (overlapping,
-  * null-carrying) batches, the pruned append and the full-scan append
-  * must leave byte-identical stores — the sidecar is a cache, not a
-  * semantics change.
+  * null-carrying) batches, both entries of the claim loop (`append`,
+  * `appendConcurrent`) and the full-scan append must leave identical
+  * stores — rows, null-safe keys and LogIDs: the sidecar and the commit
+  * log are caches and arbiters, not a semantics change.
   */
 class StoreProps extends Properties("store") {
 
@@ -51,26 +52,36 @@ class StoreProps extends Properties("store") {
       .withColumn("last_lsn", col("last_l").cast("decimal(25,0)"))
       .drop("t_s", "first_l", "last_l")
 
+  // every column the batches carry plus the assigned LogID, keys
+  // null-safe (Row.toString renders a null device as "null")
   private def contents(path: String): Seq[String] =
     spark.read.parquet(path)
-      .select(ConsolidatedStore.dedupKey.map(col): _*)
+      .select((Seq("LogID", "database_name", "physical_device_name",
+        "backup_start_date", "backup_finish_date", "first_lsn", "last_lsn")
+      ).map(col): _*)
       .collect().map(_.toString).sorted.toSeq
 
-  property("appendPruned ≡ appendFullScan row-for-row, any batch sequence") =
+  private def keys(path: String): Seq[String] =
+    spark.read.parquet(path)
+      .select(ConsolidatedStore.dedupKey.map(col): _*)
+      .collect().map(_.toString).toSeq
+
+  property("append ≡ appendConcurrent ≡ appendFullScan, any batch sequence") =
     Prop.forAll(genBatches) { batches =>
-      val pruned = tmp(); val full = tmp()
+      val plain = tmp(); val conc = tmp(); val full = tmp()
       batches.foreach { b =>
         val df = frame(b)
-        // public append resolves to the sidecar-pruned path on flat stores
-        ConsolidatedStore.append(spark, pruned, df)
+        ConsolidatedStore.append(spark, plain, df)
+        ConsolidatedStore.appendConcurrent(spark, conc, df)
         ConsolidatedStore.appendFullScan(spark, full, df,
           partitionBy = Nil, sortWithin = Seq("database_name", "last_lsn"))
       }
-      val p = contents(pruned)
-      val f = contents(full)
-      val sane = // and both stores really deduped: unique null-safe keys
-        p.distinct.size == p.size && f.distinct.size == f.size
-      val consistent = !StoreMeta.load(spark, pruned).get.dirty
-      Prop(p == f && sane && consistent) :| s"pruned=${p.size} full=${f.size}"
+      val (p, c, f) = (contents(plain), contents(conc), contents(full))
+      val sane = // every store really deduped: unique null-safe keys
+        Seq(plain, conc, full).map(keys).forall(k => k.distinct.size == k.size)
+      val consistent = Seq(plain, conc)
+        .forall(s => !StoreMeta.load(spark, s).get.dirty)
+      Prop(p == f && c == f && sane && consistent) :|
+        s"append=${p.size} appendConcurrent=${c.size} full=${f.size}"
     }
 }
