@@ -22,13 +22,22 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.GraftExtensions.install(spark)
-    new java.io.File(outDir).mkdirs()
-    // comma-separated substrings to restrict the dump (local iteration
-    // only — the driver sets no filter and gets every query)
+    // comma-separated substrings to restrict the dump; unset dumps every
+    // query
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    dump(spark, sfDir, outDir, n => only.forall(_.exists(n.contains)))
+    spark.stop()
+  }
+
+  /** Write `oracle_sql.json` and each selected query's result as parquet
+    * under `outDir/<name>/` — the shape `scripts/check.py` compares.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      selected: String => Boolean): Unit = {
+    new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in an oracle's SQL would otherwise make the compare's
+    // json.load fail and silently drop every oracle.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -39,16 +48,14 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+      .filter { case (n, _) => selected(n) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    // oracle_sql.json FIRST, before any query runs: if the harness kills
-    // this process mid-dump (timeout, OOM), the compare still has its
-    // oracle map and every completed query dir — a partial-but-useful
-    // artifact instead of the round-15 empty `{}` (no oracle file → the
-    // driver's json.load had nothing → correctness silently vanished)
+    // oracle_sql.json FIRST, before any query runs: if this process is
+    // killed mid-dump (timeout, OOM), the compare still has its oracle
+    // map and every completed query dir, not an empty `{}`
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+      .filter { case (n, _) => selected(n) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -56,6 +63,5 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    spark.stop()
   }
 }

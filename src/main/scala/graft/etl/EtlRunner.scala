@@ -327,7 +327,7 @@ object EtlRunner {
           // abort-the-run semantics (Add-BackupHistoryToTarget.ps1:104-113).
           case scala.util.control.NonFatal(e) if concurrentLoads =>
             SourceBatchResult(server, n, 0, None,
-              Some(s"load failed: ${e.getClass.getSimpleName}"))
+              Some(s"load failed: ${e.getClass.getSimpleName}: ${e.getMessage}"))
         } finally
           // refcounted eager release: the LAST sharer of a memoized
           // batch frees the checkpoint blocks; sole owners free at once

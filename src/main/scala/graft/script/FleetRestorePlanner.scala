@@ -75,8 +75,8 @@ object FleetRestorePlanner {
 
     // phase 1: newest restorable full per group, collapsed to one row.
     // backup_start_date mirrors the scalar planner exactly: the
-    // device-ordered head stripe's value (RestoreScriptGenerator
-    // collectStripes orders by physical_device_name and reads .head).
+    // device-ordered head stripe's value (RestoreScriptGenerator.plan
+    // orders stripes by physical_device_name and reads the head).
     //
     // One row per (db, key) — driver-small — and consumed by THREE later
     // phases (full steps, diff base, log base) inside a single action.
@@ -156,8 +156,7 @@ object FleetRestorePlanner {
           .orderBy(col("backup_start_date"), col("last_lsn"), col("first_lsn"))))
       .filter(col("__rk") === 1)
       .drop("__rk")
-    // max(backup_start_date) matches collapseLogStripes, which the
-    // scalar log phase reads its start dates from
+    // max(backup_start_date) matches the scalar log phase's collapse
     val logSets = inRange.union(overlap).dropDuplicates("LogID")
       .groupBy((gk ++ Seq(col("first_lsn"), col("last_lsn"))): _*)
       .agg(

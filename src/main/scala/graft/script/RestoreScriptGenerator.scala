@@ -3,11 +3,10 @@ package graft.script
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.{BackupTypes, DeviceTypes, RestoreStep, Schemas}
-import graft.restore.RestoreQueries
+import graft.model.{BackupTypes, DbFileInfo, DeviceTypes, RestoreStep, Schemas}
+import graft.store.StoreMeta
 
 /** Parameters of `Utility.GenerateRestoreScript` (reference sql:428-447).
   * Exactly one of `sourceServer` / `sourceAgName` must be set
@@ -33,17 +32,39 @@ final case class RestorePlan(steps: Seq[RestoreStep], script: String) {
 }
 
 /** The point-in-time restore planner (`Utility.GenerateRestoreScript`,
-  * reference sql:427-1312), as a driver-side Scala orchestration over
-  * lazily-planned DataFrame phases — each phase is a distributed query
-  * on the consolidated table; only scalars (chosen LSNs, copy-only flag,
-  * file-info JSON) are collected, exactly like the reference's
-  * `@last_lsn` handoffs (sql:832, 1031).
+  * reference sql:427-1312) as one Spark action and a planner on the
+  * driver. The reference reads one database's rows under one server or
+  * AG key through its covering index (sql:35-37) and hands scalars from
+  * phase to phase (`@last_lsn`, sql:832, 1031). [[generate]] collects
+  * that slice once — only the columns the phases read, with each full's
+  * DBFileInformation JSON already parsed — and [[plan]] runs every phase
+  * over the collected rows in plain Scala.
+  *
+  * The slice is one database's history under one key, which the
+  * retention purge bounds: about 1,200 rows for 180 days of 4-hourly log
+  * backups. Log backups after the restore time are collected too, as
+  * candidates for the overlap log.
   *
   * Deliberate deviations (SURVEY §4): deterministic orderings under every
   * TOP(1)/string_agg the reference leaves undefined; LF instead of
   * `char(13)` CR; STOPAT appended rather than spliced via `replace`.
   */
 object RestoreScriptGenerator {
+
+  /** One backup row of the collected slice: the columns the phases read.
+    * `files` is the parsed DBFileInformation, read on Full rows only.
+    */
+  final case class SliceRow(
+      logId: Long,
+      backupType: String,
+      deviceType: Option[Int],
+      device: Option[String],
+      start: Timestamp,
+      firstLsn: BigDecimal,
+      lastLsn: BigDecimal,
+      copyOnly: Boolean,
+      position: Option[Int],
+      files: Option[Seq[DbFileInfo]])
 
   private val ExampleMove =
     "-- MOVE N'<logical_data_file>' TO N'X:/DataPath/DataFile.mdf'," +
@@ -78,57 +99,65 @@ object RestoreScriptGenerator {
     else if (path.contains("\\")) path + "\\"
     else path + "/"
 
-  /** Build the MOVE clause from the chosen full's DBFileInformation JSON
-    * (reference sql:715-763): data files → restoreDataPath, log files →
+  /** The MOVE clause from the chosen full's file list (reference
+    * sql:715-763): data files → restoreDataPath, log files →
     * restoreLogPath, either defaulting to the file's original directory;
     * optional prefix on basenames; files ordered by (file_type,
     * logical_name) — the reference aggregates in undefined order.
     */
-  def buildMoveClause(
-      spark: SparkSession,
-      fileInfoJson: Option[String],
-      opts: RestoreScriptOptions): String =
+  private def moveClause(files: Seq[DbFileInfo], opts: RestoreScriptOptions): String =
     opts.moveCommand.getOrElse {
-      fileInfoJson.filter(_.nonEmpty) match {
-        case None => ExampleMove
-        case Some(json) =>
-          import spark.implicits._
-          // F11: shred via from_json + explode, the openjson analog
-          val files = Seq(json).toDF("j")
-            .select(explode(from_json(col("j"), Schemas.dbFileInfoArray)).as("f"))
-            .select("f.logical_name", "f.physical_name", "f.file_type")
-            .collect()
-          val moves = files.sortBy(r => (r.getString(2), r.getString(0))).map { r =>
-            val (origDir, base) = splitPath(r.getString(1))
-            val targetDir = (r.getString(2) match {
-              case "L" => opts.restoreLogPath
-              case _ => opts.restoreDataPath
-            }).map(normalizeDir).getOrElse(origDir)
-            val name = opts.fileNamePrefix.getOrElse("") + base
-            s"MOVE N'${r.getString(0)}' TO N'$targetDir$name'"
-          }
-          if (moves.isEmpty) ExampleMove else moves.mkString(",\n")
+      val moves = files.sortBy(f => (f.file_type, f.logical_name)).map { f =>
+        val (origDir, base) = splitPath(f.physical_name)
+        val targetDir = (f.file_type match {
+          case "L" => opts.restoreLogPath
+          case _ => opts.restoreDataPath
+        }).map(normalizeDir).getOrElse(origDir)
+        val name = opts.fileNamePrefix.getOrElse("") + base
+        s"MOVE N'${f.logical_name}' TO N'$targetDir$name'"
       }
+      if (moves.isEmpty) ExampleMove else moves.mkString(",\n")
     }
 
-  private def deviceClause(deviceType: Int, name: String): String =
-    (if (deviceType == DeviceTypes.Url) "URL = N'" else "DISK = N'") + name + "'"
+  /** A full or diff stripe with no device name renders as `N'null'`;
+    * the log phase drops such a stripe, as Spark's `array_join` does.
+    */
+  private def deviceClause(r: SliceRow): String =
+    (if (r.deviceType.contains(DeviceTypes.Url)) "URL = N'" else "DISK = N'") +
+      r.device.orNull + "'"
 
-  /** Collect one phase's chosen stripes ordered by device name (O3). */
-  private def collectStripes(df: DataFrame): Array[Row] =
-    df.select("physical_device_name", "device_type", "backup_start_date",
-        "first_lsn", "last_lsn", "is_copy_only", "position", "DBFileInformation")
-      .orderBy("physical_device_name")
-      .collect()
+  /** Spark's string order: UTF-8 bytes, which `String.compareTo`'s UTF-16
+    * order contradicts for supplementary characters.
+    */
+  private val utf8: Ordering[String] = (a, b) => StoreMeta.cmpUtf8(a, b)
 
-  private def fromClause(stripes: Array[Row]): String =
-    stripes.map(r => deviceClause(r.getInt(1), r.getString(0))).mkString(",\n")
+  /** `orderBy(physical_device_name)`: nulls first. */
+  private val byDevice: Ordering[SliceRow] =
+    Ordering.by[SliceRow, Option[String]](_.device)(Ordering.Option(utf8))
+
+  /** Spark's timestamp: whole microseconds, the fraction truncated. */
+  private def micros(t: Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+
+  /** W1+W3 (reference sql:562, 862): every stripe of the newest set —
+    * `dense_rank` over `last_lsn` desc keeps LSN ties — in device order,
+    * so the head stripe is the one the step's scalars come from.
+    */
+  private def newestSet(rows: Seq[SliceRow]): Seq[SliceRow] =
+    if (rows.isEmpty) rows
+    else {
+      val top = rows.map(_.lastLsn).max
+      rows.filter(_.lastLsn == top).sorted(byDevice)
+    }
+
+  private def fromClause(stripes: Seq[SliceRow]): String =
+    stripes.map(deviceClause).mkString(",\n")
 
   /** `@ConcatenatedPhysicalDevice` (reference sql:786-787): the chosen
     * set's device names as a plain csv, device-name order.
     */
-  private def deviceCsv(stripes: Array[Row]): String =
-    stripes.map(_.getString(0)).mkString(", ")
+  private def deviceCsv(stripes: Seq[SliceRow]): String =
+    stripes.map(_.device.orNull).mkString(", ")
 
   def generate(
       spark: SparkSession,
@@ -138,46 +167,59 @@ object RestoreScriptGenerator {
       : RestorePlan = {
     val (keyCol, keyVal) = keyOf(opts)
     val restoreTo = opts.restoreToTime.getOrElse(now())
-    // the planner runs ~5 actions over this slice (full/diff/log phases +
-    // scalar collects); cache it so upstream lineage executes once
-    val slice = bh
-      .filter(col("database_name") === opts.sourceDb)
-      .filter(col(keyCol) === keyVal)
-      .cache()
-    try generateFromSlice(spark, slice, opts, keyVal, restoreTo)
-    finally slice.unpersist()
+    // the one action: rows at or before the restore time, plus later log
+    // backups (overlap candidates); from_json on Full rows only
+    val rows = bh
+      .filter(col("database_name") === opts.sourceDb && col(keyCol) === keyVal)
+      .filter(col("backup_start_date") <= lit(restoreTo) ||
+        col("BackupType") === BackupTypes.Log)
+      .select(col("LogID"), col("BackupType"), col("device_type"),
+        col("physical_device_name"), col("backup_start_date"), col("first_lsn"),
+        col("last_lsn"), col("is_copy_only"), col("position"),
+        when(col("BackupType") === BackupTypes.Full,
+          from_json(col("DBFileInformation"), Schemas.dbFileInfoArray)))
+      .collect()
+      .map { r =>
+        SliceRow(r.getLong(0), r.getString(1),
+          Option(r.getAs[Integer](2)).map(_.toInt), Option(r.getString(3)),
+          r.getTimestamp(4), BigDecimal(r.getDecimal(5)), BigDecimal(r.getDecimal(6)),
+          !r.isNullAt(7) && r.getBoolean(7), Option(r.getAs[Integer](8)).map(_.toInt),
+          Option(r.getSeq[Row](9)).map(_.toSeq.map(f =>
+            if (f == null) DbFileInfo(null, null, null, null, null)
+            else DbFileInfo(f.getString(0), f.getString(1), f.getString(2),
+              f.getString(3), f.getString(4)))))
+      }
+    plan(rows.toSeq, opts, restoreTo)
   }
 
-  private def generateFromSlice(
-      spark: SparkSession,
-      slice: DataFrame,
-      opts: RestoreScriptOptions,
-      keyVal: String,
-      restoreTo: Timestamp): RestorePlan = {
+  /** The restore plan over one (database, key) slice, without Spark,
+    * under Spark's semantics: string order is UTF-8 binary with nulls
+    * first, the restore time is truncated to microseconds, and striped
+    * log sets collapse the way
+    * [[graft.restore.RestoreQueries.collapseLogStripes]] does.
+    */
+  def plan(rows: Seq[SliceRow], opts: RestoreScriptOptions, restoreTo: Timestamp)
+      : RestorePlan = {
+    val (_, keyVal) = keyOf(opts)
     val restoreTimeProvided = opts.restoreToTime.isDefined // F8, sql:447
+    val toUs = micros(restoreTo)
+    val inRange = rows.filter(r => micros(r.start) <= toUs)
 
     // ---- phase 1: base FULL (sql:560-685) -------------------------------
-    val fulls = RestoreQueries.rankOneStripes(
-      slice.filter(col("BackupType") === BackupTypes.Full)
-        .filter(col("device_type").isin(DeviceTypes.Restorable.map(Integer.valueOf): _*))
-        .filter(col("backup_start_date") <= lit(restoreTo)),
-      Seq("database_name"))
-    val fullStripes = collectStripes(fulls)
-    if (fullStripes.isEmpty)
+    val fulls = newestSet(inRange.filter(r => r.backupType == BackupTypes.Full &&
+      r.deviceType.exists(DeviceTypes.Restorable.contains)))
+    if (fulls.isEmpty)
       throw new IllegalStateException(
         s"No FULL backup found for ${opts.sourceDb} on $keyVal at or before $restoreTo")
+    val full = fulls.head
     val dest = opts.destinationDb.getOrElse(opts.sourceDb) // sql:681-685
-    val fullIsCopyOnly = !fullStripes.head.isNullAt(5) && fullStripes.head.getBoolean(5)
-    val fullLsn = fullStripes.head.getDecimal(4)
-    val moveClause = buildMoveClause(
-      spark, Option(fullStripes.head.getString(7)), opts)
-    val fullFrom = fromClause(fullStripes)
+    val fullFrom = fromClause(fulls)
     val fullCmd =
-      s"RESTORE DATABASE [$dest] FROM\n$fullFrom\nWITH $moveClause,\n" +
+      s"RESTORE DATABASE [$dest] FROM\n$fullFrom\n" +
+        s"WITH ${moveClause(full.files.getOrElse(Nil), opts)},\n" +
         "NORECOVERY, NOUNLOAD, STATS = 5;"
-    val fullStep = RestoreStep(1L, dest, BackupTypes.Full,
-      fullStripes.head.getTimestamp(2), BigDecimal(fullStripes.head.getDecimal(3)),
-      BigDecimal(fullLsn), fullFrom, deviceCsv(fullStripes), None, fullCmd)
+    val fullStep = RestoreStep(1L, dest, BackupTypes.Full, full.start,
+      full.firstLsn, full.lastLsn, fullFrom, deviceCsv(fulls), None, fullCmd)
 
     // ---- phase 2: DIFF unless the full was copy-only (sql:837-1033) -----
     // Fidelity note: the reference SCRIPT proc's diff phase is exactly
@@ -188,67 +230,56 @@ object RestoreScriptGenerator {
     // RestoreQueries.lastDiffBackupFor/lastDiffBackupsPerKey (q12). A
     // diff based on a newer full the device filter excluded would be
     // mis-selected by the REFERENCE too; byte-parity keeps that shape.
-    val diffStep: Option[RestoreStep] =
-      if (fullIsCopyOnly) None // 'goto Log_Backups' (sql:850)
-      else {
-        val diffs = RestoreQueries.rankOneStripes(
-          slice.filter(col("BackupType") === BackupTypes.Diff)
-            .filter(col("last_lsn") > lit(fullLsn))
-            .filter(col("backup_start_date") <= lit(restoreTo)),
-          Seq("database_name"))
-        val stripes = collectStripes(diffs)
-        if (stripes.isEmpty) None
-        else {
-          val from = fromClause(stripes)
-          val cmd = s"RESTORE DATABASE [$dest] FROM\n$from\nWITH " +
-            "NORECOVERY, NOUNLOAD, STATS = 5;"
-          Some(RestoreStep(2L, dest, BackupTypes.Diff,
-            stripes.head.getTimestamp(2), BigDecimal(stripes.head.getDecimal(3)),
-            BigDecimal(stripes.head.getDecimal(4)), from, deviceCsv(stripes),
-            None, cmd))
-        }
-      }
-    val baseLsn = diffStep.map(_.last_lsn.bigDecimal).getOrElse(fullLsn)
+    val diffs =
+      if (full.copyOnly) Nil // 'goto Log_Backups' (sql:850)
+      else newestSet(inRange.filter(r =>
+        r.backupType == BackupTypes.Diff && r.lastLsn > full.lastLsn))
+    val diffStep = diffs.headOption.map { diff =>
+      val from = fromClause(diffs)
+      val cmd = s"RESTORE DATABASE [$dest] FROM\n$from\nWITH " +
+        "NORECOVERY, NOUNLOAD, STATS = 5;"
+      RestoreStep(2L, dest, BackupTypes.Diff, diff.start, diff.firstLsn,
+        diff.lastLsn, from, deviceCsv(diffs), None, cmd)
+    }
+    val baseLsn = diffStep.fold(full.lastLsn)(_.last_lsn)
 
     // ---- phase 3: LOG chain + overlap log (sql:1044-1259) ---------------
-    val logsInRange = slice
-      .filter(col("BackupType") === BackupTypes.Log)
-      .filter(col("last_lsn") > lit(baseLsn))
-      .filter(col("backup_start_date") <= lit(restoreTo))
+    val (logsInRange, logsAfter) = rows
+      .filter(r => r.backupType == BackupTypes.Log && r.lastLsn > baseLsn)
+      .partition(r => micros(r.start) <= toUs)
     // first log backup AFTER the restore time (U1/O7, sql:1056-1065) —
     // the reference's TOP(1) has no ORDER BY; we impose (start, last
-    // lsn, first lsn) and keep every row of that first backup SET (rank,
-    // not a row limit), so a striped overlap log restores from all of
-    // its media. The slice is one database, so the window is one group:
-    // coalesced to one partition, it needs no exchange
-    val overlapLog = slice
-      .filter(col("BackupType") === BackupTypes.Log)
-      .filter(col("last_lsn") > lit(baseLsn))
-      .filter(col("backup_start_date") > lit(restoreTo))
-      .coalesce(1)
-      .withColumn("__rk", rank().over(Window.partitionBy("database_name")
-        .orderBy(col("backup_start_date"), col("last_lsn"), col("first_lsn"))))
-      .filter(col("__rk") === 1)
-      .drop("__rk")
-    val chain = RestoreQueries
-      .collapseLogStripes(logsInRange.union(overlapLog).dropDuplicates("LogID"))
-      .orderBy(col("last_lsn"))
-      .select("backup_start_date", "first_lsn", "last_lsn", "position",
-        "from_clause", "physical_devices")
-      .collect()
+    // lsn, first lsn) and keep every row of that first backup SET, so a
+    // striped overlap log restores from all of its media
+    val setOrder = Ordering.by((r: SliceRow) => (micros(r.start), r.lastLsn, r.firstLsn))
+    val overlap = logsAfter.minOption(setOrder).toSeq
+      .flatMap(first => logsAfter.filter(setOrder.equiv(_, first)))
+    // striped-log collapse (sql:1044-1128): one set per (first, last)
+    // LSN pair — the pair fixes the reference's min(LogID) canonical id
+    val chain = (logsInRange ++ overlap).distinctBy(_.logId)
+      .groupBy(r => (r.firstLsn, r.lastLsn)).values.toSeq
+      .sortBy(set => (set.head.lastLsn, set.head.firstLsn))
     val stopAtLiteral = restoreTo.toString.takeWhile(_ != '.') // seconds precision
-    val nLogs = chain.length
-    val logSteps = chain.zipWithIndex.map { case (r, i) =>
-      val withStopAt = restoreTimeProvided && i >= nLogs - 2 // sql:1266-1272
-      val from = r.getString(4)
-      val base = s"RESTORE LOG [$dest] FROM\n$from\nWITH FILE = ${r.getInt(3)}, " +
+    val logSteps = chain.zipWithIndex.map { case (set, i) =>
+      val withStopAt = restoreTimeProvided && i >= chain.size - 2 // sql:1266-1272
+      // `array_sort` over (device, clause); a stripe with no device name
+      // has a null clause, which `array_join` skips, and the device csv
+      // drops it
+      val stripes = set.filter(_.device.isDefined)
+        .sorted(byDevice.orElseBy(deviceClause)(utf8))
+      val from = stripes.map(deviceClause).mkString(",\n")
+      val position = set.flatMap(_.position).maxOption.getOrElse(
+        throw new IllegalStateException(
+          s"log backup set ${set.head.firstLsn}-${set.head.lastLsn} has no position"))
+      val base = s"RESTORE LOG [$dest] FROM\n$from\nWITH FILE = $position, " +
         "NORECOVERY, NOUNLOAD, STATS = 10;"
       val cmd = if (withStopAt)
         base.dropRight(1) + s", STOPAT = '$stopAtLiteral';" // F3 analog
       else base
       RestoreStep(diffStep.size + 2L + i, dest, BackupTypes.Log,
-        r.getTimestamp(0), BigDecimal(r.getDecimal(1)), BigDecimal(r.getDecimal(2)),
-        from, r.getString(5), if (withStopAt) Some(stopAtLiteral) else None, cmd)
+        set.maxBy(r => micros(r.start)).start, set.head.firstLsn, set.head.lastLsn,
+        from, stripes.flatMap(_.device).mkString(", "),
+        if (withStopAt) Some(stopAtLiteral) else None, cmd)
     }
 
     val steps = Seq(fullStep) ++ diffStep.toSeq ++ logSteps

@@ -401,6 +401,14 @@ object StoreMeta {
         min(unix_micros(col("backup_start_date"))).as("start_min_us"),
         max(unix_micros(col("backup_start_date"))).as("start_max_us"))
       .collect().toSeq
+    // a file written outside the store (no LogID column) reads as all-NULL
+    // LogIDs: name it instead of failing on the row access below
+    val noLogIds = grouped.filter(_.isNullAt(1))
+      .map(r => relativize(rootPath, r.getString(0)))
+    if (noLogIds.nonEmpty)
+      throw new IllegalStateException(
+        s"data files under $root lack LogIDs (written outside the store?): " +
+          noLogIds.sorted.mkString(", "))
     // input_file_name() may return a zero-row file's name never (no rows
     // → no group): emit a sentinel so load() does not re-mark such a
     // file unknown-and-dirty on every subsequent append. Its date range
@@ -836,7 +844,7 @@ object StoreMeta {
     * use); `String.compareTo` compares UTF-16 code units and disagrees
     * for supplementary characters, which would mis-prune.
     */
-  private[store] def cmpUtf8(a: String, b: String): Int = {
+  private[graft] def cmpUtf8(a: String, b: String): Int = {
     val x = a.getBytes(StandardCharsets.UTF_8)
     val y = b.getBytes(StandardCharsets.UTF_8)
     val n = math.min(x.length, y.length)

@@ -613,6 +613,8 @@ class EtlSpec extends AnyFunSuite {
     assert(res.size == 2)
     assert(res.forall(_.error.exists(_.startsWith("load failed"))),
       res.mkString("; "))
+    // the report names the cause, not just an exception class
+    assert(res.forall(_.error.exists(_.contains("LogID"))), res.mkString("; "))
     // watermarks were not advanced — the next run re-extracts the batch
     assert(WatermarkStore.read(spark, wmPath).isEmpty)
   }

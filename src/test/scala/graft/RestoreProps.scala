@@ -1,10 +1,14 @@
 package graft
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.Prop.propBoolean
 
 import graft.restore.RestoreQueries
+import graft.script.{FleetRestorePlanner, RestoreScriptGenerator, RestoreScriptOptions}
 import graft.store.ConsolidatedStore
 
 /** Property-based invariants over random backup timelines (SURVEY §5.4):
@@ -112,5 +116,78 @@ class RestoreProps extends Properties("restore") {
         fresh1.count() + fresh2.count() == total &&
           ConsolidatedStore.mergeNew(df, df).isEmpty
       } finally { df.unpersist(); () }
+    }
+
+  /** A planner timeline: each set has its own start time (hours apart),
+    * LSN range and device type; fulls may sit on a non-restorable device
+    * (7 = virtual device) and any set may be striped, so the first log
+    * after the restore time can be a striped set. Stripe names mix ASCII,
+    * a BMP character and a surrogate pair, whose UTF-16 and UTF-8 orders
+    * differ.
+    */
+  private final case class PlanSet(
+      typ: String, stripes: Int, copyOnly: Boolean, deviceType: Int)
+
+  private val genPlanSet: Gen[PlanSet] = for {
+    typ <- Gen.frequency(3 -> "Full", 2 -> "Diff", 5 -> "Log")
+    stripes <- Gen.frequency(3 -> 1, 2 -> 2, 1 -> 3)
+    copyOnly <- Gen.frequency(4 -> false, 1 -> true)
+    deviceType <- Gen.frequency(6 -> 2, 2 -> 9, 1 -> 7)
+  } yield PlanSet(typ, stripes, copyOnly, deviceType)
+
+  private val stripeNames = Vector("a", "\uFF21", "\uD83D\uDE00")
+
+  private val genPlanCase: Gen[(List[PlanSet], Int, Boolean, Int)] = for {
+    n <- Gen.choose(3, 16)
+    sets <- Gen.listOfN(n, genPlanSet)
+    k <- Gen.choose(0, n) // the restore time falls before set k
+    exact <- Gen.frequency(3 -> false, 1 -> true) // ... or at its start
+    rot <- Gen.choose(0, 2) // which name the first stripe takes
+  } yield (sets, k, exact, rot)
+
+  private val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+  private def startOf(i: Int) = new Timestamp(base + i * 3600000L)
+
+  private def planFrame(sets: List[PlanSet], rot: Int): DataFrame = {
+    val rows = sets.zipWithIndex.flatMap { case (s, i) =>
+      (0 until s.stripes).map { st =>
+        val name = stripeNames((st + rot) % stripeNames.size)
+        (i.toLong * 10 + st, s.typ, s"X:/bk/s${i}_$name.bak", startOf(i),
+          (i + 1) * 100L, (i + 1) * 100L + 99, s.copyOnly, s.deviceType,
+          "db", "srv")
+      }
+    } :+ // another server's backup of the same database, never planned
+      ((9999L, "Full", "X:/bk/other.bak", startOf(0), 50L, 99L, false, 2,
+        "db", "srv2"))
+    rows.toDF("LogID", "BackupType", "physical_device_name",
+        "backup_start_date", "first_l", "last_l", "is_copy_only",
+        "device_type", "database_name", "server_name")
+      .withColumn("ag_name", lit("ag"))
+      .withColumn("backup_finish_date", col("backup_start_date"))
+      .withColumn("first_lsn", col("first_l").cast("decimal(25,0)"))
+      .withColumn("last_lsn", col("last_l").cast("decimal(25,0)"))
+      .withColumn("position", (col("LogID") % 10 + 1).cast("int"))
+      .withColumn("DBFileInformation", lit(null).cast("string"))
+      .drop("first_l", "last_l")
+  }
+
+  property("generate equals the fleet planner's chain for its pair") =
+    Prop.forAll(genPlanCase) { case (sets, k, exact, rot) =>
+      val t = if (exact) startOf(k) else new Timestamp(startOf(k).getTime - 1800000L)
+      val bh = planFrame(sets, rot)
+      val fleet = FleetRestorePlanner.planAll(bh, "server_name", t)
+        .filter(col("database_name") === "db" && col("key") === "srv")
+        .select("restore_id", "backup_type", "backup_start_date", "last_lsn",
+          "from_clause", "physical_devices", "stopat")
+        .as[(Long, String, Timestamp, BigDecimal, String, String, Boolean)]
+        .collect().sortBy(_._1).toSeq
+      val scalar =
+        try RestoreScriptGenerator.generate(spark, bh,
+          RestoreScriptOptions(sourceDb = "db", sourceServer = Some("srv"),
+            restoreToTime = Some(t))).steps.map(s =>
+            (s.RestoreID, s.BackupType, s.backup_start_date, s.last_lsn,
+              s.from_clause, s.physical_devices, s.stop_at.isDefined))
+        catch { case _: IllegalStateException => Seq.empty } // no full by t
+      (scalar == fleet) :| s"scalar=$scalar fleet=$fleet"
     }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.RestoreStep
 import graft.script.{RestoreScriptGenerator, RestoreScriptOptions}
 
 /** Golden tests for the point-in-time restore planner (reference
@@ -79,6 +80,53 @@ class RestoreScriptSpec extends AnyFunSuite {
     assert(logs.map(_.last_lsn.toBigInt.toLong) == Seq(3000L, 3500L))
     assert(logs.last.from_clause == RestoreTimelines.stripedOverlapFrom)
     assert(logs.last.physical_devices == "X:/bk/log_2a.trn, X:/bk/log_2b.trn")
+  }
+
+  // Spark's orderings, pinned: device names whose UTF-16 and UTF-8 orders
+  // differ (U+FF21 sorts after a surrogate pair in UTF-16, before it in
+  // UTF-8), a log stripe with no device name, and a restore time 500 ns
+  // past a backup's start
+  private val orderings = bh(Seq(
+    (1L, "Full", "X:/\uD83D\uDE00.bak", "2024-01-01 01:00:00", 1000L, 2000L, false, 9, null),
+    (2L, "Full", "X:/\uFF21.bak", "2024-01-01 01:00:00", 1000L, 2000L, false, 2, fileInfoJson),
+    (3L, "Log", "X:/\uD83D\uDE00.trn", "2024-01-01 05:00:00", 2000L, 3000L, false, 9, null),
+    (4L, "Log", null, "2024-01-01 05:00:00", 2000L, 3000L, false, 2, null),
+    (5L, "Log", "X:/\uFF21.trn", "2024-01-01 05:00:00", 2000L, 3000L, false, 2, null),
+    (6L, "Log", "X:/bk/after.trn", "2024-01-01 05:00:01", 3000L, 3500L, false, 2, null),
+    (7L, "Log", "X:/bk/later.trn", "2024-01-01 06:00:00", 3500L, 4000L, false, 2, null)))
+
+  test("device orderings, a null device and sub-microsecond STOPAT time follow Spark") {
+    val t = Timestamp.valueOf("2024-01-01 05:00:00")
+    t.setNanos(500)
+    val plan = RestoreScriptGenerator.generate(spark, orderings,
+      RestoreScriptOptions(sourceDb = "DBAdmin", sourceServer = Some("srvA"),
+        restoreToTime = Some(t), restoreLogPath = Some("L:/newlog")))
+    def lsn(l: Long) = BigDecimal(l)
+    val stopAt = Some("2024-01-01 05:00:00")
+    val expected = Seq(
+      // UTF-8 order puts U+FF21 first, so its stripe's file info makes MOVE
+      RestoreStep(1L, "DBAdmin", "Full", Timestamp.valueOf("2024-01-01 01:00:00"),
+        lsn(1000), lsn(2000),
+        "DISK = N'X:/\uFF21.bak',\nURL = N'X:/\uD83D\uDE00.bak'",
+        "X:/\uFF21.bak, X:/\uD83D\uDE00.bak", None,
+        "RESTORE DATABASE [DBAdmin] FROM\nDISK = N'X:/\uFF21.bak',\n" +
+          "URL = N'X:/\uD83D\uDE00.bak'\nWITH MOVE N'db_data' TO N'X:\\data\\db.mdf',\n" +
+          "MOVE N'db_log' TO N'L:/newlog/db.ldf',\nNORECOVERY, NOUNLOAD, STATS = 5;"),
+      // a backup at the restore time's second is in range; the null
+      // device's stripe is in neither list
+      RestoreStep(2L, "DBAdmin", "Log", Timestamp.valueOf("2024-01-01 05:00:00"),
+        lsn(2000), lsn(3000),
+        "DISK = N'X:/\uFF21.trn',\nURL = N'X:/\uD83D\uDE00.trn'",
+        "X:/\uFF21.trn, X:/\uD83D\uDE00.trn", stopAt,
+        "RESTORE LOG [DBAdmin] FROM\nDISK = N'X:/\uFF21.trn',\n" +
+          "URL = N'X:/\uD83D\uDE00.trn'\nWITH FILE = 1, NORECOVERY, NOUNLOAD, " +
+          "STATS = 10, STOPAT = '2024-01-01 05:00:00';"),
+      RestoreStep(3L, "DBAdmin", "Log", Timestamp.valueOf("2024-01-01 05:00:01"),
+        lsn(3000), lsn(3500), "DISK = N'X:/bk/after.trn'", "X:/bk/after.trn", stopAt,
+        "RESTORE LOG [DBAdmin] FROM\nDISK = N'X:/bk/after.trn'\nWITH FILE = 1, " +
+          "NORECOVERY, NOUNLOAD, STATS = 10, STOPAT = '2024-01-01 05:00:00';"))
+    assert(plan.steps == expected)
+    assert(plan.script == expected.map(_.RestoreCommand).mkString("\n\n"))
   }
 
   test("copy-only full skips the diff phase") {
