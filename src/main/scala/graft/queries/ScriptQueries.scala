@@ -66,11 +66,13 @@ object ScriptQueries {
       |    AND b.backup_start_date <= TIMESTAMP '2024-01-20 00:00:00'
       |),
       |log_after AS (
-      |  SELECT b.* FROM bh b, base_lsn
-      |  WHERE b.backup_type = 'Log' AND b.last_lsn > base_lsn.lsn
-      |    AND b.backup_start_date > TIMESTAMP '2024-01-20 00:00:00'
-      |  ORDER BY b.backup_start_date, b.last_lsn, b.log_id
-      |  LIMIT 1
+      |  SELECT * EXCLUDE (rk) FROM (
+      |    SELECT b.*, rank() OVER (ORDER BY b.backup_start_date, b.last_lsn,
+      |                                      b.first_lsn) AS rk
+      |    FROM bh b, base_lsn
+      |    WHERE b.backup_type = 'Log' AND b.last_lsn > base_lsn.lsn
+      |      AND b.backup_start_date > TIMESTAMP '2024-01-20 00:00:00')
+      |  WHERE rk = 1
       |),
       |log_union AS (SELECT * FROM logs_in UNION SELECT * FROM log_after),
       |log_sets AS (
@@ -176,11 +178,13 @@ object ScriptQueries {
       |    AND b.backup_start_date <= TIMESTAMP '2024-01-20 00:00:00'
       |),
       |log_after AS (
-      |  SELECT b.* FROM bh b, base_lsn
-      |  WHERE b.backup_type = 'Log' AND b.last_lsn > base_lsn.lsn
-      |    AND b.backup_start_date > TIMESTAMP '2024-01-20 00:00:00'
-      |  ORDER BY b.backup_start_date, b.last_lsn, b.log_id
-      |  LIMIT 1
+      |  SELECT * EXCLUDE (rk) FROM (
+      |    SELECT b.*, rank() OVER (ORDER BY b.backup_start_date, b.last_lsn,
+      |                                      b.first_lsn) AS rk
+      |    FROM bh b, base_lsn
+      |    WHERE b.backup_type = 'Log' AND b.last_lsn > base_lsn.lsn
+      |      AND b.backup_start_date > TIMESTAMP '2024-01-20 00:00:00')
+      |  WHERE rk = 1
       |),
       |log_union AS (SELECT * FROM logs_in UNION SELECT * FROM log_after),
       |log_sets AS (
@@ -308,7 +312,7 @@ object ScriptQueries {
        |${p}logs0 AS (
        |  SELECT b.database_name, b.$keyCol, b.first_lsn, b.last_lsn,
        |         b.device_type, b.physical_device_name, b.backup_start_date,
-       |         b.log_id, base.base_steps
+       |         base.base_steps
        |  FROM $rel b
        |  JOIN ${p}base base ON b.database_name = base.database_name
        |           AND b.$keyCol = base.$keyCol
@@ -319,12 +323,12 @@ object ScriptQueries {
        |  WHERE backup_start_date <= TIMESTAMP '2024-01-20 00:00:00'
        |),
        |${p}overlap AS (
-       |  SELECT * EXCLUDE (rn) FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY database_name, $keyCol
-       |                ORDER BY backup_start_date, last_lsn, log_id) AS rn
+       |  SELECT * EXCLUDE (rk) FROM (
+       |    SELECT *, rank() OVER (PARTITION BY database_name, $keyCol
+       |                ORDER BY backup_start_date, last_lsn, first_lsn) AS rk
        |    FROM ${p}logs0
        |    WHERE backup_start_date > TIMESTAMP '2024-01-20 00:00:00')
-       |  WHERE rn = 1
+       |  WHERE rk = 1
        |),
        |${p}log_union AS (
        |  SELECT * FROM ${p}in_range UNION ALL SELECT * FROM ${p}overlap
@@ -367,9 +371,9 @@ object ScriptQueries {
     * pass, INCLUDING the server→AG fallback (reference sql:145-170): the
     * fixture nulls db2's `server_name` so db2 is only plannable via its
     * availability group, forcing [[FleetRestorePlanner.planAllWithFallback]]
-    * down the anti-join + re-plan branch. The oracle runs the same plan
-    * CTEs twice — keyed by server, then by ag over the unplanned
-    * remainder — mirroring the fallback at per-database granularity.
+    * down its AG fallback. The oracle runs the same plan CTEs twice —
+    * keyed by server, then by ag over the unplanned remainder — mirroring
+    * the fallback at per-database granularity.
     * Per-pair equivalence with the scalar planner is additionally
     * asserted in FleetPlannerSpec.
     */

@@ -38,7 +38,8 @@ final case class RestorePlan(steps: Seq[RestoreStep], script: String) {
   * phase to phase (`@last_lsn`, sql:832, 1031). [[generate]] collects
   * that slice once — only the columns the phases read, with each full's
   * DBFileInformation JSON already parsed — and [[plan]] runs every phase
-  * over the collected rows in plain Scala.
+  * over the collected rows in plain Scala. [[FleetRestorePlanner]] runs
+  * the same [[plan]] per database over the same slice projection.
   *
   * The slice is one database's history under one key, which the
   * retention purge bounds: about 1,200 rows for 180 days of 4-hourly log
@@ -119,45 +120,73 @@ object RestoreScriptGenerator {
       if (moves.isEmpty) ExampleMove else moves.mkString(",\n")
     }
 
-  /** A full or diff stripe with no device name renders as `N'null'`;
-    * the log phase drops such a stripe, as Spark's `array_join` does.
-    */
   private def deviceClause(r: SliceRow): String =
     (if (r.deviceType.contains(DeviceTypes.Url)) "URL = N'" else "DISK = N'") +
-      r.device.orNull + "'"
+      r.device.mkString + "'"
 
   /** Spark's string order: UTF-8 bytes, which `String.compareTo`'s UTF-16
     * order contradicts for supplementary characters.
     */
   private val utf8: Ordering[String] = (a, b) => StoreMeta.cmpUtf8(a, b)
 
-  /** `orderBy(physical_device_name)`: nulls first. */
-  private val byDevice: Ordering[SliceRow] =
-    Ordering.by[SliceRow, Option[String]](_.device)(Ordering.Option(utf8))
+  /** Stripe order within a backup set: named stripes as
+    * `array_sort(struct(physical_device_name, clause))` orders them, then
+    * the stripes with no device name, which no list shows
+    * (`array_join` and `string_agg` skip nulls). A set's head is thus its
+    * first named stripe.
+    */
+  private val stripeOrder: Ordering[SliceRow] =
+    Ordering.by((r: SliceRow) => (r.device.isEmpty, r.device.mkString, deviceClause(r)))(
+      Ordering.Tuple3(Ordering.Boolean, utf8, utf8))
 
   /** Spark's timestamp: whole microseconds, the fraction truncated. */
   private def micros(t: Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
 
   /** W1+W3 (reference sql:562, 862): every stripe of the newest set —
-    * `dense_rank` over `last_lsn` desc keeps LSN ties — in device order,
-    * so the head stripe is the one the step's scalars come from.
+    * `dense_rank` over `last_lsn` desc keeps LSN ties — in stripe order.
     */
   private def newestSet(rows: Seq[SliceRow]): Seq[SliceRow] =
     if (rows.isEmpty) rows
     else {
       val top = rows.map(_.lastLsn).max
-      rows.filter(_.lastLsn == top).sorted(byDevice)
+      rows.filter(_.lastLsn == top).sorted(stripeOrder)
     }
 
   private def fromClause(stripes: Seq[SliceRow]): String =
-    stripes.map(deviceClause).mkString(",\n")
+    stripes.filter(_.device.isDefined).map(deviceClause).mkString(",\n")
 
-  /** `@ConcatenatedPhysicalDevice` (reference sql:786-787): the chosen
-    * set's device names as a plain csv, device-name order.
+  /** `@ConcatenatedPhysicalDevice` (reference sql:786-787): the set's
+    * device names as a plain csv, in stripe order.
     */
   private def deviceCsv(stripes: Seq[SliceRow]): String =
-    stripes.map(_.device.orNull).mkString(", ")
+    stripes.flatMap(_.device).mkString(", ")
+
+  /** The slice columns the phases read, projected once over `bh`: rows at
+    * or before the restore time plus every log backup (overlap
+    * candidates), DBFileInformation parsed on Full rows only. The `keep`
+    * columns follow the ten that [[decode]] reads.
+    */
+  private[script] def slice(bh: DataFrame, restoreTo: Timestamp, keep: Seq[String])
+      : DataFrame =
+    bh.filter(col("backup_start_date") <= lit(restoreTo) ||
+        col("BackupType") === BackupTypes.Log)
+      .select((Seq(col("LogID"), col("BackupType"), col("device_type"),
+        col("physical_device_name"), col("backup_start_date"), col("first_lsn"),
+        col("last_lsn"), col("is_copy_only"), col("position"),
+        when(col("BackupType") === BackupTypes.Full,
+          from_json(col("DBFileInformation"), Schemas.dbFileInfoArray))) ++
+        keep.map(col)): _*)
+
+  private[script] def decode(r: Row): SliceRow =
+    SliceRow(r.getLong(0), r.getString(1),
+      Option(r.getAs[Integer](2)).map(_.toInt), Option(r.getString(3)),
+      r.getTimestamp(4), BigDecimal(r.getDecimal(5)), BigDecimal(r.getDecimal(6)),
+      !r.isNullAt(7) && r.getBoolean(7), Option(r.getAs[Integer](8)).map(_.toInt),
+      Option(r.getSeq[Row](9)).map(_.toSeq.map(f =>
+        if (f == null) DbFileInfo(null, null, null, null, null)
+        else DbFileInfo(f.getString(0), f.getString(1), f.getString(2),
+          f.getString(3), f.getString(4)))))
 
   def generate(
       spark: SparkSession,
@@ -167,40 +196,28 @@ object RestoreScriptGenerator {
       : RestorePlan = {
     val (keyCol, keyVal) = keyOf(opts)
     val restoreTo = opts.restoreToTime.getOrElse(now())
-    // the one action: rows at or before the restore time, plus later log
-    // backups (overlap candidates); from_json on Full rows only
-    val rows = bh
-      .filter(col("database_name") === opts.sourceDb && col(keyCol) === keyVal)
-      .filter(col("backup_start_date") <= lit(restoreTo) ||
-        col("BackupType") === BackupTypes.Log)
-      .select(col("LogID"), col("BackupType"), col("device_type"),
-        col("physical_device_name"), col("backup_start_date"), col("first_lsn"),
-        col("last_lsn"), col("is_copy_only"), col("position"),
-        when(col("BackupType") === BackupTypes.Full,
-          from_json(col("DBFileInformation"), Schemas.dbFileInfoArray)))
-      .collect()
-      .map { r =>
-        SliceRow(r.getLong(0), r.getString(1),
-          Option(r.getAs[Integer](2)).map(_.toInt), Option(r.getString(3)),
-          r.getTimestamp(4), BigDecimal(r.getDecimal(5)), BigDecimal(r.getDecimal(6)),
-          !r.isNullAt(7) && r.getBoolean(7), Option(r.getAs[Integer](8)).map(_.toInt),
-          Option(r.getSeq[Row](9)).map(_.toSeq.map(f =>
-            if (f == null) DbFileInfo(null, null, null, null, null)
-            else DbFileInfo(f.getString(0), f.getString(1), f.getString(2),
-              f.getString(3), f.getString(4)))))
-      }
-    plan(rows.toSeq, opts, restoreTo)
+    // the one action
+    val rows = slice(
+        bh.filter(col("database_name") === opts.sourceDb && col(keyCol) === keyVal),
+        restoreTo, Nil)
+      .collect().map(decode)
+    plan(rows.toSeq, opts, restoreTo).getOrElse(
+      throw new IllegalStateException(
+        s"No FULL backup found for ${opts.sourceDb} on $keyVal at or before $restoreTo"))
   }
 
   /** The restore plan over one (database, key) slice, without Spark,
-    * under Spark's semantics: string order is UTF-8 binary with nulls
-    * first, the restore time is truncated to microseconds, and striped
-    * log sets collapse the way
-    * [[graft.restore.RestoreQueries.collapseLogStripes]] does.
+    * under Spark's semantics: string order is UTF-8 binary, the restore
+    * time is truncated to microseconds, and striped log sets collapse the
+    * way [[graft.restore.RestoreQueries.collapseLogStripes]] does. None
+    * when the slice has no restorable full at or before the restore time.
+    *
+    * A set's stripes give one step: it is copy-only if any stripe is, its
+    * `first_lsn` is the least over them, and its start time (a full's:
+    * also its file list) comes from the first named stripe.
     */
   def plan(rows: Seq[SliceRow], opts: RestoreScriptOptions, restoreTo: Timestamp)
-      : RestorePlan = {
-    val (_, keyVal) = keyOf(opts)
+      : Option[RestorePlan] = {
     val restoreTimeProvided = opts.restoreToTime.isDefined // F8, sql:447
     val toUs = micros(restoreTo)
     val inRange = rows.filter(r => micros(r.start) <= toUs)
@@ -208,82 +225,78 @@ object RestoreScriptGenerator {
     // ---- phase 1: base FULL (sql:560-685) -------------------------------
     val fulls = newestSet(inRange.filter(r => r.backupType == BackupTypes.Full &&
       r.deviceType.exists(DeviceTypes.Restorable.contains)))
-    if (fulls.isEmpty)
-      throw new IllegalStateException(
-        s"No FULL backup found for ${opts.sourceDb} on $keyVal at or before $restoreTo")
-    val full = fulls.head
-    val dest = opts.destinationDb.getOrElse(opts.sourceDb) // sql:681-685
-    val fullFrom = fromClause(fulls)
-    val fullCmd =
-      s"RESTORE DATABASE [$dest] FROM\n$fullFrom\n" +
-        s"WITH ${moveClause(full.files.getOrElse(Nil), opts)},\n" +
-        "NORECOVERY, NOUNLOAD, STATS = 5;"
-    val fullStep = RestoreStep(1L, dest, BackupTypes.Full, full.start,
-      full.firstLsn, full.lastLsn, fullFrom, deviceCsv(fulls), None, fullCmd)
+    Option.when(fulls.nonEmpty) {
+      val full = fulls.head
+      val dest = opts.destinationDb.getOrElse(opts.sourceDb) // sql:681-685
+      val fullFrom = fromClause(fulls)
+      val fullCmd =
+        s"RESTORE DATABASE [$dest] FROM\n$fullFrom\n" +
+          s"WITH ${moveClause(full.files.getOrElse(Nil), opts)},\n" +
+          "NORECOVERY, NOUNLOAD, STATS = 5;"
+      val fullStep = RestoreStep(1L, dest, BackupTypes.Full, full.start,
+        fulls.map(_.firstLsn).min, full.lastLsn, fullFrom, deviceCsv(fulls), None,
+        fullCmd)
 
-    // ---- phase 2: DIFF unless the full was copy-only (sql:837-1033) -----
-    // Fidelity note: the reference SCRIPT proc's diff phase is exactly
-    // rank-1 over `last_lsn > @full_lsn AND backup_start_date <=
-    // @RestoreToTime` (sql:858-912) — it does NOT apply the blocking-full
-    // truncation; that logic belongs to the standalone GetLastDiffBackup
-    // proc (sql:346-369), implemented in
-    // RestoreQueries.lastDiffBackupFor/lastDiffBackupsPerKey (q12). A
-    // diff based on a newer full the device filter excluded would be
-    // mis-selected by the REFERENCE too; byte-parity keeps that shape.
-    val diffs =
-      if (full.copyOnly) Nil // 'goto Log_Backups' (sql:850)
-      else newestSet(inRange.filter(r =>
-        r.backupType == BackupTypes.Diff && r.lastLsn > full.lastLsn))
-    val diffStep = diffs.headOption.map { diff =>
-      val from = fromClause(diffs)
-      val cmd = s"RESTORE DATABASE [$dest] FROM\n$from\nWITH " +
-        "NORECOVERY, NOUNLOAD, STATS = 5;"
-      RestoreStep(2L, dest, BackupTypes.Diff, diff.start, diff.firstLsn,
-        diff.lastLsn, from, deviceCsv(diffs), None, cmd)
+      // ---- phase 2: DIFF unless the full was copy-only (sql:837-1033) ---
+      // Fidelity note: the reference SCRIPT proc's diff phase is exactly
+      // rank-1 over `last_lsn > @full_lsn AND backup_start_date <=
+      // @RestoreToTime` (sql:858-912) — it does NOT apply the
+      // blocking-full truncation; that logic belongs to the standalone
+      // GetLastDiffBackup proc (sql:346-369), implemented in
+      // RestoreQueries.lastDiffBackupFor/lastDiffBackupsPerKey (q12). A
+      // diff based on a newer full the device filter excluded would be
+      // mis-selected by the REFERENCE too; byte-parity keeps that shape.
+      val diffs =
+        if (fulls.exists(_.copyOnly)) Nil // 'goto Log_Backups' (sql:850)
+        else newestSet(inRange.filter(r =>
+          r.backupType == BackupTypes.Diff && r.lastLsn > full.lastLsn))
+      val diffStep = diffs.headOption.map { diff =>
+        val from = fromClause(diffs)
+        val cmd = s"RESTORE DATABASE [$dest] FROM\n$from\nWITH " +
+          "NORECOVERY, NOUNLOAD, STATS = 5;"
+        RestoreStep(2L, dest, BackupTypes.Diff, diff.start, diffs.map(_.firstLsn).min,
+          diff.lastLsn, from, deviceCsv(diffs), None, cmd)
+      }
+      val baseLsn = diffStep.fold(full.lastLsn)(_.last_lsn)
+
+      // ---- phase 3: LOG chain + overlap log (sql:1044-1259) -------------
+      val (logsInRange, logsAfter) = rows
+        .filter(r => r.backupType == BackupTypes.Log && r.lastLsn > baseLsn)
+        .partition(r => micros(r.start) <= toUs)
+      // first log backup AFTER the restore time (U1/O7, sql:1056-1065) —
+      // the reference's TOP(1) has no ORDER BY; we impose (start, last
+      // lsn, first lsn) and keep every row of that first backup SET, so a
+      // striped overlap log restores from all of its media
+      val setOrder = Ordering.by((r: SliceRow) => (micros(r.start), r.lastLsn, r.firstLsn))
+      val overlap = logsAfter.minOption(setOrder).toSeq
+        .flatMap(first => logsAfter.filter(setOrder.equiv(_, first)))
+      // striped-log collapse (sql:1044-1128): one set per (first, last)
+      // LSN pair — the pair fixes the reference's min(LogID) canonical id
+      val chain = (logsInRange ++ overlap).distinctBy(_.logId)
+        .groupBy(r => (r.firstLsn, r.lastLsn)).values.toSeq
+        .sortBy(set => (set.head.lastLsn, set.head.firstLsn))
+      val stopAtLiteral = restoreTo.toString.takeWhile(_ != '.') // seconds precision
+      val logSteps = chain.zipWithIndex.map { case (set, i) =>
+        val withStopAt = restoreTimeProvided && i >= chain.size - 2 // sql:1266-1272
+        val stripes = set.sorted(stripeOrder)
+        val from = fromClause(stripes)
+        val position = set.flatMap(_.position).maxOption.getOrElse(
+          throw new IllegalStateException(
+            s"log backup set ${set.head.firstLsn}-${set.head.lastLsn} has no position"))
+        val base = s"RESTORE LOG [$dest] FROM\n$from\nWITH FILE = $position, " +
+          "NORECOVERY, NOUNLOAD, STATS = 10;"
+        val cmd = if (withStopAt)
+          base.dropRight(1) + s", STOPAT = '$stopAtLiteral';" // F3 analog
+        else base
+        RestoreStep(diffStep.size + 2L + i, dest, BackupTypes.Log,
+          set.maxBy(r => micros(r.start)).start, set.head.firstLsn, set.head.lastLsn,
+          from, deviceCsv(stripes),
+          if (withStopAt) Some(stopAtLiteral) else None, cmd)
+      }
+
+      val steps = Seq(fullStep) ++ diffStep.toSeq ++ logSteps
+      RestorePlan(steps, steps.map(_.RestoreCommand).mkString("\n\n"))
     }
-    val baseLsn = diffStep.fold(full.lastLsn)(_.last_lsn)
-
-    // ---- phase 3: LOG chain + overlap log (sql:1044-1259) ---------------
-    val (logsInRange, logsAfter) = rows
-      .filter(r => r.backupType == BackupTypes.Log && r.lastLsn > baseLsn)
-      .partition(r => micros(r.start) <= toUs)
-    // first log backup AFTER the restore time (U1/O7, sql:1056-1065) —
-    // the reference's TOP(1) has no ORDER BY; we impose (start, last
-    // lsn, first lsn) and keep every row of that first backup SET, so a
-    // striped overlap log restores from all of its media
-    val setOrder = Ordering.by((r: SliceRow) => (micros(r.start), r.lastLsn, r.firstLsn))
-    val overlap = logsAfter.minOption(setOrder).toSeq
-      .flatMap(first => logsAfter.filter(setOrder.equiv(_, first)))
-    // striped-log collapse (sql:1044-1128): one set per (first, last)
-    // LSN pair — the pair fixes the reference's min(LogID) canonical id
-    val chain = (logsInRange ++ overlap).distinctBy(_.logId)
-      .groupBy(r => (r.firstLsn, r.lastLsn)).values.toSeq
-      .sortBy(set => (set.head.lastLsn, set.head.firstLsn))
-    val stopAtLiteral = restoreTo.toString.takeWhile(_ != '.') // seconds precision
-    val logSteps = chain.zipWithIndex.map { case (set, i) =>
-      val withStopAt = restoreTimeProvided && i >= chain.size - 2 // sql:1266-1272
-      // `array_sort` over (device, clause); a stripe with no device name
-      // has a null clause, which `array_join` skips, and the device csv
-      // drops it
-      val stripes = set.filter(_.device.isDefined)
-        .sorted(byDevice.orElseBy(deviceClause)(utf8))
-      val from = stripes.map(deviceClause).mkString(",\n")
-      val position = set.flatMap(_.position).maxOption.getOrElse(
-        throw new IllegalStateException(
-          s"log backup set ${set.head.firstLsn}-${set.head.lastLsn} has no position"))
-      val base = s"RESTORE LOG [$dest] FROM\n$from\nWITH FILE = $position, " +
-        "NORECOVERY, NOUNLOAD, STATS = 10;"
-      val cmd = if (withStopAt)
-        base.dropRight(1) + s", STOPAT = '$stopAtLiteral';" // F3 analog
-      else base
-      RestoreStep(diffStep.size + 2L + i, dest, BackupTypes.Log,
-        set.maxBy(r => micros(r.start)).start, set.head.firstLsn, set.head.lastLsn,
-        from, stripes.flatMap(_.device).mkString(", "),
-        if (withStopAt) Some(stopAtLiteral) else None, cmd)
-    }
-
-    val steps = Seq(fullStep) ++ diffStep.toSeq ++ logSteps
-    RestorePlan(steps, steps.map(_.RestoreCommand).mkString("\n\n"))
   }
 
   /** The `@Help = 1` constant relation (S9, reference sql:449-480). */

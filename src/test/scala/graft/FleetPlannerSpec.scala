@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.BackupHistoryDerivation
@@ -50,6 +51,23 @@ class FleetPlannerSpec extends AnyFunSuite {
           assert(fleetSteps == scalarSteps, s"$db/$srv mismatch")
       }
     }
+  }
+
+  test("fleet plan output schema: names, order, types and nullability") {
+    val bh = BackupHistoryDerivation.canonicalFrame(spark, TestSpark.sf)
+    val expected = StructType(Seq(
+      StructField("database_name", StringType),
+      StructField("key", StringType),
+      StructField("restore_id", LongType),
+      StructField("backup_type", StringType, nullable = false),
+      StructField("backup_start_date", TimestampType),
+      StructField("first_lsn", DecimalType(25, 0)),
+      StructField("last_lsn", DecimalType(25, 0)),
+      StructField("from_clause", StringType, nullable = false),
+      StructField("physical_devices", StringType, nullable = false),
+      StructField("stopat", BooleanType, nullable = false)))
+    assert(FleetRestorePlanner.planAll(bh, "server_name", T).schema == expected)
+    assert(FleetRestorePlanner.planAllWithFallback(bh, T).schema == expected)
   }
 
   test("fleet plan restores every stripe of a striped overlap log") {

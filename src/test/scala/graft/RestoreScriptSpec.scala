@@ -142,6 +142,36 @@ class RestoreScriptSpec extends AnyFunSuite {
     assert(plan.steps(1).RestoreID == 2L)
   }
 
+  test("a full stripe with no device name is in neither device list") {
+    // the unnamed stripe sorts first by device and starts earlier; the
+    // step's start time and file list are the named stripe's
+    val plan = RestoreScriptGenerator.generate(spark, bh(Seq(
+        (1L, "Full", "X:/bk/full_a.bak", "2024-01-01 01:00:05", 1000L, 2000L, false, 2, fileInfoJson),
+        (2L, "Full", null, "2024-01-01 01:00:00", 1000L, 2000L, false, 2, null),
+        (3L, "Log", "X:/bk/log.trn", "2024-01-01 04:00:00", 2000L, 3000L, false, 2, null))),
+      RestoreScriptOptions(sourceDb = "DBAdmin", sourceServer = Some("srvA"),
+        restoreToTime = Some(T)))
+    val full = plan.steps.head
+    assert(full.from_clause == "DISK = N'X:/bk/full_a.bak'")
+    assert(full.physical_devices == "X:/bk/full_a.bak")
+    assert(full.backup_start_date == Timestamp.valueOf("2024-01-01 01:00:05"))
+    assert(full.RestoreCommand.startsWith(
+      "RESTORE DATABASE [DBAdmin] FROM\nDISK = N'X:/bk/full_a.bak'\nWITH MOVE N'db_data'"),
+      full.RestoreCommand)
+  }
+
+  test("a full is copy-only if any stripe is, and starts at its least first_lsn") {
+    val plan = RestoreScriptGenerator.generate(spark, bh(Seq(
+        (1L, "Full", "X:/bk/full_a.bak", "2024-01-01 01:00:00", 1000L, 2000L, false, 2, null),
+        (2L, "Full", "X:/bk/full_b.bak", "2024-01-01 01:00:00", 900L, 2000L, true, 2, null),
+        (3L, "Diff", "X:/bk/diff.bak", "2024-01-01 03:00:00", 1000L, 3000L, false, 2, null),
+        (4L, "Log", "X:/bk/log.trn", "2024-01-01 04:00:00", 2000L, 3500L, false, 2, null))),
+      RestoreScriptOptions(sourceDb = "DBAdmin", sourceServer = Some("srvA"),
+        restoreToTime = Some(T)))
+    assert(plan.steps.map(_.BackupType) == Seq("Full", "Log"))
+    assert(plan.steps.head.first_lsn == BigDecimal(900))
+  }
+
   test("MOVE clause relocates data and log files with prefix") {
     val plan = RestoreScriptGenerator.generate(spark, timeline,
       RestoreScriptOptions(sourceDb = "DBAdmin", sourceServer = Some("srvA"),
