@@ -20,7 +20,7 @@ import graft.store.{ConsolidatedStore, StoreDelete, StoreMerge, StoreMeta}
   * Expectations the committed BASELINE.md table records:
   *
   *   - trickle append (q64 shape), merge (q114), pruned chain read
-  *     (q142): ~1× — the zone-map sidecar prunes the anti-join /
+  *     (q142): ~1× — the logged zone maps prune the anti-join /
   *     key-probe / scan to the key-overlapping files, so a 10× store
   *     costs the same as the 1× store;
   *   - retention purge (q115): affects 10× the rows but drops whole
@@ -159,7 +159,7 @@ object ScaleProbe {
     // this times the same 4-writer race on the 1x and 10x stores and
     // counts claim attempts (attempts - writers = claims lost = redone
     // batches). Batches are per-writer re-namespaced, so contention is
-    // pure protocol (version claims + LogID re-basing + sidecar folds),
+    // pure protocol (version claims + LogID re-basing + stats scans),
     // not cross-writer dedup, and the row invariant is closed-form.
     val writers = sys.env.getOrElse("SPARK_GRAFT_WRITERS", "4").toInt
     val trickleRows = trickle.count()

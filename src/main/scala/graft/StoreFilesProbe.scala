@@ -9,35 +9,33 @@ import graft.store.{ConsolidatedStore, StoreLog, StoreMerge, StoreMeta}
 /** File-count scale probe: evidence for the metadata path's growth law.
   *
   * [[ScaleProbe]] grows ROWS (10× data, same file count); the 100-TB
-  * risk axis this probe covers is #FILES — the zone-map sidecar fold,
-  * the commit-log listing in the claim loops, the directory
-  * reconciliation every append's `StoreMeta.load` pays, and the
-  * O(#files-dropped) rename term in purge. It synthesizes stores of
-  * increasing file count (tiny two-row parquet parts, landed through
-  * the REAL protocol: a `StoreLog.tryCommit` per batch — which also
-  * drives the every-64-versions log checkpoints — and a
-  * `StoreMeta.saveDelta` of `scanStats` per batch, crossing the
-  * sidecar's 64-segment fold threshold at the larger counts), then
-  * times on each store:
+  * risk axis this probe covers is #FILES — the checkpoint's per-file
+  * stats rows every state read parses, the commit-log listing in the
+  * claim loops, the coverage listing, and the O(#files-dropped) rename
+  * term in purge. It synthesizes stores of increasing file count (tiny
+  * two-row parquet parts, landed through the REAL protocol: one
+  * `StoreLog.tryCommit` per batch carrying the parts' `scanStats` —
+  * which also drives the every-64-versions log checkpoints), then times
+  * on each store:
   *
-  *   - `meta_load_cold` / `meta_load_warm`: `StoreMeta.load` alone —
-  *     the planning fold every append/merge/pruned-read starts with.
-  *     Cold clears the driver's segment cache first (full O(#files)
-  *     segment parse + directory reconciliation, paid once per segment
-  *     per driver); warm is the steady-state repeat-load cost (cached
-  *     immutable segments: reconciliation only);
-  *   - `log_replay`: `StoreLog.liveSetAtVersion` at head — checkpoint +
-  *     ≤64 commit reads regardless of store size (O(CheckpointEvery));
+  *   - `meta_load_cold` / `meta_load_warm`: `StoreLog.headState` — the
+  *     committed-state read (live files with their zone-map stats) every
+  *     append/merge/pruned read plans with: the newest checkpoint (one
+  *     stats row per live file) plus ≤64 tail commits. Cold is the
+  *     store's first read in this driver, warm the best repeat;
+  *   - `log_replay`: `StoreLog.liveFilesAt` at head — the time-travel
+  *     replay, checkpoint + ≤64 commit reads regardless of store size
+  *     (O(CheckpointEvery));
   *   - `read_pruned`: a one-database LSN-window `readWhere` — the
-  *     sidecar must open O(files-per-db) data files, not O(#files);
+  *     zone maps must open O(files-per-db) data files, not O(#files);
   *   - `append_trickle` / `merge_point`: one small batch against an
   *     existing database, on a fresh clone per rep — O(batch + overlap)
   *     execution on top of the `meta_load` planning term.
   *
   * Committed reading lives in BASELINE.md ("file-count probe"): the
   * expectation is flat `log_replay`/`read_pruned`/`append`/`merge` and
-  * linear-with-tiny-slope `meta_load`; a super-linear row is a fold or
-  * compaction policy bug, not noise.
+  * linear-with-tiny-slope `meta_load`; a super-linear row is a
+  * checkpoint or compaction policy bug, not noise.
   *
   * Run: `runMain graft.StoreFilesProbe` (env `SPARK_GRAFT_FILE_COUNTS`,
   * default "200,2000,8000"; `SPARK_GRAFT_REPS`).
@@ -110,8 +108,7 @@ object StoreFilesProbe {
     def tmp(): String = java.nio.file.Files
       .createTempDirectory("graft-fprobe-").toString + "/t"
 
-    /** Land ~nFiles tiny parts through the real commit + sidecar
-      * protocol (under the maintenance policy when `maintained`);
+    /** Land ~nFiles tiny parts through the real commit protocol (under the maintenance policy when `maintained`);
       * returns (path, actualFiles, totalRows, optimizeRuns).
       */
     def synth(nFiles: Int): (String, Int, Long, Int) = {
@@ -138,10 +135,9 @@ object StoreFilesProbe {
           name
         }.toSeq
         val v = StoreLog.currentVersion(spark, path) + 1
-        require(StoreLog.tryCommit(spark, path, v, "append", adds, Nil),
+        require(StoreLog.tryCommit(spark, path, v, "append",
+          StoreMeta.scanStats(spark, path, adds), Nil),
           s"synthesis lost an impossible race at v$v")
-        StoreMeta.saveDelta(spark, path,
-          StoreMeta.scanStats(spark, path, adds))
         if (maintained) {
           val r = graft.maintenance.StoreMaintenance.runIfDue(
             spark, path, policy)
@@ -149,10 +145,7 @@ object StoreFilesProbe {
         }
         g += k; b += 1
       }
-      val loaded = StoreMeta.load(spark, path)
-        .getOrElse(sys.error("sidecar missing after synthesis"))
-      require(!loaded.dirty, "synthesized sidecar must reconcile clean")
-      val actual = loaded.files.size
+      val actual = StoreMeta.listDataFiles(spark, path).get.size
       val rows = ConsolidatedStore.read(spark, path).count()
       require(rows == 2L * nFiles,
         s"synthesis row invariant broke: $rows vs ${2L * nFiles}")
@@ -172,19 +165,16 @@ object StoreFilesProbe {
 
     val results = counts.map { n =>
       val (path, actualFiles, rows, optimizes) = synth(n)
-      // cold = fresh driver (segment cache cleared inside the timed body:
-      // pays the full O(#files) segment parse + reconciliation); warm =
-      // steady-state planning (immutable segments already parsed — the
-      // cost every load after the first pays in one driver process)
-      val metaLoadCold = timeIt { () =>
-        StoreMeta.segCacheClear(); StoreMeta.load(spark, path)
+      // cold = this store's first state read in the driver; warm = the
+      // steady-state repeat
+      val metaLoadCold = {
+        val t0 = System.nanoTime()
+        StoreLog.headState(spark, path)
+        (System.nanoTime() - t0) / 1e9
       }
-      val metaLoadWarm = {
-        StoreMeta.load(spark, path)
-        timeIt(() => StoreMeta.load(spark, path))
-      }
+      val metaLoadWarm = timeIt(() => StoreLog.headState(spark, path))
       val logReplay = timeIt(() =>
-        StoreLog.liveSetAtVersion(spark, path,
+        StoreLog.liveFilesAt(spark, path,
           StoreLog.currentVersion(spark, path)))
       // one-db LSN window: must open O(files-per-db)=4 parts, not O(n)
       val dbMid = f"db${n / 8 / 2}%05d"

@@ -36,8 +36,6 @@ import graft.store.{Staging, StoreLog, StoreMeta}
   */
 object Compaction {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** @return number of data files after compaction. */
   def compact(
       spark: SparkSession, path: String,
@@ -52,8 +50,7 @@ object Compaction {
     * time-range scans (retention cutoffs, point-in-time planning) prune
     * files — one physical order serving the reference's two leading index
     * columns (sql:34-36) at once. Use instead of [[compact]] when the
-    * store is queried on both axes; same commit protocol and sidecar
-    * re-seed.
+    * store is queried on both axes; same commit protocol.
     *
     * @return number of data files after the rewrite.
     */
@@ -99,12 +96,13 @@ object Compaction {
   private def rewriteCow(
       spark: SparkSession, path: String, maxRecordsPerFile: Long)(
       layout: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Long = {
-    val v0 = StoreLog.currentVersion(spark, path)
     // rewrite the COMMITTED live set only: a concurrent appender's
     // published-but-unclaimed files are invisible here, so they are
     // neither read nor removed — which is exactly what makes this
     // commit disjoint from (and commutative with) a racing append
-    val oldFiles = StoreLog.liveSetAtVersion(spark, path, v0)
+    val head = StoreLog.headState(spark, path)
+    val v0 = head.version
+    val oldFiles = head.live.map(_.file)
     if (oldFiles.isEmpty) return dataFileCount(spark, path)
     // schema is INFERRED (with merging), not imposed: compaction must
     // preserve whatever schema the store actually carries — including
@@ -120,7 +118,9 @@ object Compaction {
     // duplicate-row phase. A crash anywhere in it rolls back: the
     // archive sits at v0+1 > current, so StoreRepair restores the
     // originals and drops the staged/promoted rewrites as uncommitted.
-    val (stageDir, mine) = Staging.stage(spark, path, layout(df),
+    val (obs, observed) = graft.store.ConsolidatedStore
+      .appendObservation(layout(df))
+    val (stageDir, mine) = Staging.stage(spark, path, observed,
       maxRecordsPerFile = maxRecordsPerFile)
     // archive under v0+1's history dir so EVERY commit after our state
     // read lands in commitReplacing's intervening check (pure appends
@@ -128,25 +128,22 @@ object Compaction {
     StoreLog.archive(spark, path, v0 + 1,
       oldFiles.map(f => (new Path(s"$path/$f"), f)))
     Staging.promote(spark, path, stageDir, mine)
+    // the commit carries the rewritten files' stats: observed during the
+    // staged write when it landed as one non-empty file (the optimize and
+    // purge rule), footer-scanned otherwise — a zero-row file gets
+    // scanStats' empty-interval sentinel
+    val newStats =
+      if (mine.size == 1 && obs.get("n") != 0L)
+        Seq(graft.store.ConsolidatedStore.observedStats(obs.get, mine.head))
+      else StoreMeta.scanStats(spark, path, mine)
     StoreLog.commitReplacing(spark, path, "compact",
-      adds = mine, removes = oldFiles, archivedAt = v0 + 1)
-    // re-seed the sidecar for the files just written (one extra pass
-    // over data hot from the rewrite); a racing appender's delta is NOT
-    // clobbered (StoreMeta.save only folds segments it captured), and a
-    // failure here is a warning, never a thrown compaction whose commit
-    // already landed — the sidecar is a cache, load() heals
-    try StoreMeta.save(spark, path, StoreMeta.scanStats(spark, path, mine))
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"post-commit sidecar re-seed failed on $path " +
-          "(cache only — next load() heals): " + e)
-    }
+      adds = newStats, removes = oldFiles, archivedAt = v0 + 1)
     dataFileCount(spark, path)
   }
 
   /** Legacy whole-root staged rewrite for LOGLESS stores: apply
-    * `layout`, write to a sibling dir, swap via two renames, re-seed the
-    * zone-map sidecar. (A logless store has no commit protocol to
+    * `layout`, write to a sibling dir, swap via two renames. (A logless
+    * store has no commit protocol to
     * arbitrate with — the swap's crash windows are reconciled by
     * [[graft.store.StoreRepair]]'s compaction pre-pass.)
     */
@@ -185,16 +182,9 @@ object Compaction {
       StoreLog.archive(spark, path, v,
         oldFiles.map(fl => (new Path(bak, fl), fl)))
       StoreLog.commit(spark, path, "compact",
-        adds = newFiles, removes = oldFiles)
+        adds = StoreMeta.scanStats(spark, path, newFiles), removes = oldFiles)
     }
     fs.delete(bak, true)
-    // re-seed the store's zone-map sidecar for the files just written:
-    // the swap dropped the old one (it described pre-compaction files),
-    // and without this the NEXT append pays a full heal scan. One extra
-    // pass over data that is already hot from the rewrite.
-    StoreMeta.listDataFiles(spark, path).foreach { files =>
-      StoreMeta.save(spark, path, StoreMeta.scanStats(spark, path, files))
-    }
     dataFileCount(spark, path)
   }
 
@@ -207,8 +197,7 @@ object Compaction {
     * small file per batch, and folding them costs O(small files), not
     * O(table). Replaced originals archive under the commit's history dir
     * ([[graft.store.StoreLog]]) so pre-optimize snapshots stay readable;
-    * the zone-map sidecar keeps the untouched files' stats and rescans
-    * only the new files. Commits through [[StoreLog.commitReplacing]],
+    * the commit carries only the new files' stats. Commits through [[StoreLog.commitReplacing]],
     * so concurrent appends rebase it rather than starve it.
     *
     * @return (filesRewritten, filesAfter)
@@ -221,16 +210,13 @@ object Compaction {
         s"optimize needs a graft-managed layout: $path"))
     val sizes = listed.toMap
     val all = listed.map(_._1)
-    val first = StoreLog.currentVersion(spark, path) == 0
     // on a logged store, bin-pack the COMMITTED live set only — a racing
     // appender's published-but-unclaimed files must not be absorbed into
     // this commit's removes (they belong to the appender's commit)
+    val head = StoreLog.headState(spark, path)
     val candidates =
-      if (first) all
-      else StoreLog.committedLiveSet(spark, path) match {
-        case Some(live) => all.filter(live)
-        case None => all
-      }
+      if (head.version == 0) all
+      else all.filter(head.live.map(_.file).toSet)
     // sizes come with the listing — no per-file getFileStatus round trips
     val small = candidates.filter(f => sizes(f) < minBytes).sorted
     if (small.size < 2) return (0L, dataFileCount(spark, path))
@@ -241,10 +227,6 @@ object Compaction {
     val totalBytes = small.map(sizes).sum
     val target = math.max(1L,
       (totalBytes + minBytes - 1) / minBytes).toInt
-    // pre-state sidecar stats, loaded BEFORE the rewrite so the
-    // post-commit fold is a driver-side splice (untouched entries keep
-    // their stats) instead of a reconcile that rescans the new files
-    val loaded0 = StoreMeta.load(spark, path)
     val packed = spark.read
       .option("basePath", path)
       .schema(graft.model.Schemas.consolidated)
@@ -270,35 +252,17 @@ object Compaction {
     StoreLog.archive(spark, path, v,
       small.map(f => (new Path(s"$path/$f"), f)))
     Staging.promote(spark, path, stageDir, mine)
+    // the packed file's stats: observed during the staged write when it
+    // landed as one file, footer-scanned otherwise
+    val newStats =
+      if (mine.size == 1)
+        Seq(graft.store.ConsolidatedStore.observedStats(obs.get, mine.head))
+      else StoreMeta.scanStats(spark, path, mine)
     // optimistic claim: concurrent appends are disjoint (their files
     // are neither read nor removed here) and rebase this commit;
     // overlapping rewrites roll back and abort
     StoreLog.commitReplacing(spark, path, "optimize",
-      adds = mine, removes = small, archivedAt = v)
-
-    // fold the sidecar: splice the pre-state stats (untouched files keep
-    // their entries, packed originals drop) with the new file's stats —
-    // observed during the staged write when it landed as one file,
-    // footer-scanned otherwise. Non-fatal: the commit already landed and
-    // the sidecar is a cache (a racing appender's files absent from the
-    // pre-state load heal on the next load()).
-    try {
-      val smallSet = small.toSet
-      val newStats =
-        if (mine.size == 1)
-          Seq(graft.store.ConsolidatedStore.observedStats(obs.get, mine.head))
-        else StoreMeta.scanStats(spark, path, mine)
-      loaded0 match {
-        case Some(l) => StoreMeta.save(spark, path,
-          l.files.filterNot(f => smallSet(f.file)) ++ newStats)
-        case None => StoreMeta.load(spark, path)
-          .foreach(l => StoreMeta.save(spark, path, l.files))
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"post-commit sidecar fold failed on $path " +
-          "(cache only — next load() heals): " + e)
-    }
+      adds = newStats, removes = small, archivedAt = v)
     (small.size.toLong, dataFileCount(spark, path))
   }
 
@@ -309,7 +273,7 @@ object Compaction {
   def dataFileCount(spark: SparkSession, path: String): Long = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // manual recursion so hidden/metadata DIRECTORIES (_graft_meta, the
+    // manual recursion so hidden/metadata DIRECTORIES (_graft_log, the
     // _graft_history archive) are skipped whole — fs.listFiles(p, true)
     // would descend into them and count archived data files as live
     def walk(dir: Path): Long = {

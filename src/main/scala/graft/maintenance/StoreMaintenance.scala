@@ -9,8 +9,8 @@ import graft.store.StoreMeta
   *
   * A trickle fleet writes one small file per server per cycle: 100
   * servers on a 15-minute schedule is ~10k new files/day, and every
-  * planning term that is O(#files) (the sidecar fold, directory
-  * reconciliation, scan listing) grows without bound unless something
+  * planning term that is O(#files) (the log checkpoint's stats rows,
+  * the coverage listing, scan listing) grows without bound unless something
   * folds the small files back down. The file-count scale probe
   * (`graft.StoreFilesProbe`, BASELINE.md "file-count probe") measures
   * that growth law; THIS is the documented design answer, wired so a
@@ -23,7 +23,7 @@ import graft.store.StoreMeta
   * work. When due, [[Compaction.optimizeSmall]] bin-packs only the
   * sub-threshold files through the commit log's replacing-commit
   * protocol — concurrent appends rebase over it, snapshots stay
-  * readable, and the zone-map sidecar re-seeds incrementally.
+  * readable, and the commit carries only the packed files' stats.
   */
 object StoreMaintenance {
 
@@ -33,9 +33,9 @@ object StoreMaintenance {
     *   trickle files always qualify, large enough that packed output
     *   approaches a healthy scan-task size.
     * @param maxSmallFiles run the optimize once at least this many
-    *   small files have accumulated. Default 64 — matched to the
-    *   sidecar's segment-fold threshold, so the file fold and the
-    *   metadata fold amortize on the same cadence (~1/64 cycles).
+    *   small files have accumulated. Default 64 — matched to the log's
+    *   checkpoint interval, so the file fold and the metadata fold
+    *   amortize on the same cadence (~1/64 cycles).
     */
   final case class Policy(
       smallFileBytes: Long = 64L << 20,

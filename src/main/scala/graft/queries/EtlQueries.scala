@@ -226,26 +226,26 @@ object EtlQueries {
         |SELECT 2, 'srvB', win.n, 0, mx.wm FROM win, mx
         |ORDER BY run, server""".stripMargin)
 
-  /** Metadata-only aggregate answering — the zone-map sidecar doubling
-    * as an aggregate index: after one ETL load, `max(LogID)`, the
-    * dedup-key min/max envelope, and the null-device row count are read
-    * from `_graft_meta` ALONE (driver-side fold over per-file stats, no
-    * data-file scan — the same stats-based answering a lakehouse
-    * transaction log provides for `count/min/max`). The oracle re-derives
-    * every value from the msdb extract CTE, so the sidecar's contents
-    * are cross-checked against an INDEPENDENT derivation: a stats bug
-    * that would someday misprune an append fails this row first.
+  /** Metadata-only aggregate answering — the zone maps doubling as an
+    * aggregate index: after one ETL load, `max(LogID)`, the dedup-key
+    * min/max envelope, and the null-device row count are read from the
+    * commit log's head state ALONE (driver-side fold over the per-file
+    * stats the commits carry, no data-file scan — the stats-based
+    * answering a lakehouse transaction log provides for
+    * `count/min/max`). The oracle re-derives every value from the msdb
+    * extract CTE, so the logged stats are cross-checked against an
+    * INDEPENDENT derivation: a stats bug that would someday misprune an
+    * append fails this row first.
     */
   def q108StoreStatsOnly(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // Read-only over the memoized msdb-extract base (StoreScaffold
-    // contract): the operator under test is the driver-side sidecar
-    // fold, so the bench row times THAT, not a per-rep fixture ETL.
+    // contract): the operator under test is the driver-side head-state
+    // read, so the bench row times THAT, not a per-rep fixture ETL.
     // No clone needed — nothing mutates.
     val store = msdbEtlBase(spark, dir)
-    val meta = graft.store.StoreMeta.load(spark, store)
-      .getOrElse(sys.error("sidecar missing after append"))
-    val fs = meta.files
+    val meta = graft.store.StoreLog.headState(spark, store)
+    val fs = meta.live
     require(fs.nonEmpty, "empty store after load")
     def bd(x: java.math.BigDecimal) = BigDecimal(x)
     Seq((
@@ -392,7 +392,7 @@ object EtlQueries {
     * value row. Slices are DATE-ORDERED (ntile over the canonical
     * sort) because that is what a fleet trickle actually looks like:
     * each cycle's key envelope sits past the previous files', so the
-    * sidecar-pruned append stays O(batch + boundary overlap) instead
+    * zone-map-pruned append stays O(batch + boundary overlap) instead
     * of re-reading the whole store per cycle (hash-sliced batches
     * measured ~25% slower end-to-end for exactly that reason, on top
     * of being the wrong fleet shape); duplicate keys
@@ -551,7 +551,7 @@ object EtlQueries {
     }
 
   /** One append PER DATABASE → per-db file envelopes: the layout under
-    * which a scalar restore lookup's sidecar pruning opens exactly one
+    * which a scalar restore lookup's zone-map pruning opens exactly one
     * file (gated in StoreReadSpec; exercised by q142).
     */
   private def dbEachBase(spark: SparkSession, dir: String): String =
@@ -835,7 +835,7 @@ object EtlQueries {
       |SELECT 'incremental', database_name, n_rows, sum_comp FROM fin
       |ORDER BY path, database_name""".stripMargin)
 
-  /** Device point lookup over the sidecar's exact device-hash sets
+  /** Device point lookup over the zone maps' exact device-hash sets
     * ([[ConsolidatedStore.readForDevice]]): the store is laid out in two
     * device-population-disjoint files (URL vs disk appends), db3's
     * devices are nulled (the NULLs-are-equal key population), and three
@@ -1108,7 +1108,7 @@ object EtlQueries {
 
   /** The scalar restore-chain procs bound to the consolidated STORE
     * through [[graft.restore.RestoreStore]]: every phase reads via
-    * `readWhere`, so the sidecar's (database_name, last_lsn) envelopes
+    * `readWhere`, so the files' (database_name, last_lsn) envelopes
     * prune the scan to db1's one file out of the per-db layout before
     * any data is read (file-count gate in StoreReadSpec) — the
     * reference's covering-index access path (sql:35-39) on immutable
@@ -1368,7 +1368,8 @@ object EtlQueries {
       spark, store, bh, Seq("database_name", "last_lsn"), 8) { (attempt, _) =>
       if (attempt == 1 && !injected) {
         injected = true
-        val live = graft.store.StoreLog.committedLiveSet(spark, store).get
+        val live = graft.store.StoreLog.headState(spark, store).live
+          .map(_.file).toSet
         delRows = graft.store.StoreDelete
           .delete(spark, store, lit(true)).deleted
         val del = graft.store.StoreLog.readCommits(spark, store).last
@@ -1411,7 +1412,7 @@ object EtlQueries {
   def q146StoreRepair(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val store = StoreScaffold.cloned(db2SplitBase(spark, dir))
-    val files = graft.store.StoreMeta.load(spark, store).get.files
+    val files = graft.store.StoreLog.headState(spark, store).live
       .map(_.file).sorted
     require(files.size >= 2, s"fixture needs 2 files, got $files")
     val v = graft.store.StoreLog.currentVersion(spark, store)

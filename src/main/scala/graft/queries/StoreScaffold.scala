@@ -35,8 +35,7 @@ object StoreScaffold {
       p
     })
 
-  /** Fresh filesystem copy of a base store (data + sidecar + commit
-    * log) — milliseconds at test scale; scenario mutations never touch
+  /** Fresh filesystem copy of a base store (data + commit log) — milliseconds at test scale; scenario mutations never touch
     * the shared base.
     */
   def cloned(basePath: String): String = {

@@ -6,7 +6,7 @@ import graft.store.{ConsolidatedStore, StoreMeta}
 
 /** The scalar restore-chain procs (reference sql:103-396) bound directly
   * to a consolidated STORE instead of an already-materialized frame: each
-  * lookup reads through [[ConsolidatedStore.readWhere]], so the sidecar's
+  * lookup reads through [[ConsolidatedStore.readWhere]], so the logged
   * per-file (database_name, last_lsn) envelopes — the zone-map form of
   * the reference's covering indexes (sql:35-39) — prune the scan to the
   * files that can hold the requested chain before any data is read.

@@ -31,8 +31,6 @@ import graft.model.Schemas
   */
 object ConsolidatedStore {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   val dedupKey: Seq[String] = Schemas.dedupKey
 
   /** Null-safe equi-join condition on the dedup key between two aliased
@@ -75,10 +73,6 @@ object ConsolidatedStore {
     withLogIdsFrom(base, freshBatch, batchRows)
   }
 
-  /** [[withLogIds]] with a known id base — the sidecar-metadata append
-    * path reads the base from [[StoreMeta]] instead of aggregating over
-    * the whole table.
-    */
   /** Batch-size regime boundary: batches at/above this row count are
     * backfill/bootstrap-shaped (a first ETL, an outage catch-up) and fan
     * out into parallel writers; below it the append is a steady trickle
@@ -134,8 +128,8 @@ object ConsolidatedStore {
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), Schemas.consolidated)
     if (!StorePath.exists(spark, path)) return empty
-    // a fully-deleted store still holds its metadata dirs (_graft_meta,
-    // _graft_log) — zero data files means the empty frame, not a parquet
+    // a fully-deleted store still holds its metadata dirs (_graft_log,
+    // _graft_history) — zero data files means the empty frame, not a parquet
     // schema-inference failure. Short-circuit probe: O(1), not a listing.
     if (!StoreMeta.hasAnyDataFile(spark, path)) empty
     else spark.read.parquet(path)
@@ -159,8 +153,8 @@ object ConsolidatedStore {
     *   directory, which is the access path all of them share. Date-based
     *   partitioning additionally serves the retention job. Must be the
     *   same on every append to a given path. Hive-partitioned layouts
-    *   use the same sidecar-pruned O(batch + overlap) path as flat ones
-    *   (the sidecar records root-relative paths and reads them back with
+    *   use the same zone-map-pruned O(batch + overlap) path as flat ones
+    *   (the stats record root-relative paths and reads resolve them with
     *   `basePath`); only foreign/non-hive layouts fall back to the full
     *   scan.
     * @param sortWithin columns to sort by inside each written file
@@ -240,8 +234,9 @@ object ConsolidatedStore {
   private val DefaultMaxAttempts = 8
 
   /** 20 ms polls [[committedState]] waits for a bootstrapping writer's
-    * version-1 claim (2 s) and for a replacer's swap to commit (3 s) —
-    * each a single small metadata write on the other writer's side.
+    * version-1 claim (2 s) and [[coveredHead]] for a replacer's swap to
+    * commit (3 s) — each a single small metadata write on the other
+    * writer's side.
     */
   private val BootstrapPolls = 100
   private val CoveragePolls = 150
@@ -328,17 +323,16 @@ object ConsolidatedStore {
       startMaxUs = m("start_max").asInstanceOf[Long])
   }
 
-  /** Zone-map-pruned read: open ONLY the files whose sidecar envelope
-    * can hold a row satisfying `bounds`, then apply the exact row-level
-    * residual — semantically identical to `read(...).filter(residual)`,
-    * physically the reference's covering-index access path (sql:35-39):
-    * a restore-chain lookup for one database on a 100 TB store opens the
+  /** Zone-map-pruned read: open ONLY the committed files whose stats
+    * envelope can hold a row satisfying `bounds`, then apply the exact
+    * row-level residual — semantically identical to
+    * `read(...).filter(residual)` at one committed version, physically
+    * the reference's covering-index access path (sql:35-39): a
+    * restore-chain lookup for one database on a 100 TB store opens the
     * handful of files whose (database_name, last_lsn) envelope
     * intersects the predicate instead of scanning every file's footer.
-    * Falls back to a plain filtered scan for foreign layouts or stores
-    * without a sidecar. The sidecar stays a pure cache: [[StoreMeta.load]]
-    * reconciles it against the directory first, so a stale or missing
-    * sidecar degrades to one heal scan, never to wrong answers.
+    * Stores without a log (and foreign layouts) take the plain filtered
+    * scan.
     *
     * Schema note: a BOUNDED read projects the full consolidated schema
     * (null-filling optional columns a writer omitted), while the
@@ -349,24 +343,27 @@ object ConsolidatedStore {
       bounds: StoreMeta.ReadBounds): DataFrame = {
     val residual = StoreMeta.residual(bounds)
     if (bounds.unconstrained) return read(spark, path)
-    StoreMeta.load(spark, path) match {
+    loggedHead(spark, path) match {
       case None => read(spark, path).filter(residual)
-      case Some(loaded) =>
-        // reads never write: a dirty sidecar heals on the next append
-        val files = loaded.files.filter(f => StoreMeta.mayContain(f, bounds))
-        if (files.isEmpty)
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            Schemas.consolidated)
-        else spark.read
-          .option("basePath", path).schema(Schemas.consolidated)
-          .parquet(files.map(f => s"$path/${f.file}"): _*)
+      case Some(st) =>
+        readFiles(spark, path, st.live.filter(f => StoreMeta.mayContain(f, bounds)))
           .filter(residual)
     }
   }
 
+  /** The consolidated-schema read of some of the store's files. */
+  private def readFiles(
+      spark: SparkSession, path: String, files: Seq[FileStats]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        Schemas.consolidated)
+    else spark.read
+      .option("basePath", path).schema(Schemas.consolidated)
+      .parquet(files.map(f => s"$path/${f.file}"): _*)
+
   /** `xxhash64(physical_device_name)` (Spark's seed 42) of one device
-    * name, computed on the driver — the value the sidecar's per-file
+    * name, computed on the driver — the value the zone maps' per-file
     * device-hash sets hold, without a Spark job per lookup.
     */
   private[graft] def deviceHash(device: String): Long =
@@ -376,7 +373,7 @@ object ConsolidatedStore {
 
   /** Device point lookup ("which backups landed on this device" — the
     * fleet-ops question behind the reference's media-recovery paths):
-    * reads ONLY files whose sidecar device-hash set contains the probe
+    * reads ONLY committed files whose device-hash set contains the probe
     * (exact xxhash64 membership; files without a recorded set fall back
     * to their min/max range, pre-migration rows stay conservative).
     * A null probe matches files holding null-device rows, consistent
@@ -386,26 +383,18 @@ object ConsolidatedStore {
       device: String): DataFrame = {
     val probe = col("physical_device_name") <=>
       (if (device == null) lit(null).cast("string") else lit(device))
-    StoreMeta.load(spark, path) match {
+    loggedHead(spark, path) match {
       case None => read(spark, path).filter(probe)
-      case Some(loaded) =>
+      case Some(st) =>
         val h = if (device == null) 0L else deviceHash(device)
-        val files = loaded.files.filter { f =>
+        readFiles(spark, path, st.live.filter { f =>
           if (device == null) f.devNullCount != 0
           else if (f.devHashes != null) f.devHashes.contains(h)
           else f.devMin == null || f.devMax == null ||
             (StoreMeta.cmpUtf8(f.devMin, device) <= 0 &&
               StoreMeta.cmpUtf8(device, f.devMax) <= 0) ||
             f.devNullCount < 0 // pre-migration row: consult
-        }
-        if (files.isEmpty)
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            Schemas.consolidated)
-        else spark.read
-          .option("basePath", path).schema(Schemas.consolidated)
-          .parquet(files.map(f => s"$path/${f.file}"): _*)
-          .filter(probe)
+        }).filter(probe)
     }
   }
 
@@ -413,16 +402,17 @@ object ConsolidatedStore {
     * Per attempt, on a batch whose preamble is already paid:
     *
     *   1. read the COMMITTED state ([[committedState]]): the head version
-    *      v0 and its live files from one log listing (a racing writer's
-    *      uncommitted files are invisible — dedup and LogID assignment
-    *      never consume phantoms), their zone-map stats from the sidecar;
+    *      v0 and its live files with their zone-map stats from one log
+    *      read (a racing writer's uncommitted files are invisible — dedup
+    *      and LogID assignment never consume phantoms);
     *   2. anti-join the batch against the envelope-overlapping live
     *      files, assign LogIDs from the committed max;
     *   3. write the batch files into a `_graft_staging/<uuid>` dir
     *      (invisible to scans), move them into the root — exact
     *      ownership of the new file names, no listing diffs;
     *   4. claim version v0+1 via [[StoreLog.tryCommit]]'s atomic
-    *      create-no-overwrite. Win → update the sidecar, done. Loss →
+    *      create-no-overwrite, the commit carrying the new files' stats.
+    *      Win → done. Loss →
     *      delete own files and REDO from step 1 against the new state
     *      (appends are commutative but not blind: the redo re-runs the
     *      dedup and re-bases the LogIDs, which is what keeps "no lost
@@ -481,16 +471,9 @@ object ConsolidatedStore {
     0L // unreachable
   }
 
-  /** The committed store state a writer works from: the head version,
-    * the reconciled sidecar load, and the stats of the files live at the
-    * head.
-    */
-  private[store] final case class Committed(
-      version: Int, loaded: StoreMeta.Loaded, live: Seq[FileStats])
-
-  /** Step 1 of [[claimLoop]] (and [[StoreDelete]]'s state read); None =
-    * foreign layout. Waits out two states that another writer resolves
-    * within one small metadata write:
+  /** Step 1 of [[claimLoop]] (and the state read of [[StoreDelete]] and
+    * [[StoreMerge]]); None = foreign layout. Waits out two states that
+    * another writer resolves within one small metadata write:
     *
     *   - data files at version 0: a bootstrapping writer inside its
     *     publish→claim window, or data that predates the log. Files still
@@ -498,46 +481,61 @@ object ConsolidatedStore {
     *     baselines them, a concurrent one refuses (committing would
     *     orphan the data; baselining could absorb a live bootstrapper's
     *     files);
-    *   - a committed-live file missing from the directory ([[StoreMeta.load]]
-    *     heals in everything the directory holds): a copy-on-write
-    *     replacer's archive→commit swap is in flight. Reading around it
-    *     would skip dedup against those rows and fold the LogID base over
-    *     an incomplete set — duplicate keys and colliding ids committed
-    *     with no error. A state that outlasts the wait is a dead
-    *     replacer: fail and point at repair.
+    *   - a committed-live file missing from the directory (see
+    *     [[coveredHead]]).
     */
   private[store] def committedState(spark: SparkSession, path: String,
-      singleWriter: Boolean): Option[Committed] = {
+      singleWriter: Boolean): Option[StoreLog.HeadState] = {
     var polls = 0
-    def pause(limit: Int)(onTimeout: => Unit): Unit =
-      if (polls < limit) { polls += 1; Thread.sleep(20L) }
-      else { onTimeout; polls = 0 }
     while (true) {
-      val (v0, live, _) = StoreLog.headState(spark, path)
-      val unlogged = v0 == 0 && (StoreMeta.listDataFiles(spark, path) match {
-        case None => return None
-        case Some(files) => files.nonEmpty
-      })
-      if (unlogged) pause(BootstrapPolls) {
-        require(singleWriter,
-          s"appendConcurrent bootstrap on unlogged non-empty store $path: " +
-            "take one append first to baseline the log " +
-            "(or run StoreRepair.repair if a bootstrapping writer died)")
-        StoreLog.baselineIfUnlogged(spark, path)
-      }
-      else StoreMeta.load(spark, path) match {
-        case None => return None
-        case Some(loaded) =>
-          val liveStats = loaded.files.filter(f => live(f.file))
-          if (liveStats.size == live.size)
-            return Some(Committed(v0, loaded, liveStats))
-          pause(CoveragePolls) {
-            throw new StoreLog.ConcurrentCommitException(
-              s"store $path: committed-live files are missing from the " +
-                "directory and no replacing commit landed — a copy-on-write " +
-                "writer died mid-swap; run StoreRepair.repair")
+      coveredHead(spark, path) match {
+        case Some((st, hasFiles)) if st.version == 0 && hasFiles =>
+          if (polls < BootstrapPolls) { polls += 1; Thread.sleep(20L) }
+          else {
+            require(singleWriter,
+              s"appendConcurrent bootstrap on unlogged non-empty store $path: " +
+                "take one append first to baseline the log " +
+                "(or run StoreRepair.repair if a bootstrapping writer died)")
+            StoreLog.baselineIfUnlogged(spark, path)
+            polls = 0
           }
+        case other => return other.map(_._1)
       }
+    }
+    None // unreachable
+  }
+
+  /** The head state for a pruned read; None = no log or a foreign
+    * layout (take the plain filtered scan).
+    */
+  private[store] def loggedHead(
+      spark: SparkSession, path: String): Option[StoreLog.HeadState] =
+    coveredHead(spark, path).map(_._1).filter(_.version > 0)
+
+  /** The head state once every file it lists live is on disk, and
+    * whether the directory holds any data file; None = foreign layout.
+    * A committed-live file missing from the directory means a
+    * copy-on-write replacer's archive→commit swap is in flight: reading
+    * around it would skip dedup against those rows and fold the LogID
+    * base over an incomplete set — duplicate keys and colliding ids
+    * committed with no error. A state that outlasts the wait is a dead
+    * replacer: fail and point at repair.
+    */
+  private def coveredHead(spark: SparkSession,
+      path: String): Option[(StoreLog.HeadState, Boolean)] = {
+    var polls = 0
+    while (true) {
+      val st = StoreLog.headState(spark, path)
+      val onDisk = StoreMeta.listDataFiles(spark, path) match {
+        case None => return None
+        case Some(files) => files.toSet
+      }
+      if (st.live.forall(f => onDisk(f.file))) return Some((st, onDisk.nonEmpty))
+      if (polls < CoveragePolls) { polls += 1; Thread.sleep(20L) }
+      else throw new StoreLog.ConcurrentCommitException(
+        s"store $path: committed-live files are missing from the " +
+          "directory and no replacing commit landed — a copy-on-write " +
+          "writer died mid-swap; run StoreRepair.repair")
     }
     None // unreachable
   }
@@ -559,17 +557,17 @@ object ConsolidatedStore {
     */
   private def claimOnce(
       spark: SparkSession, path: String, prep: PreparedBatch,
-      state: Committed, partitionBy: Seq[String], sortWithin: Seq[String],
-      attempt: Int, beforeCommit: (Int, Int) => Unit): Option[Long] = {
-    val Committed(v0, loaded, live) = state
+      state: StoreLog.HeadState, partitionBy: Seq[String],
+      sortWithin: Seq[String], attempt: Int,
+      beforeCommit: (Int, Int) => Unit): Option[Long] = {
+    val v0 = state.version
+    val live = state.live
     val deduped = prep.deduped
     val overlapping = live
       .filter(f => prep.envelopes.exists(b => StoreMeta.overlaps(f, b)))
-    val base = live.foldLeft(0L)((m, f) => math.max(m, f.logIdMax))
+    val base = state.maxLogId
     def antiJoined(): DataFrame = deduped.alias("in")
-      .join(spark.read
-        .option("basePath", path).schema(Schemas.consolidated)
-        .parquet(overlapping.map(f => s"$path/${f.file}"): _*)
+      .join(readFiles(spark, path, overlapping)
         .select(dedupKey.map(col): _*).alias("ex"),
         keyCondition("in", "ex"), "left_anti")
     def laidOut(assigned: DataFrame): DataFrame =
@@ -605,50 +603,20 @@ object ConsolidatedStore {
             None)
         } finally if (fresh ne deduped) fresh.unpersist()
       }
-    if (n == 0L) {
-      if (loaded.dirty) updateSidecar(spark, path, state, Nil)
-      return Some(0L)
-    }
+    if (n == 0L) return Some(0L)
+    val stats = observed.getOrElse(StoreMeta.scanStats(spark, path, mine))
     beforeCommit(attempt, v0)
     if (!StoreLog.tryCommit(spark, path, v0 + 1, "append",
-        adds = mine, removes = Nil)) {
+        adds = stats, removes = Nil)) {
       // lost the claim: un-publish our files — the winner may hold our
       // keys or our LogID range
       Staging.retract(spark, path, mine)
       return None
     }
-    updateSidecar(spark, path, state,
-      observed.getOrElse(StoreMeta.scanStats(spark, path, mine)))
     Some(n)
   }
 
-  /** Post-append sidecar maintenance: a drifted sidecar folds in full, so
-    * its heal scan is paid once rather than by every later append until
-    * the segment fold; a clean one takes one O(batch) delta segment,
-    * folding past [[StoreMeta.SegmentFoldThreshold]] segments (unbounded
-    * trickle appends must not regrow the O(store) segment read this
-    * design removed). A fold records the COMMITTED files only: a racing
-    * writer's unclaimed files may yet be retracted, and it records its
-    * own once its commit lands. The append's commit has already landed
-    * and the sidecar is a pure cache, so NOTHING here may fail the
-    * append: a racing compaction archiving our just-committed files
-    * mid-scan, or any sidecar write error, degrades to a warning and one
-    * heal rescan on the next load().
-    */
-  private def updateSidecar(spark: SparkSession, path: String,
-      state: Committed, newStats: => Seq[FileStats]): Unit =
-    try {
-      val loaded = state.loaded
-      if (loaded.dirty || loaded.segments + 1 > StoreMeta.SegmentFoldThreshold)
-        StoreMeta.save(spark, path, state.live ++ newStats)
-      else StoreMeta.saveDelta(spark, path, newStats)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"post-commit sidecar update failed on $path " +
-          "(cache only — next load() heals): " + e)
-    }
-
-  /** The pre-sidecar shape — whole-table key scan + whole-table max —
+  /** The pre-zone-map shape — whole-table key scan + whole-table max —
     * kept for foreign (non-hive) layouts where per-file zone maps cannot
     * be reconstructed. Single-writer: there is no log to arbitrate.
     */

@@ -30,8 +30,6 @@ import graft.model.Schemas
   */
 object StoreDelete {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   final case class DeleteStats(
     deleted: Long, filesDropped: Long, filesRewritten: Long)
 
@@ -39,13 +37,13 @@ object StoreDelete {
     * match the store's appends (same contract as
     * [[ConsolidatedStore.append]]).
     *
-    * @param fileVerdict optional sidecar-stats pre-classification of each
+    * @param fileVerdict optional zone-map pre-classification of each
     *   file against the predicate: `Some(true)` = EVERY row matches
     *   (drop whole — no data scan, row count comes from parquet footers),
     *   `Some(false)` = NO row matches (untouched — no scan at all),
     *   `None` = unknown (pay the column-pruned counting scan). The
     *   caller owns soundness: a wrong verdict deletes or keeps wrong
-    *   rows. [[purgeExpired]] derives it from the sidecar's
+    *   rows. [[purgeExpired]] derives it from the files'
     *   backup_start_date envelopes, which is what turns a 100 TB
     *   retention purge into a metadata operation on all but the one
     *   boundary file.
@@ -64,22 +62,19 @@ object StoreDelete {
     // a "successful" delete with no error anywhere.
     //
     // Candidates are the COMMITTED live set only (same rule as
-    // Compaction.rewriteCow): the sidecar load heals in every file the
-    // directory lists — including a concurrent appender's
-    // published-but-unclaimed batch. Absorbing such a file into this
+    // Compaction.rewriteCow): the directory also lists a concurrent
+    // appender's published-but-unclaimed batch. Absorbing such a file into this
     // delete's removes would archive rows whose commit hasn't landed
     // (silently lost once it does) and breaks the disjointness that
     // lets racing appends rebase this commit.
     val state = ConsolidatedStore.committedState(spark, path,
       singleWriter = true).getOrElse(throw new IllegalArgumentException(
         s"delete needs a graft-managed layout (foreign subdirs found): $path"))
-    val loaded = state.loaded
     val candidates = state.live
     if (candidates.isEmpty) return DeleteStats(0L, 0L, 0L)
     val rootQ = StoreMeta.qualifiedPath(spark, path)
     val hit = coalesce(predicate, lit(false))
 
-    // sidecar-healed files carry fresh stats, so verdicts are current
     val verdicts = candidates.map(f => f.file -> fileVerdict(f))
     val wholeFiles = verdicts.collect { case (f, Some(true)) => f }.sorted
     val unknown = verdicts.collect { case (f, None) => f }
@@ -118,8 +113,9 @@ object StoreDelete {
     // directory-listing diff that could absorb a concurrent appender's
     // in-flight files into this commit.
     // survivor-file stats ride the staged write (CollectMetrics — the
-    // append/merge-path fusion), replacing the post-commit footer rescan
-    // whenever the rewrite lands as one flat file
+    // append/merge-path fusion) whenever the rewrite lands as one flat
+    // file; otherwise the promoted files' footers are scanned before the
+    // claim
     var obs: org.apache.spark.sql.Observation = null
     val staged: Option[(String, Seq[String])] =
       if (partial.isEmpty) None
@@ -148,26 +144,14 @@ object StoreDelete {
     StoreLog.archive(spark, path, v,
       removed.map(f => (new Path(s"$path/$f"), f)))
     staged.foreach { case (d, fl) => Staging.promote(spark, path, d, fl) }
+    val newStats =
+      if (newFiles.size == 1 && partitionBy.isEmpty && obs != null)
+        Seq(ConsolidatedStore.observedStats(obs.get, newFiles.head))
+      else StoreMeta.scanStats(spark, path, newFiles)
     // optimistic claim (see StoreLog.commitReplacing): disjoint racers
     // rebase, overlapping rewrites roll back and abort
     StoreLog.commitReplacing(spark, path, "delete",
-      adds = newFiles, removes = removed, archivedAt = v)
-
-    // post-commit sidecar fold: a pure cache — never fail a delete
-    // whose commit already landed
-    try {
-      val removedSet = removed.toSet
-      val newStats =
-        if (newFiles.size == 1 && partitionBy.isEmpty && obs != null)
-          Seq(ConsolidatedStore.observedStats(obs.get, newFiles.head))
-        else StoreMeta.scanStats(spark, path, newFiles)
-      StoreMeta.save(spark, path,
-        loaded.files.filterNot(f => removedSet(f.file)) ++ newStats)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"post-commit sidecar fold failed on $path " +
-          "(cache only — next load() heals): " + e)
-    }
+      adds = newStats, removes = removed, archivedAt = v)
     DeleteStats(deleted, dropped.size.toLong, partial.size.toLong)
   }
 
@@ -176,8 +160,8 @@ object StoreDelete {
     * row itself survives, sql:404-408), then [[delete]] everything
     * strictly below it.
     *
-    * Both phases run off the sidecar's backup_start_date envelopes when
-    * available:
+    * Both phases run off the committed files' backup_start_date
+    * envelopes when the store has a log:
     *
     *   - the CUTOFF (max start date below the threshold) folds the
     *     per-file maxima that sit entirely below the threshold on the
@@ -189,24 +173,24 @@ object StoreDelete {
     *     rewrite. Sound because `backup_start_date` is non-null in the
     *     consolidated schema, so min/max cover every row.
     *
-    * Stores without a usable sidecar (foreign layouts) fall back to the
-    * full column-pruned scan for the cutoff and per-file counting for
-    * the delete.
+    * Stores without a log (and foreign layouts) fall back to the full
+    * column-pruned scan for the cutoff; the delete baselines an unlogged
+    * store first.
     */
   def purgeExpired(spark: SparkSession, path: String, retentionDays: Int,
       now: java.sql.Timestamp,
       partitionBy: Seq[String] = Nil): DeleteStats = {
-    val loaded = StoreMeta.load(spark, path)
+    val files = ConsolidatedStore.loggedHead(spark, path).map(_.live)
     val threshold = new java.sql.Timestamp(
       now.getTime - retentionDays * 86400000L)
     val thresholdUs = StoreMeta.micros(threshold)
 
-    val cutoffUs: Option[Long] = loaded match {
-      case Some(l) if l.files.nonEmpty && l.files.forall(_.startMaxUs != null) =>
-        val belowMeta = l.files
+    val cutoffUs: Option[Long] = files match {
+      case Some(fs) if fs.nonEmpty && fs.forall(_.startMaxUs != null) =>
+        val belowMeta = fs
           .filter(f => f.startMaxUs < thresholdUs && f.startMaxUs != Long.MinValue)
           .map(_.startMaxUs.longValue)
-        val straddling = l.files
+        val straddling = fs
           .filter(f => f.startMinUs < thresholdUs && f.startMaxUs >= thresholdUs)
         val scanned: Option[Long] =
           if (straddling.isEmpty) None

@@ -16,10 +16,14 @@ import graft.model.Schemas
   *
   * Design (the Delta-Lake shape, scoped to this store's needs):
   *
-  *  - `<root>/_graft_log/v000000042.json` — one small JSON commit per
-  *    mutation: `{"version", "op", "adds":[...], "removes":[...]}` with
-  *    store-root-relative file paths. O(1) per append, like the
-  *    [[StoreMeta]] delta segments.
+  *  - `<root>/_graft_log/v000000042.json` — one small commit per
+  *    mutation: a JSON header line `{"version", "op", "adds":[...],
+  *    "removes":[...], "txn", "stats": n}` with store-root-relative file
+  *    paths, then one [[FileStats]] row per added file
+  *    ([[StoreMeta.renderStats]]) — Delta's `add` actions carrying file
+  *    stats. The zone maps every append, merge and pruned read plans
+  *    with are therefore the log's own state, not a second log beside
+  *    it. O(batch) per append.
   *  - **Current-state reads stay plain directory scans.** Unlike Delta,
   *    the live table IS the directory: operations that replace files
   *    (compaction) move the replaced files into
@@ -36,7 +40,7 @@ import graft.model.Schemas
   *
   * The log is maintained by every store writer (appends, merge, delete,
   * compaction) on list-able layouts (flat or hive-partitioned — the
-  * same condition as the sidecar); foreign layouts skip logging and
+  * layouts [[StoreMeta.listDataFiles]] accepts); foreign layouts skip logging and
   * simply have no time travel. A store that predates the log is
   * baselined before its first logged commit ([[baselineIfUnlogged]]):
   * version 1 lists every data file, so history begins there.
@@ -49,9 +53,9 @@ object StoreLog {
   val historyDirName = "_graft_history"
 
   /** One log CHECKPOINT per this many commits: a `ckpt-v%09d.json` file
-    * holding the live file set and seen txn tokens at that version, so
-    * the hot-path log readers ([[committedLiveSet]], [[txnSeen]], the
-    * appenders' live replays) read one checkpoint + at most this many
+    * holding the live files with their stats and the seen txn tokens at
+    * that version, so the hot-path log readers ([[headState]],
+    * [[txnSeen]]) read one checkpoint + at most this many
     * tail commits instead of every commit since the store was born —
     * O(64), not O(#commits), per operation on a store with years of
     * trickle appends. Checkpoints are DERIVED data over immutable
@@ -68,10 +72,24 @@ object StoreLog {
     * "app:batchId") recorded with the commit — the Delta-style
     * transactional-writer contract that makes a redelivered streaming
     * micro-batch a NO-OP instead of a double-apply ([[txnSeen]]).
+    * `stats`: one row per add, in `adds` order; empty on a commit written
+    * before the log carried stats (its files are scanned when read).
     */
   final case class Commit(
       version: Int, op: String, adds: Seq[String], removes: Seq[String],
-      txn: Option[String] = None)
+      txn: Option[String] = None, stats: Seq[FileStats] = Nil) {
+    /** (file, stats) per add; null stats = not recorded. */
+    private[store] def added: Seq[(String, FileStats)] =
+      if (stats.nonEmpty) stats.map(f => f.file -> f) else adds.map(_ -> null)
+  }
+
+  /** The committed head: its version (0 = no log), the live files with
+    * their zone-map stats, and the seen txn tokens.
+    */
+  final case class HeadState(version: Int, live: Seq[FileStats],
+      txns: Set[String]) {
+    def maxLogId: Long = live.foldLeft(0L)((m, f) => math.max(m, f.logIdMax))
+  }
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -89,21 +107,24 @@ object StoreLog {
     listVersions(spark, root).lastOption.getOrElse(0)
 
   /** Commit and checkpoint versions of the log, ascending, from ONE
-    * listing of the log directory.
+    * listing of the log directory, and the file system that listed it:
+    * the reads that follow reuse it instead of resolving one per file
+    * (each resolution copies the session's Hadoop configuration).
     */
-  private final case class LogListing(versions: Seq[Int], checkpoints: Seq[Int])
+  private final case class LogListing(versions: Seq[Int], checkpoints: Seq[Int],
+      fs: FileSystem)
 
   private def listLog(spark: SparkSession, root: String): LogListing = {
     val dir = new Path(s"$root/$dirName")
     val f = fs(spark, dir)
-    if (!f.exists(dir)) return LogListing(Nil, Nil)
+    if (!f.exists(dir)) return LogListing(Nil, Nil, f)
     val names = f.listStatus(dir).toSeq.map(_.getPath.getName)
     def numbered(prefix: String): Seq[Int] = names
       .collect { case n if n.startsWith(prefix) && n.endsWith(".json") =>
         n.stripPrefix(prefix).stripSuffix(".json").toInt
       }
       .sorted
-    LogListing(numbered("v"), numbered("ckpt-v"))
+    LogListing(numbered("v"), numbered("ckpt-v"), f)
   }
 
   private def listVersions(spark: SparkSession, root: String): Seq[Int] =
@@ -115,13 +136,16 @@ object StoreLog {
     */
   @volatile private[graft] var metaReadProbe: Path => Unit = null
 
-  /** Read a small metadata file fully, driver-side (commit records,
-    * sidecar and watermark segments — all tiny by construction).
+  /** Read a small metadata file fully, driver-side (commits,
+    * checkpoints and watermark segments).
     */
-  private[store] def readBytesOf(spark: SparkSession, p: Path): Array[Byte] = {
+  private[store] def readBytesOf(spark: SparkSession, p: Path): Array[Byte] =
+    readBytes(fs(spark, p), p)
+
+  private def readBytes(f: FileSystem, p: Path): Array[Byte] = {
     val probe = metaReadProbe
     if (probe != null) probe(p)
-    val in = fs(spark, p).open(p)
+    val in = f.open(p)
     try {
       val bos = new java.io.ByteArrayOutputStream()
       val buf = new Array[Byte](8192)
@@ -143,14 +167,13 @@ object StoreLog {
     * throw while repair itself correctly refuses to drop so young a
     * claim — a band where readers crash against a healthy store.
     */
-  private def readCommitPatiently(
-      spark: SparkSession, root: String, v: Int): Commit = {
+  private def readCommitPatiently(f: FileSystem, root: String, v: Int): Commit = {
     val p = commitPath(root, v)
     var attempt = 0
     var out: Commit = null
     val maxAttempts = (AbortedClaimMinAgeMs / 10L).toInt + 100
     while (out == null) {
-      try out = parse(new String(readBytesOf(spark, p), StandardCharsets.UTF_8))
+      try out = parse(new String(readBytes(f, p), StandardCharsets.UTF_8))
       catch {
         case e: Exception =>
           attempt += 1
@@ -165,8 +188,10 @@ object StoreLog {
     out
   }
 
-  def readCommits(spark: SparkSession, root: String): Seq[Commit] =
-    listVersions(spark, root).map(v => readCommitPatiently(spark, root, v))
+  def readCommits(spark: SparkSession, root: String): Seq[Commit] = {
+    val listing = listLog(spark, root)
+    listing.versions.map(v => readCommitPatiently(listing.fs, root, v))
+  }
 
   // ---- log checkpoints (see CheckpointEvery) ----
 
@@ -189,9 +214,12 @@ object StoreLog {
     * "removed at a vacuumed version" — resolving such a request against
     * the surviving entries silently serves a LATER incarnation's content
     * (or the live root file) for a pre-vacuum snapshot.
+    *
+    * `live`: each live file with its stats, null on a checkpoint written
+    * before the log carried stats.
     */
   private final case class Checkpoint(
-      version: Int, live: Seq[String], txns: Seq[String],
+      version: Int, live: Seq[(String, FileStats)], txns: Seq[String],
       homes: Option[Map[String, Seq[Int]]],
       vacuumHorizon: Int = 0)
 
@@ -199,16 +227,18 @@ object StoreLog {
     new Path(s"$root/$dirName/${f"ckpt-v$v%09d"}.json")
 
   private def readCheckpointOpt(
-      spark: SparkSession, root: String, v: Int): Option[Checkpoint] =
+      f: FileSystem, root: String, v: Int): Option[Checkpoint] =
     try {
       import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val jv = JsonMethods.parse(new String(
-        readBytesOf(spark, ckptPath(root, v)), StandardCharsets.UTF_8))
+      val (jv, stats) = parseLines(new String(
+        readBytes(f, ckptPath(root, v)), StandardCharsets.UTF_8))
       implicit val fmt: Formats = DefaultFormats
       Some(Checkpoint(
         (jv \ "version").extract[Int],
-        (jv \ "live").extract[Seq[String]],
+        (jv \ "live") match {
+          case JNothing | JNull => stats.map(f => f.file -> f)
+          case names => names.extract[Seq[String]].map(_ -> null)
+        },
         (jv \ "txns").extract[Seq[String]],
         // explicit presence check: json4s extracts a MISSING field to an
         // EMPTY Map (extractOpt returns Some(Map())), which would make a
@@ -230,25 +260,36 @@ object StoreLog {
       case _: Exception => None
     }
 
-  /** (live files, seen txn tokens) at `version`, reconstructed from the
-    * newest readable checkpoint `<= version` plus the tail commits —
-    * the hot-path read shape.
+  private type LiveStats = scala.collection.mutable.LinkedHashMap[String, FileStats]
+
+  /** (live files → stats, seen txn tokens) at `version`, reconstructed
+    * from the newest readable checkpoint `<= version` plus the tail
+    * commits — the hot-path read shape. Null stats = not recorded.
     */
   private def stateAt(spark: SparkSession, root: String, version: Int,
-      listing: LogListing):
-      (scala.collection.mutable.LinkedHashSet[String],
-        scala.collection.mutable.Set[String]) = {
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
+      listing: LogListing): (LiveStats, scala.collection.mutable.Set[String]) = {
+    val live: LiveStats = scala.collection.mutable.LinkedHashMap.empty
     val txns = scala.collection.mutable.Set.empty[String]
     val base = newestReadableCheckpoint(spark, root, version, listing)
     base.foreach { c => live ++= c.live; txns ++= c.txns }
     val from = base.map(_.version).getOrElse(0)
     listing.versions.filter(v => v > from && v <= version)
       .foreach { v =>
-        val c = readCommitPatiently(spark, root, v)
-        live ++= c.adds; live --= c.removes; c.txn.foreach(txns += _)
+        val c = readCommitPatiently(listing.fs, root, v)
+        live ++= c.added; live --= c.removes; c.txn.foreach(txns += _)
       }
     (live, txns)
+  }
+
+  /** The stats of every live file: the recorded ones, plus one footer
+    * scan of the files whose commit or checkpoint predates stats in the
+    * log (the next checkpoint records those, see [[checkpointNow]]).
+    */
+  private def filledStats(
+      spark: SparkSession, root: String, live: LiveStats): Seq[FileStats] = {
+    val unknown = live.collect { case (f, null) => f }.toSeq
+    StoreMeta.scanStats(spark, root, unknown).foreach(s => live(s.file) = s)
+    live.values.toSeq
   }
 
   /** Newest readable checkpoint at or below `atMost`. */
@@ -257,24 +298,27 @@ object StoreLog {
       listing: LogListing): Option[Checkpoint] =
     listing.checkpoints
       .filter(_ <= atMost).sorted(Ordering[Int].reverse)
-      .iterator.map(cv => readCheckpointOpt(spark, root, cv))
+      .iterator.map(cv => readCheckpointOpt(listing.fs, root, cv))
       .collectFirst { case Some(c) => c }
 
-  /** Live files at `version`, checkpoint-accelerated. Insertion-ordered. */
-  private[graft] def liveSetAtVersion(
-      spark: SparkSession, root: String, version: Int): Seq[String] =
-    stateAt(spark, root, version, listLog(spark, root))._1.toSeq
-
-  /** The head version, and the COMMITTED live set and seen txn tokens
-    * at it, from one listing of the log directory — the appenders'
-    * per-attempt state read. (0, empty, empty) = no log yet.
+  /** The head version, and the COMMITTED live files with their stats
+    * and the seen txn tokens at it, from one listing of the log
+    * directory — the one committed-state read every writer and pruned
+    * reader plans with. Version 0 (no files, no txns) = no log yet.
+    *
+    * Copy-on-write maintenance (merge/delete/compaction) must derive its
+    * read-and-remove candidates from THIS set, never from a directory
+    * listing: a listing sees a concurrent appender's
+    * published-but-unclaimed files, and absorbing one into a replacing
+    * commit turns the appender's in-flight batch into this writer's
+    * archive (silently lost rows once the appender's own commit lands,
+    * or permanently if an abort rollback discards it).
     */
-  private[graft] def headState(spark: SparkSession, root: String)
-      : (Int, Set[String], Set[String]) = {
+  def headState(spark: SparkSession, root: String): HeadState = {
     val listing = listLog(spark, root)
     val head = listing.versions.lastOption.getOrElse(0)
     val (live, txns) = stateAt(spark, root, head, listing)
-    (head, live.toSet, txns.toSet)
+    HeadState(head, filledStats(spark, root, live), txns.toSet)
   }
 
   /** Write the checkpoint for `v` if it is due; never fails the commit
@@ -294,7 +338,10 @@ object StoreLog {
 
   /** Force a checkpoint at the current head — the maintenance entry
     * point that upgrades a store on demand instead of waiting for the
-    * next natural multiple of [[CheckpointEvery]]. Two uses: a store
+    * next natural multiple of [[CheckpointEvery]]. Three uses: a store
+    * whose commits predate stats in the log scans those files on every
+    * state read until a checkpoint records their stats — this writes
+    * one now; a store
     * whose checkpoints predate the `homes` remove index keeps the
     * slower tail-replay time travel until a checkpoint REWRITE — this
     * writes one now (the index builds via one full replay, after which
@@ -320,7 +367,7 @@ object StoreLog {
     val listing = listLog(spark, root)
     val base = newestReadableCheckpoint(spark, root, v, listing)
       .filter(_.homes.isDefined)
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
+    val live: LiveStats = scala.collection.mutable.LinkedHashMap.empty
     val txns = scala.collection.mutable.Set.empty[String]
     val homes = scala.collection.mutable.Map.empty[String, Seq[Int]]
     base.foreach { c =>
@@ -328,8 +375,8 @@ object StoreLog {
     }
     val from = base.map(_.version).getOrElse(0)
     listing.versions.filter(x => x > from && x <= v).foreach { x =>
-      val c = readCommitPatiently(spark, root, x)
-      live ++= c.adds; live --= c.removes; c.txn.foreach(txns += _)
+      val c = readCommitPatiently(listing.fs, root, x)
+      live ++= c.added; live --= c.removes; c.txn.foreach(txns += _)
       c.removes.foreach(r => homes(r) = homes.getOrElse(r, Nil) :+ x)
     }
     // prune index entries whose archive home dir was VACUUMED: the
@@ -362,34 +409,65 @@ object StoreLog {
       }
       homes.clear(); homes ++= pruned
     }
-    val bytes = JsonMethods.compact(JsonMethods.render(
-      ("version" -> v) ~ ("live" -> live.toSeq) ~
-        ("txns" -> txns.toSeq.sorted) ~
+    val stats = filledStats(spark, root, live)
+    val header = JsonMethods.compact(JsonMethods.render(
+      ("version" -> v) ~ ("txns" -> txns.toSeq.sorted) ~
         ("homes" -> homes.toMap) ~
-        ("vacuumHorizon" -> horizon))).getBytes(StandardCharsets.UTF_8)
+        ("vacuumHorizon" -> horizon) ~ ("stats" -> stats.size)))
     val p = ckptPath(root, v)
-    createExclusive(fs(spark, p), p, bytes)
+    createExclusive(fs(spark, p), p, renderLines(header, stats))
   }
 
-  private def parse(json: String): Commit = {
+  /** Commits and checkpoints are JSON lines: a header object announcing
+    * `"stats": n`, then n [[FileStats]] rows. A header without the count
+    * was written before the log carried stats and has no rows. A row
+    * count that disagrees with the header is a torn file (a reader in a
+    * writer's create→fill window, or a dead writer) and throws, as a
+    * truncated header does.
+    */
+  private def parseLines(text: String): (org.json4s.JValue, Seq[FileStats]) = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     implicit val fmt: Formats = DefaultFormats
-    val jv = JsonMethods.parse(json)
-    Commit(
+    val lines = text.split('\n')
+    val jv = JsonMethods.parse(lines(0))
+    val stats = (jv \ "stats") match {
+      case JNothing | JNull => Nil
+      case n =>
+        require(lines.length == n.extract[Int] + 1,
+          s"torn log file: ${lines.length - 1} of ${n.extract[Int]} stats rows")
+        lines.toSeq.tail.map(StoreMeta.parseStats)
+    }
+    (jv, stats)
+  }
+
+  private def renderLines(header: String, stats: Seq[FileStats]): Array[Byte] =
+    (header +: stats.map(StoreMeta.renderStats)).mkString("\n")
+      .getBytes(StandardCharsets.UTF_8)
+
+  private def parse(text: String): Commit = {
+    import org.json4s._
+    implicit val fmt: Formats = DefaultFormats
+    val (jv, stats) = parseLines(text)
+    val c = Commit(
       (jv \ "version").extract[Int],
       (jv \ "op").extract[String],
       (jv \ "adds").extract[Seq[String]],
       (jv \ "removes").extract[Seq[String]],
-      (jv \ "txn").extractOpt[String])
+      (jv \ "txn").extractOpt[String],
+      stats)
+    require(stats.isEmpty || stats.map(_.file) == c.adds,
+      s"commit v${c.version}: stats rows do not match its adds")
+    c
   }
 
-  private def render(c: Commit): String = {
+  private def render(c: Commit): Array[Byte] = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
-    JsonMethods.compact(JsonMethods.render(
+    renderLines(JsonMethods.compact(JsonMethods.render(
       ("version" -> c.version) ~ ("op" -> c.op) ~
-        ("adds" -> c.adds) ~ ("removes" -> c.removes) ~ ("txn" -> c.txn)))
+        ("adds" -> c.adds) ~ ("removes" -> c.removes) ~ ("txn" -> c.txn) ~
+        ("stats" -> c.stats.size))), c.stats)
   }
 
   /** Whether a throwable (anywhere in its cause chain) reports a data
@@ -454,7 +532,7 @@ object StoreLog {
         var done = false
         while (!done) {
           try {
-            parse(new String(readBytesOf(spark, p), StandardCharsets.UTF_8))
+            parse(new String(readBytes(f, p), StandardCharsets.UTF_8))
             done = true // parses — a live head, nothing to repair
           } catch {
             case _: Exception =>
@@ -507,13 +585,17 @@ object StoreLog {
     * NIO `CREATE_NEW` (a true O_CREAT|O_EXCL) writing the full content
     * in one call, which also shrinks the claim→fill window readers must
     * tolerate to a single syscall pair.
+    *
+    * `adds` carry each added file's zone-map stats: the writer's own
+    * files, observed during their write or scanned before the claim.
     */
   def tryCommit(spark: SparkSession, root: String, expected: Int, op: String,
-      adds: Seq[String], removes: Seq[String],
+      adds: Seq[FileStats], removes: Seq[String],
       txn: Option[String] = None): Boolean = {
     val p = commitPath(root, expected)
-    val bytes = render(Commit(expected, op, adds.sorted, removes.sorted, txn))
-      .getBytes(StandardCharsets.UTF_8)
+    val sorted = adds.sortBy(_.file)
+    val bytes = render(Commit(expected, op, sorted.map(_.file), removes.sorted,
+      txn, sorted))
     val f = fs(spark, p)
     if (f.exists(p)) return false // cheap pre-check; create is the arbiter
     val won = createExclusive(f, p, bytes)
@@ -558,16 +640,17 @@ object StoreLog {
     * file-replacing ops through [[commitReplacing]] (merge/delete/optimize).
     */
   def commit(spark: SparkSession, root: String, op: String,
-      adds: Seq[String], removes: Seq[String],
+      adds: Seq[FileStats], removes: Seq[String],
       txn: Option[String] = None): Int = {
-    val head = currentVersion(spark, root)
+    val listing = listLog(spark, root)
+    val head = listing.versions.lastOption.getOrElse(0)
     // never claim PAST an unreadable head: this path derives its version
     // from the listing alone, so a dead writer's empty claim at the head
     // would become a non-head unreadable commit — which no repair can
     // safely drop and which bricks every readCommits caller forever.
     // readCommitPatiently tolerates a live claim's fill window and
     // throws (pointing at StoreRepair) on a genuinely dead one.
-    if (head > 0) readCommitPatiently(spark, root, head)
+    if (head > 0) readCommitPatiently(listing.fs, root, head)
     val v = head + 1
     if (!tryCommit(spark, root, v, op, adds, removes, txn))
       throw new ConcurrentCommitException(
@@ -616,7 +699,7 @@ object StoreLog {
     *   recompute loop.
     */
   def commitReplacing(spark: SparkSession, root: String, op: String,
-      adds: Seq[String], removes: Seq[String], archivedAt: Int,
+      adds: Seq[FileStats], removes: Seq[String], archivedAt: Int,
       txn: Option[String] = None, rebaseDisjoint: Boolean = true,
       stateReadAt: Option[Int] = None): Int = {
     // same guard as the serialized commit(): callers derive `archivedAt`
@@ -624,8 +707,9 @@ object StoreLog {
     // unreadable head claim would be committed past — becoming a
     // non-trailing unreadable commit that bricks every readCommits
     // caller permanently (no repair can safely drop a non-head claim)
-    val head = currentVersion(spark, root)
-    if (head > 0) readCommitPatiently(spark, root, head)
+    val listing = listLog(spark, root)
+    val head = listing.versions.lastOption.getOrElse(0)
+    if (head > 0) readCommitPatiently(listing.fs, root, head)
     // staleness gate for global-state ops (`stateReadAt` set): the
     // version claim below only detects racers that land AFTER
     // `archivedAt` was captured — but `archivedAt` is captured after the
@@ -635,21 +719,23 @@ object StoreLog {
     // and a LogID base from the pre-racer snapshot — silent duplicate
     // ids. Versions are dense integers, so "commits exist in
     // (stateReadAt, archivedAt)" is a pure integer comparison.
+    val added = adds.map(_.file)
     stateReadAt.filter(_ < archivedAt - 1).foreach { sr =>
-      rollbackReplacing(spark, root, archivedAt, adds)
+      rollbackReplacing(spark, root, archivedAt, added)
       throw new StaleReplacingCommit(
         s"$op on $root read its state at v$sr but commits through " +
           s"v${archivedAt - 1} landed during its compute and its output " +
           "depends on global state; rolled back for recompute")
     }
-    val mine = (adds ++ removes).toSet
+    val mine = (added ++ removes).toSet
     var myV = archivedAt
     while (!tryCommit(spark, root, myV, op, adds, removes, txn)) {
       val cur = currentVersion(spark, root)
       // read only the contested window, not the whole log
-      val intervening = listVersions(spark, root)
+      val now = listLog(spark, root)
+      val intervening = now.versions
         .filter(v => v >= myV && v <= cur)
-        .map(v => readCommitPatiently(spark, root, v))
+        .map(v => readCommitPatiently(now.fs, root, v))
       if (intervening.exists(c =>
           c.adds.exists(mine) || c.removes.exists(mine))) {
         // roll back THIS WRITER'S footprint only — never a global repair:
@@ -660,14 +746,14 @@ object StoreLog {
         // exact footprint: the archived originals (restore the ones the
         // log still lists live; the winner's commit removed the rest) and
         // our promoted `adds` (delete — they were never committed).
-        rollbackReplacing(spark, root, myV, adds)
+        rollbackReplacing(spark, root, myV, added)
         throw new ConcurrentCommitException(
           s"$op on $root conflicts with concurrent commits " +
             s"${intervening.map(_.version).mkString(",")} touching shared " +
             "files; rolled back — re-run against the current state")
       }
       if (!rebaseDisjoint) {
-        rollbackReplacing(spark, root, myV, adds)
+        rollbackReplacing(spark, root, myV, added)
         throw new StaleReplacingCommit(
           s"$op on $root raced disjoint commits " +
             s"${intervening.map(_.version).mkString(",")} and its output " +
@@ -732,7 +818,7 @@ object StoreLog {
               // dst taken = the winner archived its own copy; drop ours
               if (!f.rename(p, dst)) f.delete(p, false)
             case None =>
-              // never committed by ANYONE — under the committedLiveSet
+              // never committed by ANYONE — under the headState
               // contract this op never archives such a file, so reaching
               // here means a protocol gap (e.g. a racing appender's
               // published-but-unclaimed file was absorbed). Deleting
@@ -792,27 +878,15 @@ object StoreLog {
     * guard a restarted streaming writer checks before re-applying a
     * micro-batch. O(log) driver read; the log is tiny by construction.
     */
-  def txnSeen(spark: SparkSession, root: String, txn: String): Boolean =
-    headState(spark, root)._3.contains(txn)
-
-  /** The COMMITTED live file set (root-relative), replayed through the
-    * current head; None when the store has no log. Copy-on-write
-    * maintenance (merge/delete/compaction) must derive its
-    * read-and-remove candidates from THIS set, never from a directory
-    * listing or a sidecar load — those see a concurrent appender's
-    * published-but-unclaimed files, and absorbing one into a replacing
-    * commit turns the appender's in-flight batch into this writer's
-    * archive (silently lost rows once the appender's own commit lands,
-    * or permanently if an abort rollback discards it).
-    */
-  def committedLiveSet(
-      spark: SparkSession, root: String): Option[Set[String]] = {
-    val (head, live, _) = headState(spark, root)
-    if (head == 0) None else Some(live)
+  def txnSeen(spark: SparkSession, root: String, txn: String): Boolean = {
+    val listing = listLog(spark, root)
+    stateAt(spark, root, listing.versions.lastOption.getOrElse(0), listing)
+      ._2.contains(txn)
   }
 
   /** Baseline a store whose data predates the log: claim version 1 as a
-    * `baseline` commit listing every data file the directory holds, so
+    * `baseline` commit listing every data file the directory holds with
+    * its scanned stats, so
     * history starts there and every later writer takes the logged path.
     * No-op on a logged, empty or foreign-layout store. The claim is
     * create-no-overwrite, so racing baseliners converge on one baseline.
@@ -823,7 +897,8 @@ object StoreLog {
   def baselineIfUnlogged(spark: SparkSession, root: String): Unit =
     if (currentVersion(spark, root) == 0)
       StoreMeta.listDataFiles(spark, root).filter(_.nonEmpty).foreach(files =>
-        tryCommit(spark, root, 1, "baseline", adds = files, removes = Nil))
+        tryCommit(spark, root, 1, "baseline",
+          adds = StoreMeta.scanStats(spark, root, files), removes = Nil))
 
   /** (relative file, base dir) pairs of the table at `version`: replay
     * adds/removes through v, then resolve each surviving file to its
@@ -860,18 +935,18 @@ object StoreLog {
     }
     base.foreach { c =>
       c.homes.get.foreach { case (fl, vs) =>
-        if (live(fl))
+        if (live.contains(fl))
           vs.find(_ > version).foreach(mv =>
             removedAt.getOrElseUpdate(fl, mv))
       }
     }
     val from = math.max(base.map(_.version).getOrElse(0), version)
     listing.versions.filter(x => x > from && x <= head).foreach { x =>
-      val c = readCommitPatiently(spark, root, x)
+      val c = readCommitPatiently(listing.fs, root, x)
       c.removes.foreach(fl =>
-        if (live(fl)) removedAt.getOrElseUpdate(fl, x))
+        if (live.contains(fl)) removedAt.getOrElseUpdate(fl, x))
     }
-    live.toSeq.map { fl =>
+    live.keys.toSeq.map { fl =>
       val base = removedAt.get(fl) match {
         case Some(v) => s"$root/$historyDirName/${f"v$v%09d"}"
         case None => root

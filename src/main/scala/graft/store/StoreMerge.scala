@@ -25,7 +25,8 @@ import graft.model.Schemas
   *
   * Scale shape (the part that must survive 100 TB): nothing here is
   * O(table).
-  *   1. [[StoreMeta]] zone maps prune the match probe to files whose key
+  *   1. The log's zone maps ([[StoreLog.headState]]) prune the match
+  *      probe to committed files whose key
   *      ranges can intersect the batch's per-database envelopes — the
   *      probe scan reads ONLY the 4 key columns + LogID of those files.
   *   2. Only files that actually CONTAIN a matched key (`input_file_name`
@@ -56,8 +57,6 @@ import graft.model.Schemas
   * `dropDuplicates` partition-order dependence.
   */
 object StoreMerge {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** `attempts`/`staleRecomputes` mirror the append path's `onAttempt`
     * accounting: a fleet running CDC merges against a busy append cadence
@@ -163,13 +162,13 @@ object StoreMerge {
     // time): the attempt's staleness anchor below must be a version the
     // log can compare claims against, and the old commit-time baseline
     // sat in its own attempt's (stateReadAt, claim) window
-    // (foreign layouts return None and skip the baseline — the load
-    // below still throws for them, as before, without a stray commit)
+    // (foreign layouts skip the baseline — the state read below throws
+    // for them without a stray commit)
     StoreLog.baselineIfUnlogged(spark, path)
     // the version this attempt's computation is anchored to, captured
     // BEFORE any state read (anchor ≤ every read, or staleness hides):
-    // everything below — the sidecar load, committedLiveSet, the
-    // key/LogID probe, the insert dedup, loaded.maxLogId — describes the
+    // everything below — the head state, the key/LogID probe, the
+    // insert dedup, its maxLogId — describes the
     // store AS OF this version or newer. An insert-bearing merge passes
     // it to commitReplacing: a commit landing during the COMPUTE
     // (invisible to the version claim, which is captured after staging)
@@ -180,25 +179,19 @@ object StoreMerge {
     // under-triggers it.
     val stateReadAt = StoreLog.currentVersion(spark, path)
     afterStateRead()
-    val loaded = StoreMeta.load(spark, path).getOrElse(throw
-      new IllegalArgumentException(
+    // probe and rewrite the COMMITTED live set only (same rule as
+    // Compaction.rewriteCow and StoreDelete): a listing would see the
+    // published-but-unclaimed files of any in-flight appender, and
+    // absorbing one into `touched` would archive a batch whose commit
+    // hasn't landed. (Insert-bearing merges that lose their claim to a
+    // racing append recompute from the new committed state — see
+    // mergeHooked's retry loop.)
+    val state = ConsolidatedStore.committedState(spark, path,
+      singleWriter = true).getOrElse(throw new IllegalArgumentException(
         s"merge needs a graft-managed layout (foreign subdirs found): $path"))
     val key = Schemas.dedupKey
     locally {
-      // probe and rewrite the COMMITTED live set only (same rule as
-      // Compaction.rewriteCow and StoreDelete): the sidecar load heals
-      // in published-but-unclaimed files of any in-flight appender, and
-      // absorbing one into `touched` would archive a batch whose commit
-      // hasn't landed. (Insert-bearing merges that lose their claim to a
-      // racing append recompute from the new committed state — see
-      // mergeHooked's retry loop; this filter keeps the probe honest
-      // within one attempt, load-bearing in StoreDelete.)
-      val committed = StoreLog.committedLiveSet(spark, path)
-      val candidates = committed match {
-        case Some(live) => loaded.files.filter(f => live(f.file))
-        case None => loaded.files
-      }
-      val overlapping = candidates
+      val overlapping = state.live
         .filter(f => envelopes.exists(b => StoreMeta.overlaps(f, b)))
       val rootQ = StoreMeta.qualifiedPath(spark, path)
 
@@ -253,7 +246,7 @@ object StoreMerge {
         val inserts =
           if (nIns == 0L) None
           else Some(ConsolidatedStore.withLogIdsFrom(
-            loaded.maxLogId, insertRows, batchRows = nIns))
+            state.maxLogId, insertRows, batchRows = nIns))
 
         // cheap pre-stage staleness probe: an insert-bearing merge whose
         // anchor is already behind the log will be rolled back by the
@@ -279,8 +272,8 @@ object StoreMerge {
         // be absorbed into this commit by a listing diff.
         // The new file's zone-map stats ride the staged write
         // (CollectMetrics, exactly-once per action — the append-path
-        // fusion), replacing the post-commit footer rescan whenever the
-        // rewrite lands as one flat file.
+        // fusion) whenever the rewrite lands as one flat file; otherwise
+        // the new files' footers are scanned before the claim.
         val (obs, observed) =
           ConsolidatedStore.appendObservation(laidOut)
         val (stageDir, newFiles) = Staging.stage(spark, path, observed, partitionBy)
@@ -289,6 +282,10 @@ object StoreMerge {
           StoreLog.archive(spark, path, v,
             touched.map(f => (new Path(s"$path/$f"), f)))
         Staging.promote(spark, path, stageDir, newFiles)
+        val newStats =
+          if (newFiles.size == 1 && partitionBy.isEmpty)
+            Seq(ConsolidatedStore.observedStats(obs.get, newFiles.head))
+          else StoreMeta.scanStats(spark, path, newFiles)
         beforeCommit()
         // optimistic claim: an updates-only merge rebases its archive
         // past file-disjoint racers (its output depends only on the
@@ -296,25 +293,9 @@ object StoreMerge {
         // from global state, so a disjoint racer rolls it back for the
         // caller's recompute loop. Overlapping rewrites roll back + throw.
         StoreLog.commitReplacing(spark, path, "merge",
-          adds = newFiles, removes = touched, archivedAt = v, txn = txnId,
+          adds = newStats, removes = touched, archivedAt = v, txn = txnId,
           rebaseDisjoint = nIns == 0L,
           stateReadAt = if (nIns == 0L) None else Some(stateReadAt))
-
-        // post-commit sidecar fold: a pure cache — never fail a merge
-        // whose commit already landed
-        try {
-          val touchedSet = touched.toSet
-          val newStats =
-            if (newFiles.size == 1 && partitionBy.isEmpty)
-              Seq(ConsolidatedStore.observedStats(obs.get, newFiles.head))
-            else StoreMeta.scanStats(spark, path, newFiles)
-          StoreMeta.save(spark, path,
-            loaded.files.filterNot(f => touchedSet(f.file)) ++ newStats)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            log.warn(s"post-commit sidecar fold failed on $path " +
-              "(cache only — next load() heals): " + e)
-        }
         MergeStats(nUpd, nIns, touched.size.toLong)
       } finally if (matched != null) matched.unpersist()
     }

@@ -3,10 +3,9 @@ package graft.store
 import java.math.{BigDecimal => JBigDecimal}
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.model.Schemas
 
@@ -41,7 +40,7 @@ final case class FileStats(
     devHashes: Seq[Long] = null,
     // backup_start_date envelope in unix micros (the column is non-null
     // in the consolidated schema, so min/max cover every row). Boxed and
-    // null = unrecorded (pre-migration sidecar row) — readers and the
+    // null = unrecorded (a pre-migration stats row) — readers and the
     // retention fast path treat null as "consult the file". Serves the
     // reference's date-keyed access paths: the retention proc's
     // `backup_start_date < @CleanupToDate` (sql:404-408) and the
@@ -74,86 +73,31 @@ final case class KeyRanges(
     // upper bound (see ConsolidatedStore.claimOnce)
     rows: Long = -1L)
 
-/** Store-metadata sidecar: the Spark analog of the reference's unique
-  * index on `(last_lsn, first_lsn, database_name, physical_device_name)`
-  * (sql:33) actually being an *index*. Without it every idempotent
-  * append pays a full scan of the consolidated table twice — once for
-  * `max(LogID)` and once for the anti-join's key side — which is
-  * O(table) per trickle batch and the one shape that cannot survive a
-  * 100 TB store.
+/** Zone-map statistics of the consolidated store: the Spark analog of
+  * the reference's unique index on `(last_lsn, first_lsn,
+  * database_name, physical_device_name)` (sql:33) actually being an
+  * *index*. Without it every idempotent append pays a full scan of the
+  * consolidated table twice — once for `max(LogID)` and once for the
+  * anti-join's key side — which is O(table) per trickle batch and the
+  * one shape that cannot survive a 100 TB store.
   *
-  * The sidecar is LOG-STRUCTURED: `<root>/_graft_meta` (underscore-
-  * prefixed, so table scans never see it) holds JSON-lines segments
-  * written and read DRIVER-side (metadata must never schedule a cluster
-  * job; legacy Spark-written parquet segments still load and fold away),
-  * and a normal append writes ONE new small segment describing just its
-  * new files ([[saveDelta]]) — O(batch) sidecar bytes, not O(store). A full
-  * rewrite ([[save]], the fold) happens only when reconciliation found
-  * drift or the segment count passed a threshold — the same
-  * log + periodic checkpoint shape a transaction log uses, minus the
-  * transactional claims: this is a pure CACHE, never a correctness
-  * dependency. [[load]] reconciles it against the directory listing on
-  * every append — entries for vanished files (compaction, manual
-  * cleanup) are dropped, files missing from the sidecar (first run,
-  * post-compaction, a crashed sidecar write) are scanned once and folded
-  * back in. A deleted or corrupt sidecar degrades to one rebuild scan,
-  * not to wrong answers.
+  * The stats live in the commit log: each [[StoreLog]] commit carries
+  * one [[FileStats]] row per file it adds, and every log checkpoint
+  * holds the stats of every live file, so [[StoreLog.headState]] returns
+  * the live files WITH their stats from one log read — written and read
+  * driver-side (metadata never schedules a cluster job). This object
+  * holds the stats themselves: the footer scan that computes them
+  * ([[scanStats]]), their one-line JSON codec ([[renderStats]] /
+  * [[parseStats]]), and the pruning predicates over them.
   */
 object StoreMeta {
 
-  val dirName = "_graft_meta"
-
-  /** Fold (full-rewrite) the segment log when an append would push it
-    * past this many segments: load cost is a read of every segment, so
-    * unbounded trickle appends would slowly grow it back to the O(store)
-    * rewrite this design removed — 64 keeps the log read driver-trivial
-    * while amortizing the fold to 1/64 appends.
-    */
-  val SegmentFoldThreshold = 64
-
   /** Max distinct device hashes recorded per file/envelope; above it the
     * set is dropped (null) and pruning falls back to min/max ranges.
-    * 256 longs = 2 KB — sidecar rows stay metadata-sized while covering
+    * 256 longs = 2 KB — stats rows stay metadata-sized while covering
     * the typical few-devices-per-file reality.
     */
   val DevHashSetCap = 256
-
-  private val metaSchema = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("logid_max", LongType, nullable = false),
-    StructField("last_lsn_min", Schemas.lsnType, nullable = true),
-    StructField("last_lsn_max", Schemas.lsnType, nullable = true),
-    StructField("first_lsn_min", Schemas.lsnType, nullable = true),
-    StructField("first_lsn_max", Schemas.lsnType, nullable = true),
-    StructField("db_min", StringType, nullable = true),
-    StructField("db_max", StringType, nullable = true),
-    StructField("dev_min", StringType, nullable = true),
-    StructField("dev_max", StringType, nullable = true),
-    // nullable for migration: pre-log-structured sidecars lack the
-    // column; such rows read as null and are treated as unrecorded, so
-    // they heal via one rescan instead of mis-pruning null-device keys
-    StructField("dev_null_count", LongType, nullable = true),
-    // exact xxhash64 set of the file's distinct non-null device names,
-    // capped at [[DevHashSetCap]] (null = overflowed or pre-migration —
-    // conservative, range-only pruning). An exact secondary "index" for
-    // the highest-cardinality key column: device names are near-unique
-    // per (set, stripe), so min/max ranges of neighboring files overlap
-    // almost always while their actual device SETS almost never do.
-    StructField("dev_hashes", ArrayType(LongType, containsNull = false),
-      nullable = true),
-    // backup_start_date min/max in unix micros; nullable for migration
-    // (pre-r9 segments read as null = unrecorded, conservative consult)
-    StructField("start_min_us", LongType, nullable = true),
-    StructField("start_max_us", LongType, nullable = true)))
-
-  /** Result of [[load]]: reconciled per-file stats, whether the sidecar
-    * on disk drifted from the listing (caller should fold a full rewrite
-    * even if the append itself writes nothing), and the current segment
-    * count (drives the fold threshold).
-    */
-  final case class Loaded(files: Seq[FileStats], dirty: Boolean, segments: Int) {
-    def maxLogId: Long = files.foldLeft(0L)((m, f) => math.max(m, f.logIdMax))
-  }
 
   /** Root-relative paths of a store directory's data files, recursively.
     * Subdirectories must be hive-style `key=value` partition dirs (the
@@ -221,160 +165,11 @@ object StoreMeta {
     walk(p)
   }
 
-  /** Driver-side cache of parsed sidecar segments, keyed by qualified
-    * segment path. Sound because published segments are IMMUTABLE:
-    * [[appendSegment]] stages under a fresh UUID and renames into place,
-    * nothing ever rewrites a published segment, and folds only DELETE
-    * consumed segments (UUID names cannot recur) — so a hit returns
-    * exactly what a re-read would parse, and no invalidation protocol
-    * exists to get wrong. This turns the repeat-load cost a claim
-    * loop / merge / pruned read pays from O(#files) JSON parse into
-    * O(new segments since the last load): the linear `meta_load` term
-    * the file-count probe measures is paid once per segment per driver,
-    * not once per planning call. Only [[load]] reads through the cache;
-    * the fold's capture reads ([[saveHooked]]) stay direct so a segment
-    * vanishing mid-fold still surfaces as the vanished-racer
-    * disposition, byte-identical to the uncached behavior.
-    *
-    * Two-tier bound: segments whose row count fits the budget share a
-    * total-row LRU ([[SegCacheMaxRows]]); an OVER-budget segment (the
-    * post-fold working set of a very large store — the thing most worth
-    * caching) is exempt from the row budget and capped by COUNT instead
-    * ([[SegCacheMaxOversized]], LRU among themselves). A single-tier
-    * row budget would evict the oversized resident on the next put of
-    * any small delta and thrash every subsequent load back to a full
-    * re-parse. Memory note: an oversized entry duplicates a Loaded the
-    * driver materializes on every load anyway, and changing
-    * [[SegCacheMaxRows]] (test seam) must be followed by
-    * [[segCacheClear]] — tier accounting is computed at put time.
-    */
-  private[graft] var SegCacheMaxRows: Long = 1L << 17
-  private[graft] var SegCacheMaxOversized: Int = 4
-  private val segCache =
-    new java.util.LinkedHashMap[String, Seq[FileStats]](64, 0.75f, true)
-  private var segCacheBoundedRows: Long = 0L
-  private var segCacheOversized: Int = 0
-
-  private[graft] def segCacheClear(): Unit = segCache.synchronized {
-    segCache.clear(); segCacheBoundedRows = 0L; segCacheOversized = 0
-  }
-
-  private[graft] def segCacheSize: Int = segCache.synchronized(segCache.size)
-
-  private def cacheGet(key: String): Option[Seq[FileStats]] =
-    segCache.synchronized(Option(segCache.get(key)))
-
-  private def cachePut(key: String, v: Seq[FileStats]): Unit =
-    segCache.synchronized {
-      def oversized(s: Seq[FileStats]): Boolean = s.size > SegCacheMaxRows
-      def drop(s: Seq[FileStats]): Unit =
-        if (oversized(s)) segCacheOversized -= 1
-        else segCacheBoundedRows -= s.size
-      val prev = segCache.put(key, v)
-      if (prev != null) drop(prev)
-      if (oversized(v)) segCacheOversized += 1
-      else segCacheBoundedRows += v.size
-      // evict eldest-first within each tier; never the entry just put
-      val it = segCache.entrySet().iterator()
-      while ((segCacheBoundedRows > SegCacheMaxRows ||
-        segCacheOversized > SegCacheMaxOversized) && it.hasNext) {
-        val e = it.next()
-        if (e.getKey != key) {
-          val evictable =
-            if (oversized(e.getValue)) segCacheOversized > SegCacheMaxOversized
-            else segCacheBoundedRows > SegCacheMaxRows
-          if (evictable) { drop(e.getValue); it.remove() }
-        }
-      }
-    }
-
-  /** [[readSegmentStats]] through the segment cache. JSON misses parse
-    * driver-side one segment at a time; legacy parquet misses batch into
-    * ONE Spark read (as the uncached reader did) and attribute rows back
-    * to their segment via `input_file_name` for per-segment caching. A
-    * throwing read caches nothing.
-    */
-  private def readSegmentStatsCached(spark: SparkSession, metaDir: String,
-      segs: Seq[String]): Seq[FileStats] = {
-    val qp = qualifiedPath(spark, metaDir).toString
-    val out = Seq.newBuilder[FileStats]
-    val pqMisses = Seq.newBuilder[String]
-    segs.foreach { s =>
-      cacheGet(s"$qp/$s") match {
-        case Some(v) => out ++= v
-        case None if s.endsWith(".parquet") => pqMisses += s
-        case None =>
-          val stats = readSegmentStats(spark, metaDir, Seq(s))
-          cachePut(s"$qp/$s", stats)
-          out ++= stats
-      }
-    }
-    val pq = pqMisses.result()
-    if (pq.nonEmpty) {
-      val byFile = spark.read.schema(metaSchema)
-        .parquet(pq.map(s => s"$metaDir/$s"): _*)
-        .withColumn("__seg", input_file_name())
-        .collect().toSeq
-        .groupBy(r => new Path(r.getString(r.length - 1)).getName)
-      pq.foreach { s =>
-        val stats = byFile.getOrElse(s, Nil).map(fromRow)
-        cachePut(s"$qp/$s", stats)
-        out ++= stats
-      }
-    }
-    out.result()
-  }
-
-  /** Read all sidecar segments and reconcile them with the actual file
-    * listing. None = unsupported layout (fall back to full scans).
-    */
-  def load(spark: SparkSession, root: String): Option[Loaded] =
-    listDataFiles(spark, root).map { actual =>
-      val actualSet = actual.toSet
-      val mp = s"$root/$dirName"
-      // a racing fold deletes its captured segments after publishing the
-      // folded replacement — a reader caught between listing and read
-      // retries on a FRESH listing (which carries the folded segment);
-      // anything else unreadable is a corrupt sidecar, treated as absent.
-      // Segments are read DRIVER-side (JSON lines; legacy Spark-written
-      // parquet segments still load through one Spark read) — sidecar
-      // metadata never schedules a cluster job.
-      var attempt = 0
-      var state: (Seq[FileStats], Int) = null
-      while (state == null) {
-        try {
-          state =
-            if (StorePath.exists(spark, mp)) {
-              val segs = segmentFileNames(spark, mp)
-              if (segs.isEmpty) (Nil, 0)
-              else (readSegmentStatsCached(spark, mp, segs), segs.size)
-            } else (Nil, 0)
-        } catch {
-          case e: Exception if StoreLog.fileVanished(e) && attempt < 8 =>
-            attempt += 1
-          case _: Exception => state = (Nil, 0)
-        }
-      }
-      val (recorded, segments) = state
-      // rows with devNullCount < 0 are pre-migration entries: rescan them
-      // once rather than guess at their null-device population. Segments
-      // may overlap after a heal — first row per file wins (single pass;
-      // this runs on every planning call, so no groupBy allocation here)
-      val seen = new java.util.HashSet[String]()
-      val usable = recorded.filter(f => f.devNullCount >= 0 && seen.add(f.file))
-      val kept = usable.filter(f => actualSet.contains(f.file))
-      val unknown = actualSet -- kept.map(_.file)
-      val healed =
-        if (unknown.isEmpty) kept
-        else kept ++ scanStats(spark, root, unknown.toSeq.sorted)
-      Loaded(healed,
-        dirty = kept.size != recorded.size || unknown.nonEmpty,
-        segments = segments)
-    }
-
   /** Compute [[FileStats]] for specific data files by scanning just
-    * them — the heal path (and the stats pass over freshly written
-    * batch files, which is O(batch)). `basePath` makes the read
+    * them — the stats a writer commits for files whose write observed
+    * none (hive layouts, fanned-out batches, compaction), the baseline
+    * of a store that predates the log, and the one-time upgrade of live
+    * files whose commit predates stats in the log. O(files scanned). `basePath` makes the read
     * reconstruct partition-directory columns for hive layouts, so the
     * stats see `database_name` even when it lives in the dir name.
     */
@@ -409,10 +204,10 @@ object StoreMeta {
       throw new IllegalStateException(
         s"data files under $root lack LogIDs (written outside the store?): " +
           noLogIds.sorted.mkString(", "))
-    // input_file_name() may return a zero-row file's name never (no rows
-    // → no group): emit a sentinel so load() does not re-mark such a
-    // file unknown-and-dirty on every subsequent append. Its date range
-    // is the EMPTY interval (min > max) so date-bounded reads prune it.
+    // input_file_name() never returns a zero-row file's name (no rows →
+    // no group): emit a sentinel so such a file still gets its stats row.
+    // Its date range is the EMPTY interval (min > max) so date-bounded
+    // reads prune it.
     val seen = grouped.map(r => relativize(rootPath, r.getString(0))).toSet
     val sentinels = files.filterNot(seen).map { f =>
       FileStats(f, 0L, null, null, null, null, null, null, null, null, 0L,
@@ -454,150 +249,11 @@ object StoreMeta {
     filePath.substring(rootPath.length + 1)
   }
 
-  /** Fold: collapse the segment log to one segment holding `files` PLUS
-    * any captured racer delta's stats for data files still present in
-    * the directory. Used when [[load]] found drift, when the segment
-    * count passed [[SegmentFoldThreshold]], and by compaction's re-seed.
-    *
-    * Multi-writer shape: the pre-existing segment files are CAPTURED
-    * first and READ — a delta appended by a concurrent writer between
-    * the caller's `load()` and this fold describes real files the caller
-    * never saw; dropping it would force a dirty-heal rescan of those
-    * files on every subsequent load. Captured stats are kept iff their
-    * file still exists on disk and the caller didn't supply its own
-    * entry (the caller's `files` deliberately OMIT entries for data
-    * files it removed — resurrecting those would churn). The folded
-    * segment is published via a staged rename, then exactly the
-    * captured segment files are deleted; an uncaptured racing delta
-    * survives untouched, and nothing here can clobber a peer's
-    * in-flight write.
-    */
-  def save(spark: SparkSession, root: String, files: Seq[FileStats]): Unit =
-    saveHooked(spark, root, files)(_ => ())
-
-  /** [[save]] with a test seam: `afterCapture(segments)` runs between
-    * the segment capture and their read — the window a racing fold's
-    * deletes land in.
-    */
-  private[graft] def saveHooked(spark: SparkSession, root: String,
-      files: Seq[FileStats])(afterCapture: Seq[String] => Unit): Unit = {
-    val mp = new Path(s"$root/$dirName")
-    val f = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val captured = if (f.exists(mp)) segmentFileNames(spark, s"$root/$dirName")
-      else Nil
-    afterCapture(captured)
-    // per-SEGMENT read, so each captured segment gets the disposition
-    // its own outcome earns:
-    //   - read OK     → its stats fold into this segment; delete it
-    //     (every row it held has a copy in our folded output);
-    //   - vanished    → a racing fold consumed it; ITS folded output
-    //     carries the rows — nothing of ours to delete;
-    //   - corrupt     → a crashed writer's torn segment; delete it or
-    //     every future load() degrades to a full heal rescan forever —
-    //     its entries rebuild from the (immutable) data files on the
-    //     next heal, exactly the self-healing the sidecar contract
-    //     documents.
-    // Deleting exactly what we folded (plus corpses) means a delta a
-    // racer never captured is NEVER discarded, and a corrupt segment is
-    // never immortal.
-    val capturedStats = scala.collection.mutable.ArrayBuffer.empty[FileStats]
-    val deletable = scala.collection.mutable.ArrayBuffer.empty[String]
-    captured.foreach { seg =>
-      try {
-        capturedStats ++= readSegmentStats(spark, s"$root/$dirName", Seq(seg))
-        deletable += seg
-      } catch {
-        case e: Exception if StoreLog.fileVanished(e) => ()
-        case _: Exception => deletable += seg // torn segment: drop, heal later
-      }
-    }
-    val extras = {
-      val known = files.map(_.file).toSet
-      val present =
-        if (capturedStats.isEmpty) Set.empty[String]
-        else listDataFiles(spark, root).getOrElse(Nil).toSet
-      capturedStats.toSeq
-        .filter(s => !known(s.file) && present(s.file))
-        .groupBy(_.file).map(_._2.head).toSeq
-    }
-    appendSegment(spark, root, files ++ extras)
-    // tolerate already-deleted (a racing fold consumed the same segment)
-    deletable.foreach(c => f.delete(new Path(s"$root/$dirName/$c"), false))
-  }
-
-  /** Driver-side read of specific sidecar segments (JSON + legacy
-    * parquet), no reconciliation.
-    */
-  private def readSegmentStats(spark: SparkSession, metaDir: String,
-      segs: Seq[String]): Seq[FileStats] = {
-    val (jsonSegs, pqSegs) = segs.partition(_.endsWith(".json"))
-    val fromJson = jsonSegs.flatMap(s =>
-      readSegmentLines(spark, new Path(s"$metaDir/$s")).map(parseStats))
-    val fromPq =
-      if (pqSegs.isEmpty) Nil
-      else spark.read.schema(metaSchema)
-        .parquet(pqSegs.map(s => s"$metaDir/$s"): _*)
-        .collect().toSeq.map(fromRow)
-    fromJson ++ fromPq
-  }
-
-  /** Append ONE new segment describing just `files` — the O(batch)
-    * sidecar maintenance path of a clean trickle append.
-    */
-  def saveDelta(spark: SparkSession, root: String, files: Seq[FileStats]): Unit =
-    appendSegment(spark, root, files)
-
-  /** Write one sidecar segment — a DRIVER-side JSON-lines file (one
-    * object per [[FileStats]]) staged under a per-writer name and
-    * renamed into place. The sidecar is driver-scale metadata (one row
-    * per data file, segments bounded by the fold threshold), so it must
-    * never schedule a cluster job to read or write: an append's sidecar
-    * maintenance is two filesystem calls, not a Spark stage. Unique
-    * names + rename also mean concurrent sidecar writers (an append's
-    * delta racing a compaction's re-seed) both land with no shared
-    * staging to clobber. Same shape as the [[StoreLog]] commit files.
-    */
-  private def appendSegment(
-      spark: SparkSession, root: String, files: Seq[FileStats]): Unit = {
-    val bytes = files.map(renderStats)
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)
-    val id = java.util.UUID.randomUUID().toString
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val stagingDir = new Path(s"$root/$dirName/$stagingDirName")
-    fs.mkdirs(stagingDir)
-    val tmp = new Path(stagingDir, id)
-    val out = fs.create(tmp, false)
-    try out.write(bytes) finally out.close()
-    val dst = new Path(s"$root/$dirName/seg-$id.json")
-    require(fs.rename(tmp, dst), s"sidecar segment publish failed: $tmp")
-  }
-
-  val stagingDirName = "_staging"
-
-  /** Names of the sidecar's segment files (hidden staging excluded):
-    * `seg-*.json` (current) plus `*.parquet` (legacy Spark-written
-    * segments — still read for migration, rewritten as JSON and deleted
-    * by the next fold).
-    */
-  private def segmentFileNames(
-      spark: SparkSession, metaDir: String): Seq[String] = {
-    val p = new Path(metaDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq.collect {
-      case e if e.isFile &&
-        (e.getPath.getName.endsWith(".json") ||
-          e.getPath.getName.endsWith(".parquet")) &&
-        !e.getPath.getName.startsWith("_") &&
-        !e.getPath.getName.startsWith(".") => e.getPath.getName
-    }
-  }
-
-  /** Shared factory for the streaming segment codec below. Jackson
-    * streaming (not json4s ASTs) because the per-row parse cost is part
-    * of the cold `meta_load` slope the file-count probe measures (the
-    * fold renders O(#files) rows through the writer too); the probe's
-    * committed reading has the before/after.
+  /** Shared factory for the one-line stats codec below — the rows a
+    * commit carries per added file and a checkpoint per live file.
+    * Jackson streaming (not json4s ASTs) because the per-row parse cost
+    * is the slope of the head-state read the file-count probe measures
+    * (a checkpoint holds one row per live file).
     */
   private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
 
@@ -657,7 +313,7 @@ object StoreMeta {
           java.lang.Long.valueOf(p.getLongValue)
         else null
       require(p.nextToken() == JsonToken.START_OBJECT,
-        s"sidecar row is not a JSON object: $line")
+        s"stats row is not a JSON object: $line")
       while (p.nextToken() != JsonToken.END_OBJECT) {
         val name = p.currentName()
         p.nextToken()
@@ -693,10 +349,9 @@ object StoreMeta {
           p.currentToken() == JsonToken.START_OBJECT) p.skipChildren()
       }
       // a row without identity or LogID watermark is torn, not optional —
-      // throw so the caller's corrupt-segment disposition applies (the
-      // json4s reader NPE'd here; keep "torn row throws")
+      // throw, so a torn commit or checkpoint reads as unreadable
       require(file != null && logIdMax != null,
-        s"sidecar row missing file/logid_max: $line")
+        s"stats row missing file/logid_max: $line")
       FileStats(file, logIdMax.longValue,
         lastLsnMin, lastLsnMax, firstLsnMin, firstLsnMax,
         dbMin, dbMax, devMin, devMax, devNullCount,
@@ -710,7 +365,7 @@ object StoreMeta {
     new String(StoreLog.readBytesOf(spark, path), StandardCharsets.UTF_8)
       .split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
 
-  /** Conjunctive read-predicate bounds on the columns the sidecar keeps
+  /** Conjunctive read-predicate bounds on the columns the stats keep
     * envelopes for — the read-side twin of [[KeyRanges]]. Each component
     * is optional; an unset component constrains nothing. This is the
     * file-level form of the restore surface's sargable predicates
@@ -788,18 +443,6 @@ object StoreMeta {
       decOverlap(f.firstLsnMin, f.firstLsnMax, b.firstLsnMin, b.firstLsnMax) &&
       strOverlap(f.dbMin, f.dbMax, b.dbMin, b.dbMax) &&
       devOverlap(f, b)
-
-  private def fromRow(r: Row): FileStats = FileStats(
-    r.getString(0), r.getLong(1),
-    r.getDecimal(2), r.getDecimal(3), r.getDecimal(4), r.getDecimal(5),
-    if (r.isNullAt(6)) null else r.getString(6),
-    if (r.isNullAt(7)) null else r.getString(7),
-    if (r.isNullAt(8)) null else r.getString(8),
-    if (r.isNullAt(9)) null else r.getString(9),
-    if (r.isNullAt(10)) -1L else r.getLong(10), // -1 = pre-migration row
-    devHashes = if (r.isNullAt(11)) null else r.getSeq[Long](11),
-    startMinUs = if (r.isNullAt(12)) null else java.lang.Long.valueOf(r.getLong(12)),
-    startMaxUs = if (r.isNullAt(13)) null else java.lang.Long.valueOf(r.getLong(13)))
 
   private def decOverlap(
       fMin: JBigDecimal, fMax: JBigDecimal,

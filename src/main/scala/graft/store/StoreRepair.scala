@@ -8,14 +8,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Their swap sequence is: (1) write replacement files, (2) archive the
   * replaced originals into the next commit's history dir, (3) write the
-  * commit, (4) update the sidecar. A crash inside that window leaves the
-  * directory inconsistent with the last commit, and — because
-  * current-state reads are plain directory scans — the inconsistency is
-  * DURABLE, not transient:
+  * commit, which carries the replacements' zone-map stats. A crash
+  * inside that window leaves the directory inconsistent with the last
+  * commit, and — because current-state reads are plain directory
+  * scans — the inconsistency is DURABLE, not transient:
   *
   *   - crash after (1): listing readers see every matched key twice
-  *     (original + replacement), and [[StoreMeta.load]] heals the
-  *     replacements into the sidecar as if they were committed;
+  *     (original + replacement);
   *   - crash after (2): the originals sit in a history dir whose version
   *     was never committed — the table silently lost rows the log still
   *     considers live.
@@ -31,9 +30,9 @@ import org.apache.spark.sql.SparkSession
   *   2. delete data files absent from the log's live set (undoes an
   *      unfinished replacement write — and, for a crashed plain append,
   *      drops the uncommitted batch, which the ETL watermark contract
-  *      re-extracts),
-  *   3. rewrite the sidecar from the surviving live files' recorded
-  *      stats, rescanning only files the sidecar doesn't know.
+  *      re-extracts).
+  *
+  * The log's stats need no repair: they describe committed files only.
   *
   * [[graft.maintenance.Compaction]] crashes need a separate pre-pass:
   * its rewrite swaps WHOLE ROOTS via sibling dirs (`root__compacting` =
@@ -46,9 +45,8 @@ import org.apache.spark.sql.SparkSession
   * already carried its log and committed is rolled forward by the same
   * machinery (its leftover backup dir is simply dropped).
   *
-  * O(history-dirs + |live set| + orphans) driver-side metadata work plus
-  * a stats rescan of at most the orphan-healed files — never a table
-  * scan. Run it on open when a previous writer may have died; a clean
+  * O(history-dirs + |live set| + orphans) driver-side metadata work —
+  * never a table scan. Run it on open when a previous writer may have died; a clean
   * store is a no-op. Stores without a commit log have no reconciliation
   * baseline beyond the compaction pre-pass and are otherwise returned
   * untouched.
@@ -79,30 +77,20 @@ object StoreRepair {
     val fs = rootQ.getFileSystem(spark.sessionState.newHadoopConf())
     val preRestored = reconcileCompaction(spark, root, fs)
     // crashed concurrent appenders leave inert batch files under the
-    // (scan-invisible) staging dir — drop them wholesale; same for a
-    // crashed sidecar segment write's staging
-    val staging = new Path(s"$root/${Staging.dirName}")
-    if (fs.exists(staging))
-      require(fs.delete(staging, true), s"repair: staging drop failed $staging")
-    val metaStaging = new Path(
-      s"$root/${StoreMeta.dirName}/${StoreMeta.stagingDirName}")
-    if (fs.exists(metaStaging))
-      require(fs.delete(metaStaging, true),
-        s"repair: sidecar staging drop failed $metaStaging")
+    // (scan-invisible) staging dir — drop them wholesale; same for the
+    // zone-map segment log of stores written before the stats moved
+    // into the commit log (nothing reads or writes it any more)
+    Seq(Staging.dirName, "_graft_meta").map(d => new Path(s"$root/$d"))
+      .filter(fs.exists(_))
+      .foreach(d => require(fs.delete(d, true), s"repair: drop failed $d"))
     // a writer that died between a version claim (create) and its fill
     // (write) left an unreadable commit file that bricks every log read —
     // drop such trailing claims, restoring the prior version as current
     if (dropStaleClaims) StoreLog.dropAbortedTrailingClaims(spark, root)
 
     val current = StoreLog.currentVersion(spark, root)
-    if (current == 0) { // no log — no reconciliation baseline beyond the
-      // compaction pre-pass; if that moved anything, re-seed the sidecar
-      if (preRestored > 0L)
-        StoreMeta.listDataFiles(spark, root).foreach { files =>
-          StoreMeta.save(spark, root, StoreMeta.scanStats(spark, root, files))
-        }
-      return RepairStats(preRestored, 0L)
-    }
+    // no log — no reconciliation baseline beyond the compaction pre-pass
+    if (current == 0) return RepairStats(preRestored, 0L)
 
     // 1. unfinished archive: restore files the log still lists as live
     // from two kinds of history dirs —
@@ -156,28 +144,12 @@ object StoreRepair {
     StoreLog.readCommits(spark, root).foreach { c =>
       live ++= c.adds; live --= c.removes
     }
-    val onDisk = StoreMeta.listDataFiles(spark, root).getOrElse(Nil)
-    val orphans = onDisk.filterNot(live)
-    // an orphan that survives a failed delete must NOT be dropped from
-    // the sidecar (a later heal would resurrect it as live) — fail loudly
+    val orphans = StoreMeta.listDataFiles(spark, root).getOrElse(Nil)
+      .filterNot(live)
+    // fail loudly on an orphan that survives its delete
     orphans.foreach { f =>
       require(fs.delete(new Path(s"$root/$f"), false),
         s"repair: orphan delete failed $root/$f")
-    }
-
-    // 3. sidecar: keep recorded stats for surviving live files, rescan
-    // only files the sidecar never saw (e.g. restored before any load).
-    // A file the log lists live but the disk lacks is unfixable data
-    // loss (e.g. a racer committed files that never materialized) —
-    // skipped here, not a crash; reads of the store surface it.
-    if (restored > 0L || preRestored > 0L || orphans.nonEmpty) {
-      val present = onDisk.toSet
-      val known = StoreMeta.load(spark, root)
-        .map(_.files).getOrElse(Nil).filter(f => live(f.file))
-      val missing = live.toSeq
-        .filterNot(known.map(_.file).toSet).filter(present)
-      StoreMeta.save(spark, root,
-        known ++ StoreMeta.scanStats(spark, root, missing))
     }
     RepairStats(restored + preRestored, orphans.size.toLong)
   }

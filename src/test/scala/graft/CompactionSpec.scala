@@ -149,7 +149,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(after.count() === nRows)
     assert(after.exceptAll(content).isEmpty && content.exceptAll(after).isEmpty)
 
-    // the re-seeded sidecar still serves the idempotent-append contract:
+    // the compact commit's stats still serve the idempotent-append contract:
     // a duplicate batch appends zero rows, and LogIDs stay unique
     assert(ConsolidatedStore.append(spark, dir, bh.limit(50)) == 0)
     assert(spark.read.parquet(dir).count() === nRows)
@@ -189,7 +189,7 @@ class CompactionSpec extends AnyFunSuite {
     // a repeat is a no-op (one consolidated file left below threshold
     // is not worth a rewrite)
     assert(Compaction.optimizeSmall(spark, dir, minBytes)._1 <= 1)
-    // the sidecar still serves pruned appends (no heal-drift)
+    // the optimize commit's stats still serve pruned appends
     val n2 = ConsolidatedStore.append(spark, dir, bh.limit(3)
       .withColumn("last_lsn", (col("last_lsn") + 999000000L).cast(lsnT)))
     assert(n2 == 3)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.ConsolidatedStore
 
-/** File-level guarantees of the sidecar device-hash sets: point lookups
+/** File-level guarantees of the logged device-hash sets: point lookups
   * scan only files actually CONTAINING the device, and the over-cap
   * fallback stays correct.
   */
@@ -53,8 +53,7 @@ class DeviceLookupSpec extends AnyFunSuite {
       concat(lit("wide/"), col("last_lsn").cast("long").cast("string"),
         lit("/"), col("physical_device_name")))
     ConsolidatedStore.append(spark, path, wide)
-    val meta = graft.store.StoreMeta.load(spark, path).get
-    assert(meta.files.exists(_.devHashes == null),
+    assert(StoreTestKit.liveStats(spark, path).exists(_.devHashes == null),
       "a 300-device file must overflow the hash-set cap")
     val dev = wide.select("physical_device_name").head().getString(0)
     assert(ConsolidatedStore.readForDevice(spark, path, dev).count() == 1)
@@ -83,13 +82,13 @@ class DeviceLookupSpec extends AnyFunSuite {
     val even = base.filter(setId % 2 === 0)
     ConsolidatedStore.append(spark, path, odd)
     ConsolidatedStore.append(spark, path, even)
-    val loaded = graft.store.StoreMeta.load(spark, path).get
+    val live = StoreTestKit.liveStats(spark, path)
     val env = ConsolidatedStore.batchEnvelopes(
       odd.dropDuplicates(ConsolidatedStore.dedupKey))
-    val overlapping = loaded.files
+    val overlapping = live
       .filter(f => env.exists(b => graft.store.StoreMeta.overlaps(f, b)))
-    assert(loaded.files.size == 2 && overlapping.size == 1,
+    assert(live.size == 2 && overlapping.size == 1,
       s"device sets must disambiguate overlapping LSN ranges: " +
-        s"${loaded.files.size} files, ${overlapping.size} overlapping")
+        s"${live.size} files, ${overlapping.size} overlapping")
   }
 }

@@ -138,15 +138,19 @@ class EtlSpec extends AnyFunSuite {
     val t2 = bh.filter(col("last_lsn") >= cuts(0) && col("last_lsn") < cuts(1))
     val t3 = bh.filter(col("last_lsn") >= cuts(1))
     Seq(t1, t2, t3).foreach(t => ConsolidatedStore.append(spark, path, t))
-    val loaded = StoreMeta.load(spark, path).get
-    assert(loaded.files.size == 3 && !loaded.dirty)
+    val live = StoreTestKit.liveStats(spark, path)
+    assert(live.size == 3 && StoreTestKit.statsDrift(spark, path).isEmpty)
+    // each append's commit carries stats for its own new file only —
+    // O(batch) metadata per append, never a manifest rewrite
+    assert(graft.store.StoreLog.readCommits(spark, path).map(_.stats.size) ==
+      Seq(1, 1, 1))
 
     // a batch drawn from the middle tertile must consult ONLY its file:
     // this is the O(batch + overlap) contract — a trickle append onto a
     // many-file store reads just the files sharing its LSN window
     val envelopes = ConsolidatedStore.batchEnvelopes(
       t2.dropDuplicates(ConsolidatedStore.dedupKey))
-    val overlapping = loaded.files
+    val overlapping = live
       .filter(f => envelopes.exists(b => StoreMeta.overlaps(f, b)))
     assert(overlapping.size == 1,
       s"expected 1 overlapping file, got ${overlapping.map(_.file)}")
@@ -159,60 +163,6 @@ class EtlSpec extends AnyFunSuite {
     bh.unpersist()
   }
 
-  private def segmentFiles(path: String): Seq[java.io.File] = {
-    val d = new java.io.File(s"$path/${graft.store.StoreMeta.dirName}")
-    if (!d.exists()) Nil
-    else d.listFiles().toSeq
-      .filter(f => (f.getName.endsWith(".json") || f.getName.endsWith(".parquet")) &&
-        !f.getName.startsWith("_"))
-  }
-
-  /** Stats rows in one sidecar segment (JSON lines driver-side). */
-  private def segmentRows(s: java.io.File): Long =
-    scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(s.toPath)).asScala
-      .count(_.trim.nonEmpty)
-
-  test("sidecar log: clean appends write one O(batch) delta segment; fold compacts") {
-    import graft.store.StoreMeta
-    val path = tmp()
-    val bh = graft.etl.BackupHistoryDerivation
-      .canonicalFrame(spark, TestSpark.sf).drop("LogID").cache()
-    val cuts = bh.stat.approxQuantile("last_lsn", Array(0.34, 0.67), 0.001)
-    val t1 = bh.filter(col("last_lsn") < cuts(0))
-    val t2 = bh.filter(col("last_lsn") >= cuts(0) && col("last_lsn") < cuts(1))
-    val t3 = bh.filter(col("last_lsn") >= cuts(1))
-    // each clean append adds exactly ONE sidecar segment describing only
-    // its own new files — O(batch) sidecar bytes, never a manifest rewrite
-    ConsolidatedStore.append(spark, path, t1)
-    assert(segmentFiles(path).size == 1)
-    ConsolidatedStore.append(spark, path, t2)
-    assert(segmentFiles(path).size == 2)
-    ConsolidatedStore.append(spark, path, t3)
-    val segs = segmentFiles(path)
-    assert(segs.size == 3, s"expected 3 delta segments, got ${segs.size}")
-    // proportionality: every segment holds stats for 1 file (its batch
-    // wrote 1 data file), not the whole store
-    segs.foreach { s =>
-      assert(segmentRows(s) == 1, s"segment ${s.getName} not batch-sized")
-    }
-    val loaded = StoreMeta.load(spark, path).get
-    assert(loaded.files.size == 3 && !loaded.dirty && loaded.segments == 3)
-
-    // fold: an append onto a DRIFTED sidecar (here its one segment lost,
-    // so the load heals t1's file by a rescan) rewrites it as one
-    // segment covering every file, and nothing is lost
-    val path2 = tmp()
-    ConsolidatedStore.append(spark, path2, t1)
-    segmentFiles(path2).foreach(_.delete())
-    ConsolidatedStore.append(spark, path2, t2)
-    assert(segmentFiles(path2).size == 1, "fold collapses the segment log")
-    val folded = StoreMeta.load(spark, path2).get
-    assert(folded.files.size == 2 && !folded.dirty)
-    assert(ConsolidatedStore.append(spark, path2, t2) == 0, "fold kept the stats")
-    bh.unpersist()
-  }
-
   test("partitioned store: pruned append reads only the touched database dirs") {
     import graft.store.StoreMeta
     val path = tmp()
@@ -222,13 +172,13 @@ class EtlSpec extends AnyFunSuite {
     val part = Seq("database_name")
     val n1 = ConsolidatedStore.append(spark, path, bh, partitionBy = part)
     assert(n1 == total)
-    // hive layout is sidecar-first-class now: root-relative paths under
+    // hive layout is zone-map-first-class: root-relative paths under
     // database_name= dirs, key columns reconstructed via basePath
-    val loaded = StoreMeta.load(spark, path).get
-    assert(loaded.files.nonEmpty && !loaded.dirty)
-    assert(loaded.files.forall(_.file.startsWith("database_name=")),
-      s"expected partition-relative paths, got ${loaded.files.map(_.file)}")
-    assert(loaded.files.forall(f => f.dbMin == f.dbMax),
+    val live = StoreTestKit.liveStats(spark, path)
+    assert(live.nonEmpty && StoreTestKit.statsDrift(spark, path).isEmpty)
+    assert(live.forall(_.file.startsWith("database_name=")),
+      s"expected partition-relative paths, got ${live.map(_.file)}")
+    assert(live.forall(f => f.dbMin == f.dbMax),
       "partition dirs must yield single-db zone maps")
 
     // per-database envelopes: a batch touching the two lexicographic
@@ -241,7 +191,7 @@ class EtlSpec extends AnyFunSuite {
     val envelopes = ConsolidatedStore.batchEnvelopes(
       distant.dropDuplicates(ConsolidatedStore.dedupKey))
     assert(envelopes.size == 2)
-    val overlapping = loaded.files
+    val overlapping = live
       .filter(f => envelopes.exists(b => StoreMeta.overlaps(f, b)))
     val touched = overlapping.map(_.file.split("/").head).distinct.sorted
     assert(touched == Seq(s"database_name=${dbs.head}", s"database_name=${dbs.last}"),
@@ -278,35 +228,22 @@ class EtlSpec extends AnyFunSuite {
     assert(dupKeys == 0)
   }
 
-  test("sidecar survives compaction re-seeded; losing it self-heals on append") {
-    import graft.store.StoreMeta
+  test("compaction commits the rewritten files' stats; the next append " +
+      "dedups against them") {
     val path = tmp()
     val bh = graft.etl.BackupHistoryDerivation
       .canonicalFrame(spark, TestSpark.sf).drop("LogID").cache()
     val total = bh.count()
     ConsolidatedStore.append(spark, path, bh.limit(150))
     ConsolidatedStore.append(spark, path, bh)
-    // compaction rewrites the directory and re-seeds the sidecar for the
-    // new file set, so the next append pays no heal scan
     graft.maintenance.Compaction.compact(spark, path)
-    val metaDir = new java.io.File(s"$path/${StoreMeta.dirName}")
-    assert(metaDir.exists(), "compaction re-seeds the sidecar")
-    assert(!StoreMeta.load(spark, path).get.dirty, "re-seeded sidecar consistent")
-    // a deleted sidecar (operator error, foreign writer) degrades to one
-    // rebuild scan, never to wrong answers: the next append heals it and
-    // still dedups against the recovered LogID base
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete()
-    }
-    rm(metaDir)
-    assert(!metaDir.exists())
+    assert(StoreTestKit.statsDrift(spark, path).isEmpty,
+      "the compact commit carries exact stats for the new file set")
     assert(ConsolidatedStore.append(spark, path, bh) == 0)
-    assert(metaDir.exists(), "append rebuilt the sidecar")
     val stored = spark.read.parquet(path)
     assert(stored.count() == total)
     assert(stored.agg(max("LogID")).head().getLong(0) == total,
-      "LogID base recovered from healed sidecar")
+      "LogID base read from the compact commit's stats")
     bh.unpersist()
   }
 
@@ -600,7 +537,7 @@ class EtlSpec extends AnyFunSuite {
     val tmp0 = tmp()
     val (store, wmPath) = (s"$tmp0/cons", s"$tmp0/wm")
     // a store holding rows written outside it, without LogIDs, cannot
-    // be indexed by the append's sidecar load — a LOAD-phase failure
+    // be baselined by the append's stats scan — a LOAD-phase failure
     // (the extract succeeds). Overlapped loads must surface it
     // per-server instead of rethrowing through Await and aborting the
     // siblings mid-flight.

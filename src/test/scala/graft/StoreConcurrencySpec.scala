@@ -32,8 +32,10 @@ class StoreConcurrencySpec extends AnyFunSuite {
     val path = tmp()
     ConsolidatedStore.append(spark, path, bh.limit(50))
     val v = StoreLog.currentVersion(spark, path) + 1
-    assert(StoreLog.tryCommit(spark, path, v, "append", Seq("x.parquet"), Nil))
-    assert(!StoreLog.tryCommit(spark, path, v, "append", Seq("y.parquet"), Nil),
+    assert(StoreLog.tryCommit(spark, path, v, "append",
+      Seq(StoreTestKit.stub("x.parquet")), Nil))
+    assert(!StoreLog.tryCommit(spark, path, v, "append",
+      Seq(StoreTestKit.stub("y.parquet")), Nil),
       "second claim of the same version must lose")
     val c = StoreLog.readCommits(spark, path).last
     assert(c.version == v && c.adds == Seq("x.parquet"),
@@ -73,9 +75,9 @@ class StoreConcurrencySpec extends AnyFunSuite {
     assert(stored.agg(max("LogID")).head().getLong(0) == total, "ids contiguous")
     assert(StoreRepair.repair(spark, path).clean,
       "no orphans after a resolved race")
-    // the sidecar describes exactly the directory
-    val meta = StoreMeta.load(spark, path).get
-    assert(!meta.dirty, "sidecar consistent after concurrent appends")
+    // the log's stats describe exactly the directory
+    assert(StoreTestKit.statsDrift(spark, path).isEmpty,
+      "logged stats exact after concurrent appends")
     h.unpersist()
   }
 
@@ -105,7 +107,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
       assert(stored.select("LogID").distinct().count() == total,
         s"$name: LogIDs unique")
       assert(StoreRepair.repair(spark, path).clean, name)
-      assert(!StoreMeta.load(spark, path).get.dirty, name)
+      assert(StoreTestKit.statsDrift(spark, path).isEmpty, name)
     }
     h.unpersist()
   }
@@ -132,14 +134,14 @@ class StoreConcurrencySpec extends AnyFunSuite {
     val preRows = spark.read.parquet(path).count()
     val v0 = StoreLog.currentVersion(spark, path)
     // a merge archived its touched file at v0+1...
-    val victim = StoreMeta.load(spark, path).get.files.head.file
+    val victim = StoreTestKit.liveStats(spark, path).head.file
     StoreLog.archive(spark, path, v0 + 1,
       Seq((new org.apache.hadoop.fs.Path(s"$path/$victim"), victim)))
     // ...then a DISJOINT append claims v0+1 first
     assert(StoreLog.tryCommit(spark, path, v0 + 1, "append",
-      Seq("unrelated.parquet"), Nil))
+      Seq(StoreTestKit.stub("unrelated.parquet")), Nil))
     val v = StoreLog.commitReplacing(spark, path, "merge",
-      adds = Seq("rewrite.parquet"), removes = Seq(victim),
+      adds = Seq(StoreTestKit.stub("rewrite.parquet")), removes = Seq(victim),
       archivedAt = v0 + 1)
     assert(v == v0 + 2, s"rebase must land on the next version, got $v")
     // the archive moved with it: the pre-merge snapshot at v0 still reads
@@ -154,7 +156,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
     ConsolidatedStore.append(spark, path, bh.filter(col("database_name") < "db2"))
     ConsolidatedStore.append(spark, path, bh.filter(col("database_name") >= "db2"))
     val preRows = spark.read.parquet(path).count()
-    val preFiles = StoreMeta.load(spark, path).get.files.map(_.file).toSet
+    val preFiles = StoreTestKit.liveStats(spark, path).map(_.file).toSet
     val v0 = StoreLog.currentVersion(spark, path)
     val victim = preFiles.head
     // our delete archived the victim, wrote a survivor rewrite...
@@ -171,10 +173,12 @@ class StoreConcurrencySpec extends AnyFunSuite {
         s"$path/${StoreLog.historyDirName}/${"v%09d".format(v0 + 1)}/$victim"),
       java.nio.file.Paths.get(s"$path/their-rewrite.parquet"))
     assert(StoreLog.tryCommit(spark, path, v0 + 1, "merge",
-      Seq("their-rewrite.parquet"), Seq(victim)))
+      StoreMeta.scanStats(spark, path, Seq("their-rewrite.parquet")),
+      Seq(victim)))
     val ex = intercept[StoreLog.ConcurrentCommitException] {
       StoreLog.commitReplacing(spark, path, "delete",
-        adds = Seq(orphan), removes = Seq(victim), archivedAt = v0 + 1)
+        adds = Seq(StoreTestKit.stub(orphan)), removes = Seq(victim),
+        archivedAt = v0 + 1)
     }
     assert(ex.getMessage.contains("conflicts"))
     // rollback converges the DIRECTORY to the racer's committed state:
@@ -228,11 +232,9 @@ class StoreConcurrencySpec extends AnyFunSuite {
     }
     assert(StoreLog.snapshot(spark, path, vMax).count() == total)
     assert(StoreRepair.repair(spark, path).clean, "no orphans after the race")
-    // the sidecar may hold a stale fold from whichever writer finished
-    // last — it must HEAL (pruned read ≡ directory), never mis-answer
-    val healed = StoreMeta.load(spark, path).get
-    assert(healed.files.map(_.file).toSet ==
-      StoreMeta.listDataFiles(spark, path).get.toSet)
+    // whichever writer committed last, the log's stats describe exactly
+    // the directory
+    assert(StoreTestKit.statsDrift(spark, path).isEmpty)
     h.unpersist()
   }
 
@@ -244,7 +246,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
     val v0 = StoreLog.currentVersion(spark, path)
     val preRows = spark.read.parquet(path).count()
     val snapRows = StoreLog.snapshot(spark, path, v0).count()
-    val victim = StoreMeta.load(spark, path).get.files.head.file
+    val victim = StoreTestKit.liveStats(spark, path).head.file
     // a concurrent APPENDER X sits in its publish→claim window: batch
     // files in the root, uncommitted — the state the old global-repair
     // rollback would have swept away as orphans
@@ -262,13 +264,15 @@ class StoreConcurrencySpec extends AnyFunSuite {
         s"$path/${StoreLog.historyDirName}/${"v%09d".format(v0 + 1)}/$victim"),
       java.nio.file.Paths.get(s"$path/their-rewrite.parquet"))
     assert(StoreLog.tryCommit(spark, path, v0 + 1, "merge",
-      Seq("their-rewrite.parquet"), Seq(victim)))
+      StoreMeta.scanStats(spark, path, Seq("their-rewrite.parquet")),
+      Seq(victim)))
     val loserAdd = "part-55555-loser.c000.snappy.parquet"
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$path/$loserAdd"), Array.emptyByteArray)
     intercept[StoreLog.ConcurrentCommitException] {
       StoreLog.commitReplacing(spark, path, "delete",
-        adds = Seq(loserAdd), removes = Seq(victim), archivedAt = v0 + 1)
+        adds = Seq(StoreTestKit.stub(loserAdd)), removes = Seq(victim),
+        archivedAt = v0 + 1)
     }
     val after = StoreMeta.listDataFiles(spark, path).get.toSet
     // the appender's in-flight files were NOT touched by the rollback...
@@ -276,7 +280,8 @@ class StoreConcurrencySpec extends AnyFunSuite {
     assert(!after.contains(loserAdd), "loser's own adds dropped")
     // ...so X's commit still lands on real files
     assert(StoreLog.tryCommit(spark, path,
-      StoreLog.currentVersion(spark, path) + 1, "append", xFiles, Nil))
+      StoreLog.currentVersion(spark, path) + 1, "append",
+      StoreMeta.scanStats(spark, path, xFiles), Nil))
     assert(spark.read.parquet(path).count() == preRows + 40)
     // the victim's archived copy moved to the WINNER's history home:
     // the pre-abort snapshot is still fully readable
@@ -290,7 +295,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
     ConsolidatedStore.append(spark, path, bh.filter(col("database_name") < "db2"))
     ConsolidatedStore.append(spark, path, bh.filter(col("database_name") >= "db2"))
     val v0 = StoreLog.currentVersion(spark, path)
-    val files = StoreMeta.load(spark, path).get.files.map(_.file).sorted
+    val files = StoreTestKit.liveStats(spark, path).map(_.file).sorted
     assert(files.size >= 2)
     StoreLog.archive(spark, path, v0 + 1,
       Seq((new org.apache.hadoop.fs.Path(s"$path/${files(0)}"), files(0))))
@@ -315,11 +320,12 @@ class StoreConcurrencySpec extends AnyFunSuite {
     val nProbe = probe.count()
     val aFiles = graft.store.Staging.publish(spark, path,
       ConsolidatedStore.withLogIdsFrom(0L, probe, nProbe))
-    // A's claim lands 300 ms later, from another thread
+    // A's claim (carrying its files' stats) lands 300 ms later, from
+    // another thread
+    val aStats = StoreMeta.scanStats(spark, path, aFiles)
     val claimer = Future {
       Thread.sleep(300L)
-      assert(StoreLog.tryCommit(spark, path, 1, "append", aFiles, Nil))
-      StoreMeta.saveDelta(spark, path, StoreMeta.scanStats(spark, path, aFiles))
+      assert(StoreLog.tryCommit(spark, path, 1, "append", aStats, Nil))
     }
     // writer B sees files at v0 == 0 — it must WAIT for the claim and
     // then dedup against A's commit, not spuriously abort
@@ -378,7 +384,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
     ConsolidatedStore.append(spark, path, h.filter(col("database_name") >= "db2"))
     val v0 = StoreLog.currentVersion(spark, path)
     // the file the merge will rewrite (holds db1's keys)
-    val touched = StoreMeta.load(spark, path).get.files
+    val touched = StoreTestKit.liveStats(spark, path)
       .filter(f => StoreMeta.overlaps(f, ConsolidatedStore.batchEnvelopes(
         h.filter(col("database_name") === "db1")
           .dropDuplicates(ConsolidatedStore.dedupKey)).head)).map(_.file)
@@ -399,7 +405,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
             s"${"v%09d".format(v0 + 1)}/${touched.head}"),
           java.nio.file.Paths.get(s"$path/racer.parquet"))
         assert(StoreLog.tryCommit(spark, path, v0 + 1, "merge",
-          Seq("racer.parquet"), touched))
+          StoreMeta.scanStats(spark, path, Seq("racer.parquet")), touched))
       }
     }
     // converged on the racer's state: touched file gone, merge appended
@@ -425,7 +431,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
     ConsolidatedStore.append(spark, path, h.filter(col("database_name") < "db2"))
     ConsolidatedStore.append(spark, path, h.filter(col("database_name") >= "db2"))
     val v0 = StoreLog.currentVersion(spark, path)
-    val maxId = StoreMeta.load(spark, path).get.maxLogId
+    val maxId = StoreLog.headState(spark, path).maxLogId
 
     // the racer: a realistic disjoint-key append — fresh keys (db3's
     // rows shifted into an unoccupied LSN universe), fresh LogIDs past
@@ -461,7 +467,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
         java.nio.file.Files.move(part.toPath,
           java.nio.file.Paths.get(s"$path/racer.parquet"))
         assert(StoreLog.tryCommit(spark, path, v0 + 1, "append",
-          Seq("racer.parquet"), Nil))
+          StoreMeta.scanStats(spark, path, Seq("racer.parquet")), Nil))
       }
     }
     // the merge RECOMPUTED against the racer's state and landed — no
@@ -491,7 +497,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
     ConsolidatedStore.append(spark, path, h.filter(col("database_name") < "db2"))
     ConsolidatedStore.append(spark, path, h.filter(col("database_name") >= "db2"))
     val v0 = StoreLog.currentVersion(spark, path)
-    val maxId = StoreMeta.load(spark, path).get.maxLogId
+    val maxId = StoreLog.headState(spark, path).maxLogId
 
     // the racer: a committed disjoint-key append that lands DURING the
     // merge's compute — i.e. BEFORE the merge captures its claim
@@ -528,7 +534,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
           java.nio.file.Files.move(part.toPath,
             java.nio.file.Paths.get(s"$path/racer_mid.parquet"))
           assert(StoreLog.tryCommit(spark, path, v0 + 1, "append",
-            Seq("racer_mid.parquet"), Nil))
+            StoreMeta.scanStats(spark, path, Seq("racer_mid.parquet")), Nil))
         }
       }) { () => attempts += 1 }
     assert(m.updated == nUpd && m.inserted == nIns, m.toString)
@@ -572,8 +578,8 @@ class StoreConcurrencySpec extends AnyFunSuite {
       .getFileSystem(spark.sessionState.newHadoopConf())
 
     // a retention purge of EVERYTHING fires in the appender's
-    // publish→claim window — its sidecar load heals the appender's
-    // published files in, but its delete set must stay the COMMITTED
+    // publish→claim window — the directory lists the appender's
+    // published files, but its delete set must stay the COMMITTED
     // live set: absorbing an unclaimed batch would archive rows whose
     // commit is about to land
     var sawWindow = false
@@ -582,7 +588,7 @@ class StoreConcurrencySpec extends AnyFunSuite {
       (attempt, _) =>
       if (attempt == 1) {
         sawWindow = true
-        val live = StoreLog.committedLiveSet(spark, path).get
+        val live = StoreTestKit.liveStats(spark, path).map(_.file).toSet
         val published = StoreMeta.listDataFiles(spark, path)
           .getOrElse(Nil).toSet -- live
         assert(published.nonEmpty, "seam must be inside the window")
@@ -605,92 +611,6 @@ class StoreConcurrencySpec extends AnyFunSuite {
     assert(stored.count() == nBatch, "base purged, batch intact")
     assert(stored.except(batch).isEmpty && batch.except(stored).isEmpty)
     batch.unpersist(); h.unpersist()
-  }
-
-  test("sidecar fold whose captured read loses a segment mid-read " +
-      "deletes nothing a racer did not capture") {
-    val path = tmp()
-    val h = bh.cache()
-    val ordered = h.orderBy("backup_finish_date", "database_name",
-      "last_lsn", "physical_device_name")
-    ConsolidatedStore.append(spark, path, ordered.limit(30))
-    ConsolidatedStore.append(spark, path,
-      ordered.limit(60).except(ordered.limit(30)))
-    ConsolidatedStore.append(spark, path,
-      ordered.limit(90).except(ordered.limit(60)))
-    val metaDir = s"$path/${StoreMeta.dirName}"
-    val fs = new org.apache.hadoop.fs.Path(metaDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def segs(): Set[String] = fs.listStatus(
-      new org.apache.hadoop.fs.Path(metaDir)).toSeq.collect {
-      case e if e.isFile && e.getPath.getName.endsWith(".json") &&
-        !e.getPath.getName.startsWith("_") &&
-        !e.getPath.getName.startsWith(".") => e.getPath.getName
-    }.toSet
-    assert(segs().size >= 3, "need several delta segments")
-    val liveStats = StoreMeta.load(spark, path).get.files
-    def filesIn(seg: String): Set[String] = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$metaDir/$seg")), "UTF-8")
-      "\"file\":\"([^\"]+)\"".r.findAllMatchIn(txt).map(_.group(1)).toSet
-    }
-
-    // a racing fold (simulated by the seam) consumes one captured
-    // segment mid-read. Per-segment disposition: the vanished segment is
-    // the racer's to carry; every segment THIS fold read successfully is
-    // folded into its output and deleted — so a delta the racer never
-    // captured is folded, never discarded
-    var captured: Seq[String] = Nil
-    var tailFiles: Set[String] = Set.empty
-    StoreMeta.saveHooked(spark, path, liveStats.take(1)) { c =>
-      captured = c
-      assert(c.size >= 3)
-      tailFiles = c.tail.map(filesIn).reduce(_ ++ _)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$metaDir/${c.head}"), false)
-    }
-    val after = segs()
-    assert(after.size == 1, s"fold must collapse to one segment: $after")
-    val folded = filesIn(after.head)
-    tailFiles.foreach { df =>
-      assert(folded.contains(df),
-        s"stats for $df (from a segment the racer never captured) were " +
-          "discarded by the fold")
-    }
-    // and the sidecar still reconciles: every data file described
-    val loaded = StoreMeta.load(spark, path).get
-    val onDisk = StoreMeta.listDataFiles(spark, path).get.toSet
-    assert(loaded.files.map(_.file).toSet == onDisk)
-    h.unpersist()
-  }
-
-  test("a torn sidecar segment is dropped by the next fold instead of " +
-      "forcing heal rescans forever") {
-    val path = tmp()
-    val h = bh.cache()
-    val ordered = h.orderBy("backup_finish_date", "database_name",
-      "last_lsn", "physical_device_name")
-    ConsolidatedStore.append(spark, path, ordered.limit(30))
-    ConsolidatedStore.append(spark, path,
-      ordered.limit(60).except(ordered.limit(30)))
-    val metaDir = s"$path/${StoreMeta.dirName}"
-    val fs = new org.apache.hadoop.fs.Path(metaDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // a crashed writer's torn segment: unparseable JSON
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$metaDir/delta-torn.json"),
-      "{\"file\":\"trunc".getBytes("UTF-8"))
-    // the fold drops the corpse (its entries heal from the immutable
-    // data files) and keeps everything readable
-    StoreMeta.save(spark, path, StoreMeta.load(spark, path).get.files)
-    val remaining = fs.listStatus(
-      new org.apache.hadoop.fs.Path(metaDir)).toSeq.map(_.getPath.getName)
-    assert(!remaining.contains("delta-torn.json"),
-      "torn segment must not survive a fold")
-    val loaded = StoreMeta.load(spark, path).get
-    assert(!loaded.dirty, "post-fold load must be clean")
-    assert(loaded.files.map(_.file).toSet ==
-      StoreMeta.listDataFiles(spark, path).get.toSet)
-    h.unpersist()
   }
 
   test("speculative/retried task inside ONE append attempt cannot " +

@@ -117,7 +117,7 @@ class StoreLogSpec extends AnyFunSuite {
     val n = graft.store.StoreLog.CheckpointEvery + 5
     (1 to n).foreach { v =>
       assert(StoreLog.tryCommit(spark, dir, v, "append",
-        adds = Seq(s"f$v.parquet"),
+        adds = Seq(StoreTestKit.stub(s"f$v.parquet")),
         removes = if (v % 10 == 0) Seq(s"f${v - 1}.parquet") else Nil,
         txn = if (v % 7 == 0) Some(s"job:$v") else None))
     }
@@ -127,7 +127,8 @@ class StoreLogSpec extends AnyFunSuite {
     assert(ckpt.nonEmpty, "a checkpoint must exist at the threshold")
     val expectLive = (1 to n).map(v => s"f$v.parquet").toSet --
       (1 to n).filter(_ % 10 == 0).map(v => s"f${v - 1}.parquet")
-    assert(StoreLog.committedLiveSet(spark, dir).get == expectLive)
+    def headLive = StoreLog.headState(spark, dir).live.map(_.file).toSet
+    assert(headLive == expectLive)
     assert(StoreLog.txnSeen(spark, dir, "job:7"))
 
     // move every pre-checkpoint commit away: the hot-path readers must
@@ -138,7 +139,7 @@ class StoreLogSpec extends AnyFunSuite {
       java.nio.file.Files.move(
         java.nio.file.Paths.get(s"$logDir/$f"), parked.resolve(f))
     }
-    assert(StoreLog.committedLiveSet(spark, dir).get == expectLive,
+    assert(headLive == expectLive,
       "live set must reconstruct from checkpoint + tail alone")
     assert(StoreLog.txnSeen(spark, dir, "job:7"),
       "txn tokens must be carried by the checkpoint")
@@ -154,7 +155,7 @@ class StoreLogSpec extends AnyFunSuite {
     // that made home resolution O(#commits)
     (1 to n).foreach { v =>
       assert(StoreLog.tryCommit(spark, dir, v, "append",
-        adds = Seq(s"f$v.parquet"),
+        adds = Seq(StoreTestKit.stub(s"f$v.parquet")),
         removes = if (v % 10 == 0) Seq(s"f${v / 10}.parquet") else Nil))
     }
     // reference resolution by full replay of the known commit pattern
@@ -196,20 +197,22 @@ class StoreLogSpec extends AnyFunSuite {
     val n = 200
     (1 to n).foreach { v =>
       assert(StoreLog.tryCommit(spark, dir, v, "append",
-        adds = Seq(s"f$v.parquet"),
+        adds = Seq(StoreTestKit.stub(s"f$v.parquet")),
         removes = if (v % 10 == 0) Seq(s"f${v / 10}.parquet") else Nil))
     }
     // simulate a store whose checkpoints predate the homes index:
-    // strip the field from every checkpoint file
+    // strip the field from every checkpoint's header line
     import org.json4s.jackson.JsonMethods
     val logDir = java.nio.file.Paths.get(s"$dir/${StoreLog.dirName}")
     java.nio.file.Files.list(logDir).iterator().asScala
       .filter(_.getFileName.toString.startsWith("ckpt-v")).foreach { p =>
-        val jv = JsonMethods.parse(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-        val stripped = jv.removeField { case (name, _) => name == "homes" }
+        val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .split('\n')
+        val stripped = JsonMethods.parse(lines.head)
+          .removeField { case (name, _) => name == "homes" }
         java.nio.file.Files.write(p,
-          JsonMethods.compact(JsonMethods.render(stripped)).getBytes("UTF-8"))
+          (JsonMethods.compact(JsonMethods.render(stripped)) +: lines.tail)
+            .mkString("\n").getBytes("UTF-8"))
       }
     def expectAt(version: Int): Set[(String, String)] = {
       val live = (1 to version).map(v => s"f$v.parquet").toSet --
@@ -245,7 +248,7 @@ class StoreLogSpec extends AnyFunSuite {
     val dir = freshDir("graft-log-prune")
     (1 to 70).foreach { v =>
       assert(StoreLog.tryCommit(spark, dir, v, "append",
-        adds = Seq(s"f$v.parquet"),
+        adds = Seq(StoreTestKit.stub(s"f$v.parquet")),
         removes = if (v % 10 == 0) Seq(s"f${v / 10}.parquet") else Nil))
     }
     // archive dirs for every remove commit (10..70), then vacuum two
@@ -265,6 +268,7 @@ class StoreLogSpec extends AnyFunSuite {
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(
         s"$dir/${StoreLog.dirName}/ckpt-v${"%09d".format(70)}.json")), "UTF-8")
+      .split('\n').head
     val homes = (JsonMethods.parse(txt) \ "homes")
       .extract[Map[String, Seq[Int]]]
     assert(homes.keySet == Set("f3", "f4", "f5", "f6", "f7")
@@ -292,12 +296,13 @@ class StoreLogSpec extends AnyFunSuite {
     // listing changes (it never retreats)
     (71 to 71 + StoreLog.CheckpointEvery).foreach { v =>
       assert(StoreLog.tryCommit(spark, dir, v, "append",
-        adds = Seq(s"f$v.parquet"), removes = Nil))
+        adds = Seq(StoreTestKit.stub(s"f$v.parquet")), removes = Nil))
     }
     val later = StoreLog.checkpointNow(spark, dir)
     val txt2 = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(
         s"$dir/${StoreLog.dirName}/ckpt-v${"%09d".format(later)}.json")), "UTF-8")
+      .split('\n').head
     assert((JsonMethods.parse(txt2) \ "vacuumHorizon").extract[Int] == 20,
       "horizon must carry forward across checkpoint rewrites")
   }
@@ -346,6 +351,75 @@ class StoreLogSpec extends AnyFunSuite {
     val cs3 = StoreLog.readCommits(spark, d3)
     assert(cs3.head.op == "baseline" && cs3.last.op == "merge")
     assert(StoreLog.snapshot(spark, d3, 1).count() === pre3)
+  }
+
+  test("a commit written before the log carried stats: appends dedup " +
+      "against its rows and number LogIDs past them; checkpointNow " +
+      "records its stats") {
+    import graft.store.StoreMeta
+    val dir = freshDir("graft-log-statless")
+    val rows = bh.filter(col("database_name") === "db1")
+      .dropDuplicates(ConsolidatedStore.dedupKey)
+    val nOld = rows.count()
+    // one data file plus a hand-written commit in the pre-stats format
+    val stage = java.nio.file.Files.createTempDirectory("graft-statless").toString
+    ConsolidatedStore.withLogIdsFrom(0L, rows, nOld).coalesce(1)
+      .write.mode("overwrite").parquet(stage)
+    val part = new java.io.File(stage).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$dir/${StoreLog.dirName}"))
+    java.nio.file.Files.move(part.toPath,
+      java.nio.file.Paths.get(s"$dir/old.parquet"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$dir/${StoreLog.dirName}/v000000001.json"),
+      """{"version":1,"op":"append","adds":["old.parquet"],"removes":[],"txn":null}"""
+        .getBytes("UTF-8"))
+    assert(StoreLog.readCommits(spark, dir).head.stats.isEmpty)
+    // the head state scans the stat-less file
+    assert(StoreLog.headState(spark, dir).maxLogId == nOld)
+
+    // an append overlapping every old row plus db2's fresh ones
+    val batch = bh.filter(col("database_name").isin("db1", "db2"))
+    val nFresh = bh.filter(col("database_name") === "db2")
+      .dropDuplicates(ConsolidatedStore.dedupKey).count()
+    assert(ConsolidatedStore.append(spark, dir, batch) == nFresh,
+      "the append must dedup against the stat-less commit's rows")
+    val stored = ConsolidatedStore.read(spark, dir)
+    assert(stored.count() == nOld + nFresh)
+    assert(stored.select("LogID").distinct().count() == nOld + nFresh)
+    assert(stored.agg(min("LogID"), max("LogID")).head() ==
+      org.apache.spark.sql.Row(1L, nOld + nFresh),
+      "new LogIDs must continue past the stat-less file's")
+
+    // the upgrade: the checkpoint records the scanned stats
+    val v = StoreLog.checkpointNow(spark, dir)
+    val ckpt = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(
+        s"$dir/${StoreLog.dirName}/ckpt-v${"%09d".format(v)}.json")), "UTF-8")
+      .split('\n').toSeq
+    val recorded = ckpt.tail.map(StoreMeta.parseStats)
+    assert(recorded.find(_.file == "old.parquet") ==
+      StoreMeta.scanStats(spark, dir, Seq("old.parquet")).headOption,
+      s"checkpoint must record the scanned stats: $ckpt")
+    assert(StoreTestKit.statsDrift(spark, dir).isEmpty)
+  }
+
+  test("a torn commit is unreadable, never a shorter live set") {
+    val dir = freshDir("graft-log-torn")
+    ConsolidatedStore.append(spark, dir, bh.limit(30))
+    val f = java.nio.file.Paths.get(
+      s"$dir/${StoreLog.dirName}/v000000001.json")
+    val full = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    assert(full.split('\n').length == 2, s"header + one stats row: $full")
+    // cut at the line boundary (header intact, stats row lost) and
+    // mid-row: both read as a claim still being filled, then fail
+    Seq(full.split('\n').head, full.dropRight(5)).foreach { torn =>
+      java.nio.file.Files.write(f, torn.getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](
+        StoreLog.readCommits(spark, dir))
+      assert(e.getMessage.contains("unreadable"), e.getMessage)
+    }
   }
 
   test("IVM with a count metric drops fully-deleted groups (= direct)") {

@@ -1,31 +1,16 @@
 package graft
 
 import java.math.{BigDecimal => JBigDecimal}
-import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{ConsolidatedStore, FileStats, StoreMeta}
+import graft.store.{FileStats, StoreMeta}
 
-/** Sidecar segment codec (streaming JSON render/parse) and the
-  * immutability-keyed segment cache behind [[StoreMeta.load]].
-  *
-  * The cache is sound ONLY because published segments are immutable
-  * (UUID-named, rename-published, delete-only folds), so these tests
-  * drive the real publish/fold/heal protocol around it: a cached load
-  * must never disagree with a cold load, and reconciliation against the
-  * directory listing must stay live even when every segment is a cache
-  * hit.
+/** The one-line zone-map stats codec (streaming JSON render/parse) —
+  * the rows each commit carries per added file and each log checkpoint
+  * per live file.
   */
 class StoreMetaCodecSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-
-  private def tmp(): String =
-    Files.createTempDirectory("graft-metacodec").toString + "/t"
-
-  private def bh = graft.etl.BackupHistoryDerivation
-    .canonicalFrame(spark, TestSpark.sf).drop("LogID")
 
   private val exotic = FileStats(
     file = "database_name=wéird \"db\"/part-00\\x.parquet",
@@ -57,7 +42,7 @@ class StoreMetaCodecSpec extends AnyFunSuite {
         "/dev/a", "/dev/b", 0L))
     cases.foreach { f =>
       val line = StoreMeta.renderStats(f)
-      assert(!line.contains("\n"), s"segment row must be one line: $line")
+      assert(!line.contains("\n"), s"stats row must be one line: $line")
       val back = StoreMeta.parseStats(line)
       assert(back == f, s"round-trip mismatch:\n  in : $f\n  out: $back")
     }
@@ -74,7 +59,7 @@ class StoreMetaCodecSpec extends AnyFunSuite {
       """{"file":"y.parquet","logid_max":1,"future_obj":{"a":[1,2]},""" +
         """"dev_null_count":2}""")
     assert(fwd.file == "y.parquet" && fwd.devNullCount == 2L)
-    // torn rows throw (caller's corrupt-segment disposition)
+    // torn rows throw (a torn commit or checkpoint reads as unreadable)
     intercept[Exception](StoreMeta.parseStats("""{"file":"trunc"""))
     intercept[Exception](StoreMeta.parseStats("""{"logid_max":3}"""))
     intercept[Exception](StoreMeta.parseStats("""{"file":"z.parquet"}"""))
@@ -92,90 +77,5 @@ class StoreMetaCodecSpec extends AnyFunSuite {
       """{"file":"d.parquet","logid_max":1,"dev_hashes":{"bad":true},""" +
         """"dev_null_count":5}""")
     assert(mh.devHashes == null && mh.devNullCount == 5L)
-  }
-
-  test("cached loads agree with cold loads across append, fold, and " +
-      "external file removal") {
-    val path = tmp()
-    val h = bh.cache()
-    val ordered = h.orderBy("backup_finish_date", "database_name",
-      "last_lsn", "physical_device_name")
-    ConsolidatedStore.append(spark, path, ordered.limit(40))
-    ConsolidatedStore.append(spark, path,
-      ordered.limit(80).except(ordered.limit(40)))
-
-    def statsByFile(l: StoreMeta.Loaded): Map[String, FileStats] =
-      l.files.map(f => f.file -> f).toMap
-
-    StoreMeta.segCacheClear()
-    val cold = StoreMeta.load(spark, path).get
-    assert(StoreMeta.segCacheSize > 0, "load must populate the cache")
-    val warm = StoreMeta.load(spark, path).get
-    assert(statsByFile(warm) == statsByFile(cold) && !warm.dirty)
-
-    // a new delta segment (cache miss) lands next to the cached ones
-    ConsolidatedStore.append(spark, path,
-      ordered.limit(120).except(ordered.limit(80)))
-    val afterDelta = StoreMeta.load(spark, path).get
-    assert(afterDelta.files.map(_.file).toSet ==
-      StoreMeta.listDataFiles(spark, path).get.toSet)
-    assert(!afterDelta.dirty, "cached segments + fresh delta reconcile clean")
-
-    // fold collapses the segments; post-fold load equals pre-fold state
-    StoreMeta.save(spark, path, afterDelta.files)
-    val folded = StoreMeta.load(spark, path).get
-    assert(statsByFile(folded) == statsByFile(afterDelta))
-    assert(folded.segments == 1)
-
-    // reconciliation stays live on a fully-cached sidecar: delete a data
-    // file out from under it → the cached stats row is dropped, dirty set
-    val victim = folded.files.head.file
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$path/$victim"), false))
-    val healed = StoreMeta.load(spark, path).get
-    assert(!healed.files.map(_.file).contains(victim),
-      "vanished data file must drop from a cache-hit load")
-    assert(healed.dirty, "drift through cached segments must mark dirty")
-    h.unpersist()
-  }
-
-  test("cache stays row-bounded but always admits oversized segments, " +
-      "and a small delta never evicts the oversized resident") {
-    val saved = StoreMeta.SegCacheMaxRows
-    try {
-      StoreMeta.SegCacheMaxRows = 2L
-      StoreMeta.segCacheClear()
-      val path = tmp()
-      val h = bh.cache()
-      val ordered = h.orderBy("backup_finish_date", "database_name",
-        "last_lsn", "physical_device_name")
-      // several delta segments; the folded segment alone exceeds the cap
-      (1 to 4).foreach { i =>
-        ConsolidatedStore.append(spark, path,
-          ordered.limit(30 * i).except(ordered.limit(30 * (i - 1))))
-      }
-      val all = StoreMeta.load(spark, path).get
-      StoreMeta.save(spark, path, all.files) // one segment, > cap rows
-      StoreMeta.segCacheClear()
-      val cold = StoreMeta.load(spark, path).get
-      assert(cold.files.size > 2, "fixture must exceed the shrunken cap")
-      assert(StoreMeta.segCacheSize == 1,
-        "an over-budget folded segment must still be admitted")
-      val warm = StoreMeta.load(spark, path).get
-      assert(warm.files.map(_.file).toSet == cold.files.map(_.file).toSet)
-      // a fresh small delta lands NEXT TO the oversized resident — the
-      // single-tier row budget used to evict the big segment here and
-      // thrash every later load back to a cold parse
-      ConsolidatedStore.append(spark, path,
-        ordered.limit(125).except(ordered.limit(120)))
-      StoreMeta.load(spark, path).get
-      assert(StoreMeta.segCacheSize == 2,
-        s"oversized resident + delta must coexist (${StoreMeta.segCacheSize})")
-      h.unpersist()
-    } finally {
-      StoreMeta.SegCacheMaxRows = saved
-      StoreMeta.segCacheClear()
-    }
   }
 }

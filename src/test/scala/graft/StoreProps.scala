@@ -6,14 +6,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
-import graft.store.{ConsolidatedStore, StoreMeta}
+import graft.store.ConsolidatedStore
 
-/** The sidecar's one non-negotiable invariant: zone-map pruning must
+/** The zone maps' one non-negotiable invariant: pruning must
   * NEVER drop a true duplicate. For any sequence of (overlapping,
   * null-carrying) batches, both entries of the claim loop (`append`,
   * `appendConcurrent`) and the full-scan append must leave identical
-  * stores — rows, null-safe keys and LogIDs: the sidecar and the commit
-  * log are caches and arbiters, not a semantics change.
+  * stores — rows, null-safe keys and LogIDs: the commit log and its
+  * stats are an arbiter and an index, not a semantics change.
   */
 class StoreProps extends Properties("store") {
 
@@ -80,7 +80,7 @@ class StoreProps extends Properties("store") {
       val sane = // every store really deduped: unique null-safe keys
         Seq(plain, conc, full).map(keys).forall(k => k.distinct.size == k.size)
       val consistent = Seq(plain, conc)
-        .forall(s => !StoreMeta.load(spark, s).get.dirty)
+        .forall(s => StoreTestKit.statsDrift(spark, s).isEmpty)
       Prop(p == f && c == f && sane && consistent) :|
         s"append=${p.size} appendConcurrent=${c.size} full=${f.size}"
     }

@@ -10,7 +10,7 @@ import graft.restore.{RestoreQueries, RestoreStore}
 import graft.store.{ConsolidatedStore, StoreDelete, StoreMeta}
 
 /** Read-side zone-map file skipping ([[ConsolidatedStore.readWhere]]) and
-  * the sidecar-driven retention fast path: the same per-file envelopes
+  * the stats-driven retention fast path: the same per-file envelopes
   * that prune APPENDS (EtlSpec's gates) must prune READS — a restore
   * lookup for one database on a many-file store opens only the files
   * whose (database_name, last_lsn, backup_start_date) envelope
@@ -26,9 +26,9 @@ class StoreReadSpec extends AnyFunSuite {
   private def bh = graft.etl.BackupHistoryDerivation
     .canonicalFrame(spark, TestSpark.sf).drop("LogID")
 
-  /** Files readWhere would open, via the same sidecar predicate. */
+  /** Files readWhere would open, via the same zone-map predicate. */
   private def prunedFiles(path: String, b: StoreMeta.ReadBounds): Seq[String] =
-    StoreMeta.load(spark, path).get.files
+    StoreTestKit.liveStats(spark, path)
       .filter(f => StoreMeta.mayContain(f, b)).map(_.file)
 
   test("readWhere(db) opens only the database's files and matches the full scan") {
@@ -39,8 +39,8 @@ class StoreReadSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).sorted
     dbs.foreach(d => ConsolidatedStore.append(
       spark, path, h.filter(col("database_name") === d)))
-    val loaded = StoreMeta.load(spark, path).get
-    assert(loaded.files.size == dbs.length && !loaded.dirty)
+    assert(StoreTestKit.liveStats(spark, path).size == dbs.length &&
+      StoreTestKit.statsDrift(spark, path).isEmpty)
 
     val b = StoreMeta.ReadBounds(databases = Some(Set(dbs.head)))
     assert(prunedFiles(path, b).size == 1,
@@ -67,9 +67,9 @@ class StoreReadSpec extends AnyFunSuite {
     val h = bh.cache()
     ConsolidatedStore.append(spark, path, h,
       partitionBy = Seq("database_name"))
-    val loaded = StoreMeta.load(spark, path).get
-    assert(loaded.files.forall(_.file.contains("database_name=")),
-      s"fixture: hive layout expected, got ${loaded.files.map(_.file).take(3)}")
+    val live = StoreTestKit.liveStats(spark, path)
+    assert(live.forall(_.file.contains("database_name=")),
+      s"fixture: hive layout expected, got ${live.map(_.file).take(3)}")
     val dbs = h.select("database_name").distinct()
       .collect().map(_.getString(0)).sorted
     val b = StoreMeta.ReadBounds(databases = Some(Set(dbs.head)))
@@ -93,7 +93,7 @@ class StoreReadSpec extends AnyFunSuite {
       h.filter(col("last_lsn") >= lit(lo) && col("last_lsn") < lit(hi)),
       h.filter(col("last_lsn") >= lit(hi))
     ).foreach(t => ConsolidatedStore.append(spark, path, t))
-    assert(StoreMeta.load(spark, path).get.files.size == 3)
+    assert(StoreTestKit.liveStats(spark, path).size == 3)
 
     // "everything past the top tertile's start" — the remaining-logs
     // chain shape: the bottom tertile's file must not be opened
@@ -189,13 +189,13 @@ class StoreReadSpec extends AnyFunSuite {
         col("backup_start_date") < lit(t1)),
       h.filter(col("backup_start_date") >= lit(t1))
     ).foreach(s => ConsolidatedStore.append(spark, path, s))
-    val before = StoreMeta.load(spark, path).get.files
+    val before = StoreTestKit.liveStats(spark, path)
       .sortBy(_.startMinUs.longValue)
     assert(before.size == 3, "fixture: three date-split files")
     val Seq(oldFile, midFile, newFile) = before.map(_.file)
 
     // survivors' bytes must never be read: poison the newest file on
-    // disk so only the sidecar describes it — a purge that opened it
+    // disk so only the log's stats describe it — a purge that opened it
     // (cutoff scan OR delete scan) would throw; the stats-driven purge
     // never does
     val newPath = java.nio.file.Paths.get(s"$path/$newFile")
@@ -203,7 +203,7 @@ class StoreReadSpec extends AnyFunSuite {
     Files.write(newPath, "not parquet".getBytes)
 
     // threshold = t1 exactly: old and mid sit entirely below it, so the
-    // cutoff (= mid's newest start) folds from sidecar maxima ALONE — no
+    // cutoff (= mid's newest start) folds from logged maxima ALONE — no
     // boundary scan; the delete then classifies old = all-expired (drop
     // whole, footer count only), mid = straddles the cutoff row (one
     // counting scan + rewrite), new = all-survive (untouched)
@@ -212,7 +212,7 @@ class StoreReadSpec extends AnyFunSuite {
 
     assert(stats.filesDropped == 1L && stats.filesRewritten == 1L,
       s"old drops whole, mid rewrites, new untouched: $stats")
-    val after = StoreMeta.load(spark, path).get.files.map(_.file)
+    val after = StoreTestKit.liveStats(spark, path).map(_.file)
     assert(!after.contains(oldFile), "aged file must be gone")
     assert(!after.contains(midFile), "boundary file must be rewritten")
     assert(after.contains(newFile), "survivor file must be untouched")
